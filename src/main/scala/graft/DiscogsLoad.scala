@@ -3,6 +3,9 @@ package graft
 import graft.sources.{DiscogsXml, Sinks}
 import org.apache.spark.sql.SparkSession
 
+import java.util.concurrent.{ExecutionException, Executors}
+import scala.util.{Failure, Try}
+
 /** CLI driver — the Spark rebuild of the reference's `discogs-load`
   * binary (O19/O20, `main.rs:17-27` + `db.rs:13-33`).
   *
@@ -14,12 +17,24 @@ import org.apache.spark.sql.SparkSession
   * Each FILE is a discogs dump (`.xml` or `.xml.gz`); entity type is
   * auto-detected from the root element (O2). Tables always land as
   * clustered parquet under --out (engine-native sink); with --db-url
-  * they are additionally loaded over JDBC with --batch-size-row
-  * batches, and --create-indexes runs the deferred index DDL (O17).
-  * --restage DIR first re-stages every gz dump to splittable parquet
-  * under DIR (one single-stream parse each, paid once), then loads
-  * the tables from the staged copies — the layout every later pass
-  * over a big dump should read.
+  * each is then loaded over JDBC from its landed parquet with
+  * --batch-size-row batches, and --create-indexes runs the deferred
+  * index DDL (O17) once every table is in.
+  *
+  * The unit of work is a dump group: the files of one entity. Groups
+  * load side by side, one thread each (at most four, one per entity):
+  * a gz dump parses as a single task, so four dumps keep four cores
+  * busy. Inside a group the dump is parsed and first-wins-deduped once
+  * and its tables land one after another — a fan-out dump (releases,
+  * masters) persists its deduped raw rows for its 2-3 tables and drops
+  * them when the group ends (the reference writes all maps of a dump
+  * from one pass, `db.rs:55-97`); a single-table dump streams straight
+  * into the writer.
+  *
+  * --restage DIR re-stages each group's gz dumps to splittable parquet
+  * under DIR first (one single-stream parse each, paid once), then
+  * loads the group from the staged copies — the layout every later
+  * pass over a big dump should read.
   *
   * --copy-mode picks the postgres COPY wire format (the reference's
   * sink is `COPY ... FROM STDIN BINARY`, `db.rs:230-244`): `binary`
@@ -65,36 +80,58 @@ object DiscogsLoad {
   }
 
   /** The whole CLI pipeline on a caller-owned session — `main` minus
-    * process/session lifecycle, so e2e tests drive the identical path
-    * (parse → stage → parquet sink → JDBC sink → index DDL). */
+    * process/session lifecycle, so e2e tests drive the identical path.
+    * Row counts printed per table come from the writes themselves. A
+    * failed group fails the run only after every group has finished,
+    * and leaves nothing persisted in the session. */
   def run(opts: Opts, spark: SparkSession): Unit = {
     require(opts.files.nonEmpty, "at least one dump FILE required")
-    locally {
-      val tables = opts.restageDir match {
+    val jdbc = opts.dbUrl.map(url => Sinks.JdbcConfig(url, opts.dbUser,
+      opts.dbPassword, opts.batchSize, opts.copyMode))
+
+    def open(entity: String, files: Seq[String]): DiscogsXml.DumpGroup =
+      opts.restageDir match {
         case Some(rd) =>
-          // one single-stream gz parse per file, paid once; every
-          // load/query after this reads splittable parquet
-          val staged = opts.files.zipWithIndex.map { case (f, i) =>
-            DiscogsXml.restage(spark, f, s"$rd/d$i", opts.partitions.getOrElse(0))
-          }
-          DiscogsXml.loadAllStaged(spark, staged)
-        case None => DiscogsXml.loadAll(spark, opts.files)
+          DiscogsXml.readStagedGroup(spark, entity, files.map { f =>
+            DiscogsXml.restage(spark, f, s"$rd/d${opts.files.indexOf(f)}",
+              opts.partitions.getOrElse(0))
+          })
+        case None => DiscogsXml.readGroup(spark, entity, files)
       }
-      // fan-out tables reuse one cached parse of the releases/masters
-      // dump (reference writes all 3 maps per flush from one pass,
-      // `db.rs:55-97`) — caching here avoids re-parsing the XML per sink
-      tables.values.foreach(_.persist())
-      tables.foreach { case (name, df) =>
-        Sinks.writeParquet(df, name, opts.out, opts.partitions)
-        val n = spark.read.parquet(s"${opts.out}/$name").count()
+
+    def load(entity: String, files: Seq[String]): Seq[String] = {
+      val g = open(entity, files)
+      val shared = g.tables.size > 1
+      if (shared) g.raw.persist()
+      try g.tables.foreach { case (name, df) =>
+        val n = Sinks.writeParquet(df, name, opts.out, opts.partitions)
         println(s"[discogs-load] $name: $n rows -> ${opts.out}/$name")
+      } finally if (shared) g.raw.unpersist()
+      jdbc.foreach { cfg =>
+        g.tables.foreach { case (name, _) =>
+          Sinks.writeJdbc(spark.read.parquet(s"${opts.out}/$name"), name, cfg)
+        }
       }
-      opts.dbUrl.foreach { url =>
-        val cfg = Sinks.JdbcConfig(url, opts.dbUser, opts.dbPassword,
-          opts.batchSize, opts.copyMode)
-        tables.foreach { case (name, df) => Sinks.writeJdbc(df, name, cfg) }
-        if (opts.createIndexes) Sinks.createIndexes(cfg, tables.keys)
-      }
+      g.tables.map(_._1)
     }
+
+    val groups = DiscogsXml.groupByEntity(opts.files)
+    // the pool's threads start here, on the calling thread, so they
+    // inherit its Spark local properties (job group, scheduler pool)
+    val pool = Executors.newFixedThreadPool(groups.size)
+    val outcomes = try {
+      groups
+        .map { case (e, fs) => pool.submit[Seq[String]](() => load(e, fs)) }
+        .map(f => Try(f.get()).recoverWith {
+          case e: ExecutionException => Failure(e.getCause)
+        })
+    } finally pool.shutdownNow()
+    val failures = outcomes.collect { case Failure(e) => e }
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+    jdbc.filter(_ => opts.createIndexes)
+      .foreach(Sinks.createIndexes(_, outcomes.flatMap(_.get)))
   }
 }

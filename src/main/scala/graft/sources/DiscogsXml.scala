@@ -37,6 +37,13 @@ object DiscogsXml {
 
   final case class MasterTables(master: DataFrame, masterArtist: DataFrame)
 
+  /** The dumps of one entity: their first-wins-deduped raw rows (each
+    * file deduped on its own, then UNION ALL — see [[loadAll]]) and the
+    * tables derived from `raw`, in write order. A fan-out entity
+    * (releases, masters) derives several tables from the same `raw`,
+    * so a caller that writes them all persists `raw` once first. */
+  final case class DumpGroup(raw: DataFrame, tables: Seq[(String, DataFrame)])
+
   private def str0(c: org.apache.spark.sql.Column) = coalesce(c, lit(""))
   private def int0(c: org.apache.spark.sql.Column) = coalesce(c, lit(0))
   private def arr0(c: org.apache.spark.sql.Column) =
@@ -139,6 +146,11 @@ object DiscogsXml {
       .drop("__file", "__ord", "__rn")
   }
 
+  /** [[parseGood]] + [[firstWinsById]]: the raw rows every table of
+    * one dump file derives from. */
+  private def parseDeduped(spark: SparkSession, path: String, entity: String): DataFrame =
+    firstWinsById(parseGood(spark, path, entity), entityMeta(entity)._3)
+
   /** O2: root-element dispatch — peek the first bytes of the (possibly
     * gzip'd) file on the driver; no full reopen of the stream (fixes
     * quirk Q11). */
@@ -172,12 +184,11 @@ object DiscogsXml {
     * child tables always reference exactly the surviving parent rows.
     */
   def readReleases(spark: SparkSession, path: String): ReleaseTables =
-    normalizeReleases(parseGood(spark, path, "releases"))
+    normalizeReleases(parseDeduped(spark, path, "releases"))
 
-  /** Releases normalization over clean raw rows (direct parse or
-    * re-staged parquet). */
-  private def normalizeReleases(rawIn: DataFrame, dedup: Boolean = true): ReleaseTables = {
-    val raw = if (dedup) firstWinsById(rawIn, "_id") else rawIn
+  /** Releases normalization over clean, deduped raw rows (direct parse
+    * or re-staged parquet). */
+  private def normalizeReleases(raw: DataFrame): ReleaseTables = {
     val release = (
       raw.select(
         col("_id").as("id"),
@@ -211,10 +222,10 @@ object DiscogsXml {
   /** O5: artists dump → artist (4 array columns; aliases and
     * namevariations populated correctly — quirks Q2/Q3 fixed). */
   def readArtists(spark: SparkSession, path: String): DataFrame =
-    normalizeArtists(parseGood(spark, path, "artists"))
+    normalizeArtists(parseDeduped(spark, path, "artists"))
 
-  private def normalizeArtists(rawIn: DataFrame, dedup: Boolean = true): DataFrame =
-    (if (dedup) firstWinsById(rawIn, "id") else rawIn).select(
+  private def normalizeArtists(raw: DataFrame): DataFrame =
+    raw.select(
       col("id"),
       str0(col("name")).as("name"),
       str0(col("realname")).as("real_name"),
@@ -227,10 +238,10 @@ object DiscogsXml {
 
   /** O6: labels dump → label. */
   def readLabels(spark: SparkSession, path: String): DataFrame =
-    normalizeLabels(parseGood(spark, path, "labels"))
+    normalizeLabels(parseDeduped(spark, path, "labels"))
 
-  private def normalizeLabels(rawIn: DataFrame, dedup: Boolean = true): DataFrame =
-    (if (dedup) firstWinsById(rawIn, "id") else rawIn).select(
+  private def normalizeLabels(raw: DataFrame): DataFrame =
+    raw.select(
       col("id"),
       str0(col("name")).as("name"),
       str0(col("contactinfo")).as("contactinfo"),
@@ -244,10 +255,9 @@ object DiscogsXml {
     * notes populated — quirk Q9 fixed). Raw parse deduped before the
     * master_artist fan-out, as in [[readReleases]]. */
   def readMasters(spark: SparkSession, path: String): MasterTables =
-    normalizeMasters(parseGood(spark, path, "masters"))
+    normalizeMasters(parseDeduped(spark, path, "masters"))
 
-  private def normalizeMasters(rawIn: DataFrame, dedup: Boolean = true): MasterTables = {
-    val raw = if (dedup) firstWinsById(rawIn, "_id") else rawIn
+  private def normalizeMasters(raw: DataFrame): MasterTables = {
     val master = (raw.select(
       col("_id").as("id"),
       str0(col("title")).as("title"),
@@ -327,40 +337,44 @@ object DiscogsXml {
     * shuffle-free projections over a splittable, column-pruned
     * parquet scan (one task per split instead of one gz stream). */
   def readReleasesStaged(spark: SparkSession, stagedPath: String): ReleaseTables =
-    normalizeReleases(spark.read.parquet(stagedPath), dedup = false)
+    normalizeReleases(readStagedRaw(spark, stagedPath))
 
   def readArtistsStaged(spark: SparkSession, stagedPath: String): DataFrame =
-    normalizeArtists(spark.read.parquet(stagedPath), dedup = false)
+    normalizeArtists(readStagedRaw(spark, stagedPath))
 
   def readLabelsStaged(spark: SparkSession, stagedPath: String): DataFrame =
-    normalizeLabels(spark.read.parquet(stagedPath), dedup = false)
+    normalizeLabels(readStagedRaw(spark, stagedPath))
 
   def readMastersStaged(spark: SparkSession, stagedPath: String): MasterTables =
-    normalizeMasters(spark.read.parquet(stagedPath), dedup = false)
+    normalizeMasters(readStagedRaw(spark, stagedPath))
+
+  /** A staged dump's raw rows, without the `__ord` column (its job was
+    * the dedup, which [[restage]] already ran). */
+  private def readStagedRaw(spark: SparkSession, stagedPath: String): DataFrame =
+    spark.read.parquet(stagedPath).drop("__ord")
+
+  /** The entity of a [[restage]]d path: its directory name. */
+  private def stagedEntity(stagedPath: String): String = {
+    val name = new java.io.File(stagedPath).getName
+    require(entityMeta.contains(name),
+      s"$stagedPath: not a re-staged entity directory (got '$name')")
+    name
+  }
+
+  /** [[readGroup]] over [[restage]]d paths of one entity (each
+    * `.../[entity]`): shuffle-free, the dedup ran at stage time. */
+  def readStagedGroup(spark: SparkSession, entity: String,
+      stagedPaths: Seq[String]): DumpGroup = {
+    require(stagedPaths.forall(stagedEntity(_) == entity),
+      s"not all $entity: ${stagedPaths.mkString(", ")}")
+    group(entity, stagedPaths.map(readStagedRaw(spark, _)))
+  }
 
   /** [[loadAll]] over [[restage]]d paths (each `.../[entity]`). Same
     * union semantics; the scans parallelize across parquet splits. */
-  def loadAllStaged(spark: SparkSession, stagedPaths: Seq[String]): Map[String, DataFrame] = {
-    val out = scala.collection.mutable.Map[String, DataFrame]()
-    def put(name: String, df: DataFrame): Unit =
-      out(name) = out.get(name).map(_.unionByName(df)).getOrElse(df)
-    stagedPaths.foreach { p =>
-      new java.io.File(p).getName match {
-        case "releases" =>
-          val t = readReleasesStaged(spark, p)
-          put("release", t.release); put("release_label", t.releaseLabel)
-          put("release_video", t.releaseVideo)
-        case "artists" => put("artist", readArtistsStaged(spark, p))
-        case "labels" => put("label", readLabelsStaged(spark, p))
-        case "masters" =>
-          val t = readMastersStaged(spark, p)
-          put("master", t.master); put("master_artist", t.masterArtist)
-        case other => throw new IllegalArgumentException(
-          s"$p: not a re-staged entity directory (got '$other')")
-      }
-    }
-    out.toMap
-  }
+  def loadAllStaged(spark: SparkSession, stagedPaths: Seq[String]): Map[String, DataFrame] =
+    byEntity(stagedPaths, stagedEntity)
+      .flatMap { case (e, ps) => readStagedGroup(spark, e, ps).tables }.toMap
 
   /** Typed Dataset accessors — compile-time field checks for callers
     * that work row-wise (Encoders derive from the case classes in
@@ -399,25 +413,40 @@ object DiscogsXml {
     * all files of one logical dump in a single reader call, where
     * (file, document-order) first-wins applies).
     */
-  def loadAll(spark: SparkSession, paths: Seq[String]): Map[String, DataFrame] = {
-    val parts = paths.groupBy(detectEntity)
-    val out = scala.collection.mutable.Map[String, DataFrame]()
-    def put(name: String, df: DataFrame): Unit =
-      out(name) = out.get(name).map(_.unionByName(df)).getOrElse(df)
-    parts.foreach {
-      case ("releases", ps) => ps.foreach { p =>
-        val t = readReleases(spark, p)
-        put("release", t.release); put("release_label", t.releaseLabel)
-        put("release_video", t.releaseVideo)
-      }
-      case ("artists", ps) => ps.foreach(p => put("artist", readArtists(spark, p)))
-      case ("labels", ps) => ps.foreach(p => put("label", readLabels(spark, p)))
-      case ("masters", ps) => ps.foreach { p =>
-        val t = readMasters(spark, p)
-        put("master", t.master); put("master_artist", t.masterArtist)
-      }
-      case (other, _) => throw new IllegalArgumentException(s"unknown entity $other")
+  def loadAll(spark: SparkSession, paths: Seq[String]): Map[String, DataFrame] =
+    groupByEntity(paths).flatMap { case (e, ps) => readGroup(spark, e, ps).tables }.toMap
+
+  /** Dump files grouped by [[detectEntity]], groups and files in order
+    * of first appearance. */
+  def groupByEntity(paths: Seq[String]): Seq[(String, Seq[String])] =
+    byEntity(paths, detectEntity)
+
+  private def byEntity(paths: Seq[String], entityOf: String => String)
+      : Seq[(String, Seq[String])] = {
+    val tagged = paths.map(p => entityOf(p) -> p)
+    tagged.map(_._1).distinct.map(e => e -> tagged.collect { case (`e`, p) => p })
+  }
+
+  /** One entity's dump files, parsed directly: each file deduped on
+    * its own, the raw rows unioned, the entity's tables derived. */
+  def readGroup(spark: SparkSession, entity: String, paths: Seq[String]): DumpGroup = {
+    require(entityMeta.contains(entity), s"unknown entity $entity")
+    group(entity, paths.map(parseDeduped(spark, _, entity)))
+  }
+
+  private def group(entity: String, raws: Seq[DataFrame]): DumpGroup = {
+    val raw = raws.reduce(_.unionByName(_))
+    val tables = entity match {
+      case "releases" =>
+        val t = normalizeReleases(raw)
+        Seq("release" -> t.release, "release_label" -> t.releaseLabel,
+          "release_video" -> t.releaseVideo)
+      case "artists" => Seq("artist" -> normalizeArtists(raw))
+      case "labels" => Seq("label" -> normalizeLabels(raw))
+      case "masters" =>
+        val t = normalizeMasters(raw)
+        Seq("master" -> t.master, "master_artist" -> t.masterArtist)
     }
-    out.toMap
+    DumpGroup(raw, tables)
   }
 }

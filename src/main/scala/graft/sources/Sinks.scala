@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 
 import java.sql.{Connection, DriverManager}
@@ -40,20 +40,25 @@ object Sinks {
   /** Engine-native sink: overwrite parquet, clustered by the table's
     * index key. `repartition(key)` co-locates each key range,
     * `sortWithinPartitions` orders inside files → row-group skipping
-    * serves later point lookups / co-partitioned joins. */
+    * serves later point lookups / co-partitioned joins. Returns the
+    * number of rows written, counted by the write itself (no read-back
+    * job). */
   def writeParquet(df: DataFrame, table: String, outDir: String,
-      numPartitions: Option[Int] = None): Unit = {
+      numPartitions: Option[Int] = None): Long = {
     val keys = indexKeys.getOrElse(table, Seq.empty)
+    val rows = Observation()
+    val counted = df.observe(rows, count(lit(1)).as("rows"))
     val clustered = keys match {
-      case Nil => df
+      case Nil => counted
       case ks =>
         val cols = ks.map(col)
         val rep = numPartitions
-          .map(n => df.repartition(n, cols: _*))
-          .getOrElse(df.repartition(cols: _*))
+          .map(n => counted.repartition(n, cols: _*))
+          .getOrElse(counted.repartition(cols: _*))
         rep.sortWithinPartitions(cols: _*)
     }
     clustered.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table")
+    rows.get("rows").asInstanceOf[Long]
   }
 
   /** Small-file compaction — the maintenance op every long-running

@@ -12,6 +12,11 @@ class DiscogsXmlSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def res(name: String): String = getClass.getResource(s"/$name").getPath
 
+  private def withTempDir[A](prefix: String)(f: java.nio.file.Path => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("detectEntity dispatches on root element, plain and gz") {
     assert(DiscogsXml.detectEntity(res("releases.xml")) == "releases")
     assert(DiscogsXml.detectEntity(res("artists.xml.gz")) == "artists")
@@ -190,17 +195,18 @@ class DiscogsXmlSpec extends AnyFunSuite {
     // same id in two files; b.xml is much larger, so Spark's
     // size-descending bin-packing would schedule it first — the
     // survivor must still come from a.xml (file paths ascending)
-    val dir = java.nio.file.Files.createTempDirectory("multifile")
-    def release(id: Int, title: String) =
-      s"""  <release id="$id" status="Accepted"><title>$title</title></release>"""
-    java.nio.file.Files.writeString(dir.resolve("a.xml"),
-      s"""<releases>\n${release(1, "FromA")}\n</releases>\n""")
-    val padding = (100 to 160).map(i => release(i, s"Pad $i")).mkString("\n")
-    java.nio.file.Files.writeString(dir.resolve("b.xml"),
-      s"""<releases>\n${release(1, "FromB")}\n$padding\n</releases>\n""")
-    val t = DiscogsXml.readReleases(spark, dir.toString)
-    assert(t.release.filter("id = 1").first().getString(2) == "FromA")
-    assert(t.release.count() == 62) // 1 survivor + 61 padding
+    withTempDir("multifile") { dir =>
+      def release(id: Int, title: String) =
+        s"""  <release id="$id" status="Accepted"><title>$title</title></release>"""
+      java.nio.file.Files.writeString(dir.resolve("a.xml"),
+        s"""<releases>\n${release(1, "FromA")}\n</releases>\n""")
+      val padding = (100 to 160).map(i => release(i, s"Pad $i")).mkString("\n")
+      java.nio.file.Files.writeString(dir.resolve("b.xml"),
+        s"""<releases>\n${release(1, "FromB")}\n$padding\n</releases>\n""")
+      val t = DiscogsXml.readReleases(spark, dir.toString)
+      assert(t.release.filter("id = 1").first().getString(2) == "FromA")
+      assert(t.release.count() == 62) // 1 survivor + 61 padding
+    }
   }
 
   test("restage preserves rows, schema, and first-wins document order") {
@@ -217,32 +223,34 @@ class DiscogsXmlSpec extends AnyFunSuite {
         |""".stripMargin
     val f = java.nio.file.Files.createTempFile("restage-releases", ".xml")
     java.nio.file.Files.writeString(f, xml)
-    val out = java.nio.file.Files.createTempDirectory("restage-out")
-    val staged = DiscogsXml.restage(spark, f.toString, out.toString, partitions = 3)
-    val direct = DiscogsXml.readReleases(spark, f.toString).release
-    val viaStage = DiscogsXml.readReleasesStaged(spark, staged).release
-    assert(viaStage.schema == direct.schema)
-    assert(viaStage.collect().toSet == direct.collect().toSet)
-    assert(viaStage.filter("id = 7").first().getString(2) == "First")
-    // gz fixture round-trips through restage for the other entities too
-    val aStaged = DiscogsXml.restage(spark, res("artists.xml.gz"), out.toString)
-    assert(DiscogsXml.readArtistsStaged(spark, aStaged).collect().toSet ==
-      DiscogsXml.readArtists(spark, res("artists.xml.gz")).collect().toSet)
+    withTempDir("restage-out") { out =>
+      val staged = DiscogsXml.restage(spark, f.toString, out.toString, partitions = 3)
+      val direct = DiscogsXml.readReleases(spark, f.toString).release
+      val viaStage = DiscogsXml.readReleasesStaged(spark, staged).release
+      assert(viaStage.schema == direct.schema)
+      assert(viaStage.collect().toSet == direct.collect().toSet)
+      assert(viaStage.filter("id = 7").first().getString(2) == "First")
+      // gz fixture round-trips through restage for the other entities too
+      val aStaged = DiscogsXml.restage(spark, res("artists.xml.gz"), out.toString)
+      assert(DiscogsXml.readArtistsStaged(spark, aStaged).collect().toSet ==
+        DiscogsXml.readArtists(spark, res("artists.xml.gz")).collect().toSet)
+    }
   }
 
   test("loadAllStaged over re-staged dumps matches direct loadAll") {
-    val out = java.nio.file.Files.createTempDirectory("staged-all")
-    val staged = Seq(res("releases.xml.gz"), res("artists.xml.gz"),
-      res("labels.xml.gz"), res("masters.xml.gz")).zipWithIndex.map {
-      case (f, i) => DiscogsXml.restage(spark, f, s"$out/d$i")
-    }
-    val viaStage = DiscogsXml.loadAllStaged(spark, staged)
-    val direct = DiscogsXml.loadAll(spark, Seq(
-      res("releases.xml.gz"), res("artists.xml.gz"),
-      res("labels.xml.gz"), res("masters.xml.gz")))
-    assert(viaStage.keySet == direct.keySet)
-    viaStage.keySet.foreach { t =>
-      assert(viaStage(t).collect().toSet == direct(t).collect().toSet, s"table $t")
+    withTempDir("staged-all") { out =>
+      val staged = Seq(res("releases.xml.gz"), res("artists.xml.gz"),
+        res("labels.xml.gz"), res("masters.xml.gz")).zipWithIndex.map {
+        case (f, i) => DiscogsXml.restage(spark, f, s"$out/d$i")
+      }
+      val viaStage = DiscogsXml.loadAllStaged(spark, staged)
+      val direct = DiscogsXml.loadAll(spark, Seq(
+        res("releases.xml.gz"), res("artists.xml.gz"),
+        res("labels.xml.gz"), res("masters.xml.gz")))
+      assert(viaStage.keySet == direct.keySet)
+      viaStage.keySet.foreach { t =>
+        assert(viaStage(t).collect().toSet == direct(t).collect().toSet, s"table $t")
+      }
     }
   }
 
