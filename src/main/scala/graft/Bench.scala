@@ -17,6 +17,18 @@ import org.apache.spark.sql.SparkSession
   * attribution across rounds.
   */
 object Bench {
+
+  /** One entry's reps, each (wall seconds, rows), folded to the entry's
+    * (wall, rows). Rows < 0 mark a failed rep (-1 threw, -2 hit the
+    * cap). Wall and rows come from the fastest successful rep, so a
+    * rep that dies early never reports its short wall and one flaky
+    * rep never marks a good entry failed; only when every rep failed
+    * is the entry failed, carrying its last rep. */
+  def foldReps(reps: Seq[(Double, Long)]): (Double, Long) = {
+    val ok = reps.filter(_._2 >= 0)
+    if (ok.nonEmpty) ok.minBy(_._1) else reps.last
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -70,7 +82,9 @@ object Bench {
         spark.sparkContext.setJobGroup(s"bench-$name", name,
           interruptOnCancel = true)
         try n = fn(spark, dir).count()
-        catch { case _: Throwable => () } // n stays -1
+        catch { case e: Throwable => // n stays -1
+          System.err.println(s"[bench] FAILED rep of $name: $e")
+        }
       }, s"bench-$name")
       th.setDaemon(true)
       th.start()
@@ -111,17 +125,14 @@ object Bench {
     val nq = SparkEntry.queries.size
     var qi = 0
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var best = Double.MaxValue
-      var n = -1L
-      for (_ <- 1 to repeats) {
+      val (best, n) = foldReps((1 to repeats).map { _ =>
         spark.catalog.clearCache() // intra-query persists don't carry over
-        val (sec, rows) = capped(name, fn, sfDir, entryCap)
-        n = rows
-        best = math.min(best, sec)
+        val rep = capped(name, fn, sfDir, entryCap)
         // post-consumption release of the query's persists + RDD-level
         // checkpoint blocks (clearCache above cannot evict the latter)
         CacheScope.releaseAll()
-      }
+        rep
+      })
       qi += 1
       // one UNBUFFERED stderr line per finished entry: if the outer
       // driver timeout still fires, the tail says exactly where

@@ -11,15 +11,17 @@ import scala.util.{Failure, Try}
   *
   * Usage:
   *   discogs-load [--out DIR] [--batch-size N] [--db-url JDBC_URL]
-  *     [--db-user U] [--db-password P] [--copy-mode binary|csv]
-  *     [--create-indexes] [--partitions N] [--restage DIR] FILE...
+  *     [--db-user U] [--db-password P] [--create-indexes]
+  *     [--partitions N] [--restage DIR] FILE...
   *
   * Each FILE is a discogs dump (`.xml` or `.xml.gz`); entity type is
   * auto-detected from the root element (O2). Tables always land as
   * clustered parquet under --out (engine-native sink); with --db-url
   * each is then loaded over JDBC from its landed parquet with
   * --batch-size-row batches, and --create-indexes runs the deferred
-  * index DDL (O17) once every table is in.
+  * index DDL (O17) once every table is in. A postgres target takes the
+  * reference's sink, `COPY ... FROM STDIN BINARY` (`db.rs:230-244`);
+  * any other JDBC target takes batched INSERTs.
   *
   * The unit of work is a dump group: the files of one entity. Groups
   * load side by side, one thread each (at most four, one per entity):
@@ -35,12 +37,6 @@ import scala.util.{Failure, Try}
   * under DIR first (one single-stream parse each, paid once), then
   * loads the group from the staged copies — the layout every later
   * pass over a big dump should read.
-  *
-  * --copy-mode picks the postgres COPY wire format (the reference's
-  * sink is `COPY ... FROM STDIN BINARY`, `db.rs:230-244`): `binary`
-  * (default, the reference's format) or `csv` (server-side input
-  * parser coerces types the binary encoder doesn't cover). Non-
-  * postgres JDBC targets ignore it and take batched INSERTs.
   */
 object DiscogsLoad {
 
@@ -48,7 +44,7 @@ object DiscogsLoad {
       batchSize: Int = 10000, dbUrl: Option[String] = None,
       dbUser: String = "dev", dbPassword: String = "dev_pass",
       createIndexes: Boolean = false, partitions: Option[Int] = None,
-      restageDir: Option[String] = None, copyMode: String = "binary")
+      restageDir: Option[String] = None)
 
   def parseArgs(args: List[String], o: Opts = Opts()): Opts = args match {
     case Nil => o
@@ -60,7 +56,6 @@ object DiscogsLoad {
     case "--create-indexes" :: rest => parseArgs(rest, o.copy(createIndexes = true))
     case "--partitions" :: v :: rest => parseArgs(rest, o.copy(partitions = Some(v.toInt)))
     case "--restage" :: v :: rest => parseArgs(rest, o.copy(restageDir = Some(v)))
-    case "--copy-mode" :: v :: rest => parseArgs(rest, o.copy(copyMode = v))
     case f :: rest if !f.startsWith("--") => parseArgs(rest, o.copy(files = o.files :+ f))
     case bad :: _ => throw new IllegalArgumentException(s"unknown flag $bad")
   }
@@ -87,7 +82,7 @@ object DiscogsLoad {
   def run(opts: Opts, spark: SparkSession): Unit = {
     require(opts.files.nonEmpty, "at least one dump FILE required")
     val jdbc = opts.dbUrl.map(url => Sinks.JdbcConfig(url, opts.dbUser,
-      opts.dbPassword, opts.batchSize, opts.copyMode))
+      opts.dbPassword, opts.batchSize))
 
     def open(entity: String, files: Seq[String]): DiscogsXml.DumpGroup =
       opts.restageDir match {

@@ -347,8 +347,8 @@ object Similarity {
       .orderBy(col("q_id"), col("rk"), col("vec_id"))
   }
 
-  /** [[s03_ann_ivf]] knobs, set by a grid sweep (SweepIvf harness,
-    * round 7) over (ncells, nprobe, iters) ∈ {16,32}×{8,10,12}×{4,6}:
+  /** [[s03_ann_ivf]] knobs, set by a grid sweep (round 7) over
+    * (ncells, nprobe, iters) ∈ {16,32}×{8,10,12}×{4,6}:
     * recall@5 = 0.867 at sf0.001 / 0.905 at sf0.1 — the near-orthogonal
     * synthetic geometry (top-1 cosine 0.13-0.48) is adversarial for
     * coarse quantization, so hitting ≥0.8 costs probing nprobe/ncells

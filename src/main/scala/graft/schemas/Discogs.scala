@@ -20,28 +20,6 @@ import org.apache.spark.sql.types._
   */
 object Discogs {
 
-  // ---- typed rows (Dataset[T] API surface) ----
-  final case class Release(id: Int, status: String, title: String,
-      country: String, released: String, notes: String,
-      genres: Seq[String], styles: Seq[String], master_id: Int,
-      data_quality: String)
-  final case class ReleaseLabel(release_id: Int, label: String,
-      catno: String, label_id: Int)
-  final case class ReleaseVideo(release_id: Int, duration: Int,
-      src: String, title: String)
-  final case class Artist(id: Int, name: String, real_name: String,
-      profile: String, data_quality: String,
-      name_variations: Seq[String], urls: Seq[String],
-      aliases: Seq[String], members: Seq[String])
-  final case class Label(id: Int, name: String, contactinfo: String,
-      profile: String, parent_label: String, sublabels: Seq[String],
-      urls: Seq[String], data_quality: String)
-  final case class Master(id: Int, title: String, release_id: Int,
-      year: Int, notes: String, genres: Seq[String],
-      styles: Seq[String], data_quality: String)
-  final case class MasterArtist(artist_id: Int, master_id: Int,
-      name: String, anv: String, role: String)
-
   // ---- XML read schemas (attributePrefix "_", valueTag "_VALUE") ----
 
   private def s(fields: StructField*): StructType = StructType(fields)
@@ -122,6 +100,8 @@ object Discogs {
       f("anv", StringType), f("role", StringType)))))))
 
   // ---- flat output schemas (what the sinks write; FIXTURES §2) ----
+  // The single declared output contract: DiscogsXmlSpec checks the
+  // names and types of every loaded table against these.
 
   val releaseSchema: StructType = s(
     StructField("id", IntegerType, nullable = false),

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.schemas.Discogs
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType}
@@ -30,13 +30,6 @@ import java.util.zip.GZIPInputStream
   */
 object DiscogsXml {
 
-  /** Result of ingesting one releases dump: parent + 2 fan-out tables
-    * (reference writes all three per batch, `db.rs:55-97`). */
-  final case class ReleaseTables(release: DataFrame,
-      releaseLabel: DataFrame, releaseVideo: DataFrame)
-
-  final case class MasterTables(master: DataFrame, masterArtist: DataFrame)
-
   /** The dumps of one entity: their first-wins-deduped raw rows (each
     * file deduped on its own, then UNION ALL — see [[loadAll]]) and the
     * tables derived from `raw`, in write order. A fan-out entity
@@ -54,7 +47,7 @@ object DiscogsXml {
   private def tryInt(c: org.apache.spark.sql.Column) = c.try_cast(IntegerType)
 
   /** Corrupt-record spill column (explicit malformed-record policy). */
-  val CorruptCol = "_graft_corrupt"
+  private val CorruptCol = "_graft_corrupt"
 
   /** O1/O3: one declarative XML read with an EXPLICIT malformed-record
     * policy. The reference FSM skips unknown/broken elements silently
@@ -106,8 +99,8 @@ object DiscogsXml {
   }
 
   /** Parse one dump to clean raw rows: explicit schema, corrupt and
-    * null-id records dropped, id cast to int. The shared front of the
-    * direct readers and [[restage]]. */
+    * null-id records dropped, id cast to int. The shared front of
+    * [[readGroup]] and [[restage]]. */
   private def parseGood(spark: SparkSession, path: String, entity: String): DataFrame = {
     val (tag, schema, idCol) = entityMeta(entity)
     dropRejects(
@@ -124,32 +117,20 @@ object DiscogsXml {
     * partition, and a gz file is exactly one partition, so within a
     * file it is exact document order. ACROSS files the partition index
     * is planning-dependent (the file source bin-packs partitions
-    * sorted by size descending), so the order key is (file path, id):
+    * sorted by size descending), so the order key is (file path,
+    * in-file position):
     * deterministic for any multi-file read — file paths ascending,
     * document order within each file — instead of silently depending
     * on file sizes.
     */
-  private def firstWinsById(df: DataFrame, key: String = "id"): DataFrame = {
+  private def firstWinsById(df: DataFrame, key: String): DataFrame = {
     val w = Window.partitionBy(col(key)).orderBy(col("__file"), col("__ord"))
-    // a re-staged table carries its own dump's document order as a
-    // materialized __ord column (partition index no longer tracks
-    // document order after a repartition); a direct XML read derives
-    // it here. __ord is only meaningful WITHIN one staged dump —
-    // cross-dump unions must route through unionDumps instead.
-    val ordered =
-      if (df.columns.contains("__ord")) df.withColumn("__file", lit(""))
-      else df.withColumn("__file", input_file_name())
-        .withColumn("__ord", monotonically_increasing_id())
-    ordered
+    df.withColumn("__file", input_file_name())
+      .withColumn("__ord", monotonically_increasing_id())
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__file", "__ord", "__rn")
   }
-
-  /** [[parseGood]] + [[firstWinsById]]: the raw rows every table of
-    * one dump file derives from. */
-  private def parseDeduped(spark: SparkSession, path: String, entity: String): DataFrame =
-    firstWinsById(parseGood(spark, path, entity), entityMeta(entity)._3)
 
   /** O2: root-element dispatch — peek the first bytes of the (possibly
     * gzip'd) file on the driver; no full reopen of the stream (fixes
@@ -178,17 +159,13 @@ object DiscogsXml {
     } finally fin.close()
   }
 
-  /** O4: releases dump → release + release_label + release_video.
-    * The raw parse is first-wins-deduped BEFORE the fan-out extraction
-    * so children of dropped duplicate parents are dropped with them —
+  /** O4: releases → release + release_label + release_video, over
+    * clean first-wins-deduped raw rows (direct parse or re-staged
+    * parquet). The dedup runs BEFORE the fan-out extraction, so
+    * children of dropped duplicate parents are dropped with them —
     * child tables always reference exactly the surviving parent rows.
     */
-  def readReleases(spark: SparkSession, path: String): ReleaseTables =
-    normalizeReleases(parseDeduped(spark, path, "releases"))
-
-  /** Releases normalization over clean, deduped raw rows (direct parse
-    * or re-staged parquet). */
-  private def normalizeReleases(raw: DataFrame): ReleaseTables = {
+  private def normalizeReleases(raw: DataFrame): Seq[(String, DataFrame)] = {
     val release = (
       raw.select(
         col("_id").as("id"),
@@ -216,16 +193,14 @@ object DiscogsXml {
         int0(tryInt(col("v._duration"))).as("duration"),
         str0(col("v._src")).as("src"),
         str0(col("v.title")).as("title"))
-    ReleaseTables(release, releaseLabel, releaseVideo)
+    Seq("release" -> release, "release_label" -> releaseLabel,
+      "release_video" -> releaseVideo)
   }
 
-  /** O5: artists dump → artist (4 array columns; aliases and
+  /** O5: artists → artist (4 array columns; aliases and
     * namevariations populated correctly — quirks Q2/Q3 fixed). */
-  def readArtists(spark: SparkSession, path: String): DataFrame =
-    normalizeArtists(parseDeduped(spark, path, "artists"))
-
-  private def normalizeArtists(raw: DataFrame): DataFrame =
-    raw.select(
+  private def normalizeArtists(raw: DataFrame): Seq[(String, DataFrame)] =
+    Seq("artist" -> raw.select(
       col("id"),
       str0(col("name")).as("name"),
       str0(col("realname")).as("real_name"),
@@ -234,14 +209,11 @@ object DiscogsXml {
       arr0(col("namevariations.name")).as("name_variations"),
       arr0(col("urls.url")).as("urls"),
       arr0(col("aliases.name._VALUE")).as("aliases"),
-      arr0(col("members.name._VALUE")).as("members"))
+      arr0(col("members.name._VALUE")).as("members")))
 
-  /** O6: labels dump → label. */
-  def readLabels(spark: SparkSession, path: String): DataFrame =
-    normalizeLabels(parseDeduped(spark, path, "labels"))
-
-  private def normalizeLabels(raw: DataFrame): DataFrame =
-    raw.select(
+  /** O6: labels → label. */
+  private def normalizeLabels(raw: DataFrame): Seq[(String, DataFrame)] =
+    Seq("label" -> raw.select(
       col("id"),
       str0(col("name")).as("name"),
       str0(col("contactinfo")).as("contactinfo"),
@@ -249,15 +221,12 @@ object DiscogsXml {
       str0(col("parentLabel._VALUE")).as("parent_label"),
       arr0(col("sublabels.label._VALUE")).as("sublabels"),
       arr0(col("urls.url")).as("urls"),
-      str0(col("data_quality")).as("data_quality"))
+      str0(col("data_quality")).as("data_quality")))
 
-  /** O7: masters dump → master + master_artist (year/genres/styles/
-    * notes populated — quirk Q9 fixed). Raw parse deduped before the
-    * master_artist fan-out, as in [[readReleases]]. */
-  def readMasters(spark: SparkSession, path: String): MasterTables =
-    normalizeMasters(parseDeduped(spark, path, "masters"))
-
-  private def normalizeMasters(raw: DataFrame): MasterTables = {
+  /** O7: masters → master + master_artist (year/genres/styles/notes
+    * populated — quirk Q9 fixed); fan-out over deduped raw rows, as in
+    * [[normalizeReleases]]. */
+  private def normalizeMasters(raw: DataFrame): Seq[(String, DataFrame)] = {
     val master = (raw.select(
       col("_id").as("id"),
       str0(col("title")).as("title"),
@@ -275,7 +244,7 @@ object DiscogsXml {
         str0(col("a.name")).as("name"),
         str0(col("a.anv")).as("anv"),
         str0(col("a.role")).as("role"))
-    MasterTables(master, masterArtist)
+    Seq("master" -> master, "master_artist" -> masterArtist)
   }
 
   /** Splittable re-stage (SURVEY §7.4): one pass through the
@@ -332,121 +301,60 @@ object DiscogsXml {
     staged
   }
 
-  /** Readers over a [[restage]]d dump — same output tables, but the
-    * input is already first-wins-deduped clean rows, so these are
-    * shuffle-free projections over a splittable, column-pruned
-    * parquet scan (one task per split instead of one gz stream). */
-  def readReleasesStaged(spark: SparkSession, stagedPath: String): ReleaseTables =
-    normalizeReleases(readStagedRaw(spark, stagedPath))
-
-  def readArtistsStaged(spark: SparkSession, stagedPath: String): DataFrame =
-    normalizeArtists(readStagedRaw(spark, stagedPath))
-
-  def readLabelsStaged(spark: SparkSession, stagedPath: String): DataFrame =
-    normalizeLabels(readStagedRaw(spark, stagedPath))
-
-  def readMastersStaged(spark: SparkSession, stagedPath: String): MasterTables =
-    normalizeMasters(readStagedRaw(spark, stagedPath))
-
-  /** A staged dump's raw rows, without the `__ord` column (its job was
-    * the dedup, which [[restage]] already ran). */
-  private def readStagedRaw(spark: SparkSession, stagedPath: String): DataFrame =
-    spark.read.parquet(stagedPath).drop("__ord")
-
-  /** The entity of a [[restage]]d path: its directory name. */
-  private def stagedEntity(stagedPath: String): String = {
-    val name = new java.io.File(stagedPath).getName
-    require(entityMeta.contains(name),
-      s"$stagedPath: not a re-staged entity directory (got '$name')")
-    name
-  }
-
-  /** [[readGroup]] over [[restage]]d paths of one entity (each
-    * `.../[entity]`): shuffle-free, the dedup ran at stage time. */
-  def readStagedGroup(spark: SparkSession, entity: String,
-      stagedPaths: Seq[String]): DumpGroup = {
-    require(stagedPaths.forall(stagedEntity(_) == entity),
-      s"not all $entity: ${stagedPaths.mkString(", ")}")
-    group(entity, stagedPaths.map(readStagedRaw(spark, _)))
-  }
-
-  /** [[loadAll]] over [[restage]]d paths (each `.../[entity]`). Same
-    * union semantics; the scans parallelize across parquet splits. */
-  def loadAllStaged(spark: SparkSession, stagedPaths: Seq[String]): Map[String, DataFrame] =
-    byEntity(stagedPaths, stagedEntity)
-      .flatMap { case (e, ps) => readStagedGroup(spark, e, ps).tables }.toMap
-
-  /** Typed Dataset accessors — compile-time field checks for callers
-    * that work row-wise (Encoders derive from the case classes in
-    * [[graft.schemas.Discogs]]; the DataFrame plans are unchanged).
-    */
-  def readArtistsTyped(spark: SparkSession, path: String): Dataset[Discogs.Artist] = {
-    import spark.implicits._
-    readArtists(spark, path).as[Discogs.Artist]
-  }
-
-  def readLabelsTyped(spark: SparkSession, path: String): Dataset[Discogs.Label] = {
-    import spark.implicits._
-    readLabels(spark, path).as[Discogs.Label]
-  }
-
-  def readReleasesTyped(spark: SparkSession, path: String): Dataset[Discogs.Release] = {
-    import spark.implicits._
-    readReleases(spark, path).release.as[Discogs.Release]
-  }
-
-  def readMastersTyped(spark: SparkSession, path: String): Dataset[Discogs.Master] = {
-    import spark.implicits._
-    readMasters(spark, path).master.as[Discogs.Master]
-  }
-
   /** O2+O20: dispatch-and-load a set of dump files (the reference's
     * sequential per-file loop, `main.rs:43-103`, except each entity's
     * tables land as separate DataFrames and multiple files of the same
     * entity union together — monthly-dump union, SURVEY §2.2 set ops).
     *
-    * NOTE: the union is a plain UNION ALL — dedup is per FILE (each
-    * reader call), so an id present in two dumps keeps both rows, as
-    * two monthly snapshots of the same record. Cross-dump first-wins
-    * semantics are a policy choice, not a default: route the result
-    * through [[graft.operators.DiscogsQueries.unionDumps]] (or pass
-    * all files of one logical dump in a single reader call, where
-    * (file, document-order) first-wins applies).
+    * NOTE: the union is a plain UNION ALL — dedup is per FILE, so an id
+    * present in two dumps keeps both rows, as two monthly snapshots of
+    * the same record. Cross-dump first-wins semantics are a policy
+    * choice, not a default: route the result through
+    * [[graft.operators.DiscogsQueries.unionDumps]], or pass a directory
+    * holding all files of one logical dump to [[readGroup]], where
+    * (file, document-order) first-wins applies across its files.
     */
   def loadAll(spark: SparkSession, paths: Seq[String]): Map[String, DataFrame] =
     groupByEntity(paths).flatMap { case (e, ps) => readGroup(spark, e, ps).tables }.toMap
 
   /** Dump files grouped by [[detectEntity]], groups and files in order
     * of first appearance. */
-  def groupByEntity(paths: Seq[String]): Seq[(String, Seq[String])] =
-    byEntity(paths, detectEntity)
-
-  private def byEntity(paths: Seq[String], entityOf: String => String)
-      : Seq[(String, Seq[String])] = {
-    val tagged = paths.map(p => entityOf(p) -> p)
+  def groupByEntity(paths: Seq[String]): Seq[(String, Seq[String])] = {
+    val tagged = paths.map(p => detectEntity(p) -> p)
     tagged.map(_._1).distinct.map(e => e -> tagged.collect { case (`e`, p) => p })
   }
 
-  /** One entity's dump files, parsed directly: each file deduped on
-    * its own, the raw rows unioned, the entity's tables derived. */
+  /** One entity's dumps, parsed directly: each path first-wins-deduped
+    * on its own, the raw rows unioned, the entity's tables derived. A
+    * path may be a directory, read as one logical dump (first wins in
+    * (file path, document order) across its files). */
   def readGroup(spark: SparkSession, entity: String, paths: Seq[String]): DumpGroup = {
     require(entityMeta.contains(entity), s"unknown entity $entity")
-    group(entity, paths.map(parseDeduped(spark, _, entity)))
+    group(entity, paths.map { p =>
+      firstWinsById(parseGood(spark, p, entity), entityMeta(entity)._3)
+    })
+  }
+
+  /** [[readGroup]] over [[restage]]d paths of one entity (each
+    * `.../[entity]`): shuffle-free projections over a splittable,
+    * column-pruned parquet scan — the dedup ran at stage time, so the
+    * staged `__ord` column is dropped unread. */
+  def readStagedGroup(spark: SparkSession, entity: String,
+      stagedPaths: Seq[String]): DumpGroup = {
+    require(entityMeta.contains(entity), s"unknown entity $entity")
+    val foreign = stagedPaths.filterNot(new java.io.File(_).getName == entity)
+    require(foreign.isEmpty,
+      s"not re-staged $entity directories: ${foreign.mkString(", ")}")
+    group(entity, stagedPaths.map(spark.read.parquet(_).drop("__ord")))
   }
 
   private def group(entity: String, raws: Seq[DataFrame]): DumpGroup = {
     val raw = raws.reduce(_.unionByName(_))
-    val tables = entity match {
-      case "releases" =>
-        val t = normalizeReleases(raw)
-        Seq("release" -> t.release, "release_label" -> t.releaseLabel,
-          "release_video" -> t.releaseVideo)
-      case "artists" => Seq("artist" -> normalizeArtists(raw))
-      case "labels" => Seq("label" -> normalizeLabels(raw))
-      case "masters" =>
-        val t = normalizeMasters(raw)
-        Seq("master" -> t.master, "master_artist" -> t.masterArtist)
-    }
-    DumpGroup(raw, tables)
+    DumpGroup(raw, entity match {
+      case "releases" => normalizeReleases(raw)
+      case "artists" => normalizeArtists(raw)
+      case "labels" => normalizeLabels(raw)
+      case "masters" => normalizeMasters(raw)
+    })
   }
 }

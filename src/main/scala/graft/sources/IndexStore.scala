@@ -201,10 +201,6 @@ object IndexStore {
   def corpusRows(spark: SparkSession, corpusDir: String): Option[Long] =
     corpusRowsOfMeta(readMeta(spark, cellIndexDir(corpusDir)))
 
-  /** [[corpusRowsOfMeta]] for the PQ artifact namespace. */
-  def pqCorpusRows(spark: SparkSession, corpusDir: String): Option[Long] =
-    corpusRowsOfMeta(readMeta(spark, pqIndexDir(corpusDir)))
-
   private def readMeta(spark: SparkSession, dir: String): Option[String] =
     // ANY unreadable meta (absent, truncated, checksum-corrupt) is a
     // fingerprint miss: the caller rebuilds and rewrites — a damaged

@@ -21,9 +21,10 @@ import java.sql.Connection
   * date days since 2000-01-01, arrays as ndim/hasnull/elemOid + per
   * element length-prefixed payloads.
   *
-  * Like [[PgCopy]], the encoding is pure and byte-golden-tested; the
-  * server call is a reflective adapter over pgjdbc's CopyManager that
-  * activates only when the driver is on the runtime classpath.
+  * The encoding is pure and byte-golden-tested; the server call is a
+  * reflective adapter over pgjdbc's CopyManager, so the library
+  * compiles with zero JDBC-driver dependency and takes this path only
+  * when the driver is on the runtime classpath ([[isPostgres]]).
   */
 object PgBinaryCopy {
 
@@ -45,9 +46,8 @@ object PgBinaryCopy {
 
   /** True iff every column of `schema` has a binary-COPY encoding
     * here. [[Sinks.writeJdbc]] consults this so a schema the binary
-    * path can't express (decimals, non-string arrays, …) falls back
-    * to CSV COPY — where the server's input parser coerces — instead
-    * of failing every partition. */
+    * path can't express (decimals, non-string arrays, …) takes batched
+    * INSERTs instead of failing every partition. */
   def supports(schema: StructType): Boolean =
     schema.fields.forall(_.dataType match {
       case ShortType | IntegerType | LongType | FloatType | DoubleType |
@@ -89,12 +89,11 @@ object PgBinaryCopy {
       case (StringType, x: String) => d.write(x.getBytes("UTF-8"))
       case (BinaryType, x: Array[Byte]) => d.write(x)
       case (TimestampType, x: java.sql.Timestamp) =>
-        // postgres `timestamp` is zoneless; the CSV COPY path
-        // (Timestamp.toString) and the INSERT fallback (pgjdbc
-        // setObject) both bind the JVM-default-zone WALL CLOCK, so the
-        // binary form must encode the same LocalDateTime — an
+        // postgres `timestamp` is zoneless; the INSERT fallback
+        // (pgjdbc setObject) binds the JVM-default-zone WALL CLOCK, so
+        // the binary form must encode the same LocalDateTime — an
         // epoch-instant encoding would shift every value by the TZ
-        // offset on any non-UTC JVM relative to the other two paths
+        // offset on any non-UTC JVM relative to the INSERT path
         val ldt = x.toLocalDateTime // default zone, nanos preserved
         val micros = math.addExact(
           math.multiplyExact(ldt.toLocalDate.toEpochDay - PgEpochDays, 86400000000L),
@@ -154,8 +153,19 @@ object PgBinaryCopy {
     }
   }
 
+  /** True iff THIS connection is a pgjdbc connection. A missing driver
+    * (ClassNotFoundException) or a broken/mismatched jar
+    * (LinkageError) answers false, and classpath presence alone must
+    * not route a Derby/H2/SQLite connection into COPY (unwrap would
+    * throw and the write would die without ever reaching the INSERT
+    * fallback). */
+  def isPostgres(conn: Connection): Boolean =
+    try conn.isWrapperFor(Class.forName("org.postgresql.PGConnection"))
+    catch { case _: Throwable => false }
+
   /** COPY the rows into `table` over `conn` (must be a pgjdbc
-    * connection) in BINARY format. Returns rows written. */
+    * connection, see [[isPostgres]]) in BINARY format. Returns rows
+    * written. */
   def copyIn(conn: Connection, table: String, columns: Seq[String],
       schema: StructType, rows: Iterator[Row]): Long = {
     val pgIface = Class.forName("org.postgresql.PGConnection")

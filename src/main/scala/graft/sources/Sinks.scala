@@ -14,15 +14,14 @@ import java.sql.{Connection, DriverManager}
   *    row-group min/max analogue of the reference's deferred btree
   *    indexes (O17, `sql/indexes.sql`): point lookups and merge joins
   *    skip row groups instead of walking a btree.
-  *  - JDBC is the relational sink: batched INSERTs over plain
-  *    `java.sql`, so the library works against any driver on the
-  *    runtime classpath with zero compile-time JDBC deps. (The
-  *    reference's binary-COPY fast path, O14 `db.rs:242-244`, needs
-  *    pgjdbc's CopyManager — a runtime-classpath upgrade point, not
-  *    implemented here since this environment ships no JDBC driver.)
-  *    Each partition writes its own connection — the distributed form
-  *    of the reference's per-flush connection (quirk Q10 becomes the
-  *    correct pattern once writes are parallel).
+  *  - JDBC is the relational sink over plain `java.sql`, with zero
+  *    compile-time JDBC deps: a postgres connection takes the
+  *    reference's binary COPY (O14, `db.rs:242-244`, reached
+  *    reflectively through pgjdbc's CopyManager — [[PgBinaryCopy]]),
+  *    any other driver batched INSERTs. Each partition writes its own
+  *    connection — the distributed form of the reference's per-flush
+  *    connection (quirk Q10 becomes the correct pattern once writes
+  *    are parallel).
   */
 object Sinks {
 
@@ -143,39 +142,28 @@ object Sinks {
       .saveAsTable(table)
 
   final case class JdbcConfig(url: String, user: String, password: String,
-      batchSize: Int = 10000, copyFormat: String = "binary") {
-    // fail fast on typos ("Binary", "BINARY") — a silent fallback
-    // would change the wire format instead of surfacing the mistake
-    require(copyFormat == "binary" || copyFormat == "csv",
-      s"copyFormat must be 'binary' or 'csv', got '$copyFormat'")
-  }
+      batchSize: Int = 10000)
 
   /** Relational sink. Executors open their own connections (one per
-    * partition) and stream `batchSize`-row batches — the reference's
-    * 10k-row flush (O13, `db.rs:18-20`) distributed. Uses postgres
-    * COPY when the driver is available (BINARY by default — the
-    * reference's wire format, `db.rs:242-244`; CSV via
-    * `copyFormat = "csv"`), batched INSERT otherwise.
+    * partition). The path follows from what the partition can see: a
+    * postgres connection with a schema [[PgBinaryCopy.supports]]
+    * streams through binary COPY — the reference's wire format,
+    * `db.rs:242-244`, no per-row round trips; anything else (another
+    * driver, or a type binary COPY cannot encode) takes batched INSERTs
+    * of `batchSize` rows — the reference's 10k-row flush (O13,
+    * `db.rs:18-20`) distributed.
     */
   def writeJdbc(df: DataFrame, table: String, cfg: JdbcConfig): Unit = {
     val schema = df.schema
     val colNames = schema.fieldNames.toSeq
+    val binary = PgBinaryCopy.supports(schema)
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.nonEmpty) {
         val conn = DriverManager.getConnection(cfg.url, cfg.user, cfg.password)
         try {
-          if (PgCopy.isPostgres(conn)) {
-            // reference O14 fast path: stream the partition through
-            // COPY ... FROM STDIN — no per-row round trips. Binary is
-            // the reference's wire format but only covers the types it
-            // encodes (and string arrays assume a text[] column);
-            // schemas outside that set take CSV COPY, whose server-side
-            // input parser coerces (e.g. int -> bigint, text -> varchar[]).
-            if (cfg.copyFormat == "binary" && PgBinaryCopy.supports(schema))
-              PgBinaryCopy.copyIn(conn, table, colNames, schema, rows): Unit
-            else
-              PgCopy.copyIn(conn, table, colNames, rows): Unit
-          } else {
+          if (binary && PgBinaryCopy.isPostgres(conn))
+            PgBinaryCopy.copyIn(conn, table, colNames, schema, rows): Unit
+          else {
             conn.setAutoCommit(false)
             val placeholders = colNames.map(_ => "?").mkString(", ")
             val sql = s"""INSERT INTO $table (${colNames.mkString(", ")})
@@ -205,7 +193,7 @@ object Sinks {
                         case _: java.sql.SQLFeatureNotSupportedException |
                             _: LinkageError =>
                           arraysSupported = false
-                          ps.setString(i + 1, PgCopy.arrayLiteral(seq))
+                          ps.setString(i + 1, arrayLiteral(seq))
                         // other SQLExceptions (older SQLite/H2 throw
                         // plain SQLException here; but so does a dead
                         // connection): degrade THIS binding only — a
@@ -214,9 +202,9 @@ object Sinks {
                         // here per row instead of misclassifying a
                         // transient fault permanently
                         case _: java.sql.SQLException =>
-                          ps.setString(i + 1, PgCopy.arrayLiteral(seq))
+                          ps.setString(i + 1, arrayLiteral(seq))
                       }
-                    } else ps.setString(i + 1, PgCopy.arrayLiteral(seq))
+                    } else ps.setString(i + 1, arrayLiteral(seq))
                   case v => ps.setObject(i + 1, v)
                 }
                 i += 1
@@ -230,6 +218,16 @@ object Sinks {
       }
     }
   }
+
+  /** Postgres array-literal text form of a Seq — the INSERT path's
+    * encoding for an array column on an engine without SQL ARRAY. */
+  def arrayLiteral(seq: scala.collection.Seq[_]): String =
+    seq.map {
+      case null => "NULL"
+      case e =>
+        val s = e.toString
+        "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    }.mkString("{", ",", "}")
 
   /** Streaming → relational bridge: land each micro-batch through the
     * same partition-streamed [[writeJdbc]] path. foreachBatch is the

@@ -1,5 +1,7 @@
 package graft
 
+import graft.TestDirs.withTempDir
+import graft.schemas.Discogs
 import graft.sources.{PgBinaryCopy, Sinks}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,20 +21,21 @@ class CopySinkE2ESpec extends AnyFunSuite {
   private def res(name: String): String =
     getClass.getResource("/" + name).getPath
 
-  private def withTempDir[A](prefix: String)(f: String => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
-    try f(dir.toString) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
-
-  test("CLI --copy-mode=binary streams exact COPY BINARY frames") {
+  test("CLI streams exact COPY BINARY frames to a postgres target") {
+    // every declared Discogs table is binary-encodable, so a postgres
+    // target never falls back to INSERT for the CLI's tables
+    Seq(Discogs.releaseSchema, Discogs.releaseLabelSchema,
+      Discogs.releaseVideoSchema, Discogs.artistSchema, Discogs.labelSchema,
+      Discogs.masterSchema, Discogs.masterArtistSchema)
+      .foreach(s => assert(PgBinaryCopy.supports(s), s.catalogString))
     FakePg.registered
     FakePg.drainCaptured() // isolate from any earlier capture
-    withTempDir("graft-cli-bin") { out =>
+    withTempDir("graft-cli-bin") { dir =>
+      val out = dir.toString
       DiscogsLoad.run(DiscogsLoad.Opts(
         files = Seq(res("labels.xml.gz")),
         out = out,
-        dbUrl = Some("jdbc:postgresql://localhost:5432/graft_fake"),
-        copyMode = "binary"), spark)
+        dbUrl = Some("jdbc:postgresql://localhost:5432/graft_fake")), spark)
       val caps = FakePg.drainCaptured()
       assert(caps.nonEmpty, "no COPY stream reached the fake endpoint")
       // every stream took the reference's wire format, named the table,
@@ -58,36 +61,6 @@ class CopySinkE2ESpec extends AnyFunSuite {
       assert(want.nonEmpty, "fixture produced no label rows")
       assert(got == want,
         s"captured ${got.values.sum} tuples != expected ${want.values.sum}")
-    }
-  }
-
-  test("CLI --copy-mode=csv routes the same pipeline through CSV COPY") {
-    FakePg.registered
-    FakePg.drainCaptured()
-    withTempDir("graft-cli-csv") { out =>
-      DiscogsLoad.run(DiscogsLoad.Opts(
-        files = Seq(res("labels.xml.gz")),
-        out = out,
-        dbUrl = Some("jdbc:postgresql://localhost:5432/graft_fake"),
-        copyMode = "csv"), spark)
-      val caps = FakePg.drainCaptured()
-      assert(caps.nonEmpty)
-      caps.foreach(c => assert(c.sql.contains("FROM STDIN WITH (FORMAT csv)"), c.sql))
-      val nRows = spark.read.parquet(s"$out/label").count()
-      // record count = newlines OUTSIDE quoted fields (fixture profile
-      // text embeds newlines, which COPY CSV carries inside quotes;
-      // PgCopySpec covers the quoting rules themselves)
-      def records(s: String): Long = {
-        var inQuotes = false; var n = 0L
-        s.foreach {
-          case '"' => inQuotes = !inQuotes
-          case '\n' if !inQuotes => n += 1
-          case _ => ()
-        }
-        n
-      }
-      val lines = caps.map(c => records(new String(c.bytes, "UTF-8"))).sum
-      assert(lines == nRows, s"csv records $lines != rows $nRows")
     }
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestDirs.withTempDir
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -248,46 +249,50 @@ class DedupSpec extends AnyFunSuite {
           "shuffles that matches nobody in this corpus at all", "en", "src0", 100L),
           Row(60L, "another unrelated document talking about parquet " +
             "footers and column pruning exclusively", "en", "src0", 90L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-anchor").toString
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def pairsOf(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Long] =
-      df.as[(Long, Long, Long)].collect()
-        .map { case (a, b, n) => (a, b) -> n }.toMap
-    val exact = pairsOf(operators.TextAnalysis.winnowPairs(spark, dir))
-    CacheScope.releaseAll()
-    val capped = pairsOf(
-      operators.TextAnalysis.winnowPairsAnchored(spark, dir, 2))
-    CacheScope.releaseAll()
-    val wide = pairsOf(
-      operators.TextAnalysis.winnowPairsAnchored(spark, dir,
-        operators.TextAnalysis.T05AnchorC))
-    CacheScope.releaseAll()
-    assert(exact.size == 15, s"family should form all 15 pairs, got $exact")
-    // cap ABOVE every df: anchored build is the exact build, verbatim
-    assert(wide == exact)
-    // cap BELOW the family size: a subset anchored at the lowest ids,
-    // with exact counts on every reported pair
-    assert(capped.keySet == exact.keySet.filter { case (a, _) => a <= 2 })
-    capped.foreach { case (k, n) => assert(n == exact(k),
-      s"pair $k count $n != exact ${exact(k)}") }
-    // family completeness: every doc in the exact listing still
-    // appears in the capped one (as either side)
-    val docsOf = (m: Map[(Long, Long), Long]) =>
-      m.keySet.flatMap { case (a, b) => Set(a, b) }
-    assert(docsOf(capped) == docsOf(exact))
+    withTempDir("graft-anchor") { tmp =>
+      val dir = tmp.toString
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      def pairsOf(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Long] =
+        df.as[(Long, Long, Long)].collect()
+          .map { case (a, b, n) => (a, b) -> n }.toMap
+      val exact = pairsOf(operators.TextAnalysis.winnowPairs(spark, dir))
+      CacheScope.releaseAll()
+      val capped = pairsOf(
+        operators.TextAnalysis.winnowPairsAnchored(spark, dir, 2))
+      CacheScope.releaseAll()
+      val wide = pairsOf(
+        operators.TextAnalysis.winnowPairsAnchored(spark, dir,
+          operators.TextAnalysis.T05AnchorC))
+      CacheScope.releaseAll()
+      assert(exact.size == 15, s"family should form all 15 pairs, got $exact")
+      // cap ABOVE every df: anchored build is the exact build, verbatim
+      assert(wide == exact)
+      // cap BELOW the family size: a subset anchored at the lowest ids,
+      // with exact counts on every reported pair
+      assert(capped.keySet == exact.keySet.filter { case (a, _) => a <= 2 })
+      capped.foreach { case (k, n) => assert(n == exact(k),
+        s"pair $k count $n != exact ${exact(k)}") }
+      // family completeness: every doc in the exact listing still
+      // appears in the capped one (as either side)
+      val docsOf = (m: Map[(Long, Long), Long]) =>
+        m.keySet.flatMap { case (a, b) => Set(a, b) }
+      assert(docsOf(capped) == docsOf(exact))
+    }
   }
 
   test("winnowPairsWriter round-trips the full listing through parquet") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-winnow").toString
-    val n = operators.TextAnalysis.winnowPairsWriter(spark, sfDir, out)
-    val back = spark.read.parquet(out)
-      .as[(Long, Long, Long)].collect().toSet
-    val want = operators.TextAnalysis.winnowPairs(spark, sfDir)
-      .as[(Long, Long, Long)].collect().toSet
-    CacheScope.releaseAll()
-    assert(n == want.size.toLong && back == want)
+    withTempDir("graft-winnow") { tmp =>
+      val out = tmp.toString
+      val n = operators.TextAnalysis.winnowPairsWriter(spark, sfDir, out)
+      val back = spark.read.parquet(out)
+        .as[(Long, Long, Long)].collect().toSet
+      val want = operators.TextAnalysis.winnowPairs(spark, sfDir)
+        .as[(Long, Long, Long)].collect().toSet
+      CacheScope.releaseAll()
+      assert(n == want.size.toLong && back == want)
+    }
   }
 
   test("d02 verified pairs are a subset of brute-force shingle-Jaccard truth") {
@@ -561,26 +566,22 @@ class DedupSpec extends AnyFunSuite {
     // reliable checkpoint(dir) (files survive executor loss) — the
     // cluster deployment mode. Same labeling must come out, and the
     // cut must actually have written checkpoint files under the dir.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
-    spark.conf.set("spark.graft.checkpointDir", dir.getAbsolutePath)
-    try {
-      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-      val got = operators.Dedup.dupClusters(pairs, 0L) // force distributed tier
-        .as[(Long, Long)].collect().toSet
-      assert(got == Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-        10L -> 10L, 11L -> 10L))
-      def files(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-      assert(files(dir).exists(_.getName.startsWith("part-")),
-        "no reliable checkpoint files written under spark.graft.checkpointDir")
-    } finally {
-      spark.conf.unset("spark.graft.checkpointDir")
-      graft.CacheScope.releaseAll()
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
+    withTempDir("graft-ckpt") { dir =>
+      spark.conf.set("spark.graft.checkpointDir", dir.getAbsolutePath)
+      try {
+        val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
+        val got = operators.Dedup.dupClusters(pairs, 0L) // force distributed tier
+          .as[(Long, Long)].collect().toSet
+        assert(got == Set(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+          10L -> 10L, 11L -> 10L))
+        def files(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
+        assert(files(dir).exists(_.getName.startsWith("part-")),
+          "no reliable checkpoint files written under spark.graft.checkpointDir")
+      } finally {
+        spark.conf.unset("spark.graft.checkpointDir")
+        graft.CacheScope.releaseAll()
       }
-      rm(dir)
     }
   }
 

@@ -14,12 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
 // @Slow: excluded from the driver fast lane (`sbt test`; see
 // build.sbt) — all-queries degenerate-input sweep (~40 s); run with the full suite: `sbt "testOnly *"`
 @org.scalatest.tags.Slow
-class DegenerateInputSpec extends AnyFunSuite {
+class DegenerateInputSpec extends AnyFunSuite with SuiteTempDir {
 
   lazy val spark = TestSpark.spark
 
   private lazy val degDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-degen").toString
+    val dir = suiteTempDir("graft-degen").toString
     val evSchema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", TimestampType),
       StructField("user_id", LongType), StructField("event_type", StringType),

@@ -19,12 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
 // @Slow: excluded from the driver fast lane (`sbt test`; see
 // build.sbt) — all-queries dirty-input sweep (~1 min); run with the full suite: `sbt "testOnly *"`
 @org.scalatest.tags.Slow
-class DirtyInputSpec extends AnyFunSuite {
+class DirtyInputSpec extends AnyFunSuite with SuiteTempDir {
 
   lazy val spark = TestSpark.spark
 
   private lazy val dirtyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dirty").toString
+    val dir = suiteTempDir("graft-dirty").toString
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),

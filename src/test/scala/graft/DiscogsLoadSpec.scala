@@ -1,7 +1,7 @@
 package graft
 
+import graft.TestDirs.withTempDir
 import graft.sources.DiscogsXml
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -22,11 +22,6 @@ class DiscogsLoadSpec extends AnyFunSuite {
     "masters.xml.gz").map(res)
   private val tableNames = Seq("release", "release_label", "release_video",
     "artist", "label", "master", "master_artist")
-
-  private def withTempDir[A](prefix: String)(f: File => A): A = {
-    val dir = Files.createTempDirectory(prefix).toFile
-    try f(dir) finally FileUtils.deleteDirectory(dir)
-  }
 
   /** A second releases dump: ids 8 and 9 again with other content (two
     * monthly snapshots keep both copies), and id 500 twice inside the

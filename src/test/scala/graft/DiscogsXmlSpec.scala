@@ -1,8 +1,12 @@
 package graft
 
+import graft.TestDirs.withTempDir
 import graft.sources.DiscogsXml
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.io.File
+import java.nio.file.Files
 
 /** Parity tests on the reference's truncated real dump fixtures
   * (FIXTURES.md §3 golden expectations — declared semantics, with the
@@ -12,10 +16,20 @@ class DiscogsXmlSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def res(name: String): String = getClass.getResource(s"/$name").getPath
 
-  private def withTempDir[A](prefix: String)(f: java.nio.file.Path => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try f(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
-  }
+  private val fixtures = Seq("releases.xml.gz", "artists.xml.gz",
+    "labels.xml.gz", "masters.xml.gz").map(res)
+
+  /** The tables of one dump file, by name. */
+  private def load(path: String): Map[String, DataFrame] =
+    DiscogsXml.loadAll(spark, Seq(path))
+
+  /** `xml` written to `name` inside a scratch dir, then `f` on its path. */
+  private def withXml[A](name: String, xml: String)(f: String => A): A =
+    withTempDir("graft-xml") { dir =>
+      val file = new File(dir, name)
+      Files.writeString(file.toPath, xml)
+      f(file.getPath)
+    }
 
   test("detectEntity dispatches on root element, plain and gz") {
     assert(DiscogsXml.detectEntity(res("releases.xml")) == "releases")
@@ -25,8 +39,7 @@ class DiscogsXmlSpec extends AnyFunSuite {
   }
 
   test("releases: 3 rows with declared-schema fields") {
-    val t = DiscogsXml.readReleases(spark, res("releases.xml.gz"))
-    val rel = t.release.collect().map(r => r.getInt(0) -> r).toMap
+    val rel = load(res("releases.xml.gz"))("release").collect().map(r => r.getInt(0) -> r).toMap
     assert(rel.keySet == Set(8, 9, 10))
     val r8 = rel(8)
     assert(r8.getString(2) == "Spreading Outward EP")
@@ -40,8 +53,7 @@ class DiscogsXmlSpec extends AnyFunSuite {
   }
 
   test("release_label: all 4 fan-out rows (reference Q5 would drop 2)") {
-    val t = DiscogsXml.readReleases(spark, res("releases.xml.gz"))
-    val rl = t.releaseLabel.collect()
+    val rl = load(res("releases.xml.gz"))("release_label").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getInt(3)))
     assert(rl.length == 4)
     assert(rl.contains((8, "Deep4Life", "D4L12004", 9)))
@@ -49,8 +61,7 @@ class DiscogsXmlSpec extends AnyFunSuite {
   }
 
   test("release_video: 26 rows, titles populated (reference Q6 writes '')") {
-    val t = DiscogsXml.readReleases(spark, res("releases.xml.gz"))
-    val rv = t.releaseVideo.collect()
+    val rv = load(res("releases.xml.gz"))("release_video").collect()
     assert(rv.length == 26)
     val r8 = rv.filter(_.getInt(0) == 8).map(v => (v.getInt(1), v.getString(3)))
     assert(r8.map(_._1).sorted.toSeq == Seq(395, 440, 450))
@@ -58,8 +69,7 @@ class DiscogsXmlSpec extends AnyFunSuite {
   }
 
   test("artists: 4 rows; aliases/name_variations correct (vs Q2/Q3)") {
-    val a = DiscogsXml.readArtists(spark, res("artists.xml.gz"))
-    val m = a.collect().map(r => r.getInt(0) -> r).toMap
+    val m = load(res("artists.xml.gz"))("artist").collect().map(r => r.getInt(0) -> r).toMap
     assert(m.keySet == Set(1, 2, 3, 4))
     val a1 = m(1)
     assert(a1.getString(1) == "The Persuader")
@@ -72,8 +82,7 @@ class DiscogsXmlSpec extends AnyFunSuite {
   }
 
   test("labels: 4 rows; entity unescape + multiline text") {
-    val l = DiscogsXml.readLabels(spark, res("labels.xml.gz"))
-    val m = l.collect().map(r => r.getInt(0) -> r).toMap
+    val m = load(res("labels.xml.gz"))("label").collect().map(r => r.getInt(0) -> r).toMap
     assert(m.keySet == Set(1, 2, 3, 4))
     assert(m(1).getString(1) == "Planet E")
     assert(m(1).getSeq[String](6).length == 13)
@@ -82,8 +91,7 @@ class DiscogsXmlSpec extends AnyFunSuite {
   }
 
   test("masters: 3 rows with year/genres/styles (reference Q9 zeroes them)") {
-    val t = DiscogsXml.readMasters(spark, res("masters.xml.gz"))
-    val m = t.master.collect().map(r => r.getInt(0) -> r).toMap
+    val m = load(res("masters.xml.gz"))("master").collect().map(r => r.getInt(0) -> r).toMap
     assert(m.keySet == Set(113, 114, 115))
     val m113 = m(113)
     assert(m113.getString(1) == "Moments In Time")
@@ -94,21 +102,20 @@ class DiscogsXmlSpec extends AnyFunSuite {
   }
 
   test("master_artist: one row per <artist> incl. (3225, 113)") {
-    val t = DiscogsXml.readMasters(spark, res("masters.xml.gz"))
-    val ma = t.masterArtist.collect()
+    val ma = load(res("masters.xml.gz"))("master_artist").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getString(2), r.getString(3), r.getString(4)))
     assert(ma.length == 3)
     assert(ma.contains((3225, 113, "Vince Watson", "", "")))
   }
 
   test("gz and plain inputs produce identical DataFrames") {
-    val gz = DiscogsXml.readArtists(spark, res("artists.xml.gz")).collect().toSet
-    val plain = DiscogsXml.readArtists(spark, res("artists.xml")).collect().toSet
+    val gz = load(res("artists.xml.gz"))("artist").collect().toSet
+    val plain = load(res("artists.xml"))("artist").collect().toSet
     assert(gz == plain)
   }
 
   test("dedup idempotence: loading the same file twice yields same ids") {
-    val once = DiscogsXml.readLabels(spark, res("labels.xml"))
+    val once = load(res("labels.xml"))("label")
     val twiceDf = DiscogsXml.loadAll(spark,
       Seq(res("labels.xml"), res("labels.xml.gz")))("label")
     // union of two identical monthly dumps, then first-wins per id
@@ -135,14 +142,14 @@ class DiscogsXmlSpec extends AnyFunSuite {
         |  </release>
         |</releases>
         |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("dup-releases", ".xml")
-    java.nio.file.Files.writeString(f, xml)
-    val t = DiscogsXml.readReleases(spark, f.toString)
-    assert(t.release.count() == 1)
-    assert(t.release.first().getString(2) == "First")
-    val labels = t.releaseLabel.collect().map(_.getString(1))
-    assert(labels.toSeq == Seq("KeepMe")) // duplicate parent's child dropped
-    assert(t.releaseVideo.count() == 0) // video belonged to the dropped copy
+    withXml("dup-releases.xml", xml) { f =>
+      val t = load(f)
+      assert(t("release").count() == 1)
+      assert(t("release").first().getString(2) == "First")
+      val labels = t("release_label").collect().map(_.getString(1))
+      assert(labels.toSeq == Seq("KeepMe")) // duplicate parent's child dropped
+      assert(t("release_video").count() == 0) // video belonged to the dropped copy
+    }
   }
 
   test("malformed records become counted rejects, not silent null rows") {
@@ -158,17 +165,17 @@ class DiscogsXmlSpec extends AnyFunSuite {
         |  <release id="2" status="Accepted"><title>Good B</title></release>
         |</releases>
         |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("corrupt-releases", ".xml")
-    java.nio.file.Files.writeString(f, xml)
-    val t = DiscogsXml.readReleases(spark, f.toString)
-    assert(t.release.count() == 2)
-    assert(t.release.collect().map(_.getInt(0)).toSet == Set(1, 2))
-    // no null-id row survived into the table
-    assert(t.release.filter("id IS NULL").count() == 0)
-    val rej = DiscogsXml.rejects(spark, f.toString)
-      .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSet
-    // both rejects are inspectable: reason + the raw id that failed
-    assert(rej == Set(("null_id", Some("oops")), ("null_id", None)))
+    withXml("corrupt-releases.xml", xml) { f =>
+      val release = load(f)("release")
+      assert(release.count() == 2)
+      assert(release.collect().map(_.getInt(0)).toSet == Set(1, 2))
+      // no null-id row survived into the table
+      assert(release.filter("id IS NULL").count() == 0)
+      val rej = DiscogsXml.rejects(spark, f)
+        .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSet
+      // both rejects are inspectable: reason + the raw id that failed
+      assert(rej == Set(("null_id", Some("oops")), ("null_id", None)))
+    }
   }
 
   test("element-id entities get the same reject triage as attribute ids") {
@@ -182,13 +189,12 @@ class DiscogsXmlSpec extends AnyFunSuite {
         |  <artist><id>xyz</id><name>Bad id</name></artist>
         |</artists>
         |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("corrupt-artists", ".xml")
-    java.nio.file.Files.writeString(f, xml)
-    val a = DiscogsXml.readArtists(spark, f.toString)
-    assert(a.collect().map(_.getInt(0)).toSeq == Seq(1))
-    val rej = DiscogsXml.rejects(spark, f.toString)
-      .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSet
-    assert(rej == Set(("null_id", Some("xyz"))))
+    withXml("corrupt-artists.xml", xml) { f =>
+      assert(load(f)("artist").collect().map(_.getInt(0)).toSeq == Seq(1))
+      val rej = DiscogsXml.rejects(spark, f)
+        .collect().map(r => (r.getString(0), Option(r.getString(1)))).toSet
+      assert(rej == Set(("null_id", Some("xyz"))))
+    }
   }
 
   test("multi-file first-wins follows file order, not partition size") {
@@ -198,14 +204,16 @@ class DiscogsXmlSpec extends AnyFunSuite {
     withTempDir("multifile") { dir =>
       def release(id: Int, title: String) =
         s"""  <release id="$id" status="Accepted"><title>$title</title></release>"""
-      java.nio.file.Files.writeString(dir.resolve("a.xml"),
+      Files.writeString(new File(dir, "a.xml").toPath,
         s"""<releases>\n${release(1, "FromA")}\n</releases>\n""")
       val padding = (100 to 160).map(i => release(i, s"Pad $i")).mkString("\n")
-      java.nio.file.Files.writeString(dir.resolve("b.xml"),
+      Files.writeString(new File(dir, "b.xml").toPath,
         s"""<releases>\n${release(1, "FromB")}\n$padding\n</releases>\n""")
-      val t = DiscogsXml.readReleases(spark, dir.toString)
-      assert(t.release.filter("id = 1").first().getString(2) == "FromA")
-      assert(t.release.count() == 62) // 1 survivor + 61 padding
+      // the directory is one logical dump: first-wins across its files
+      val rel = DiscogsXml.readGroup(spark, "releases", Seq(dir.toString))
+        .tables.toMap.apply("release")
+      assert(rel.filter("id = 1").first().getString(2) == "FromA")
+      assert(rel.count() == 62) // 1 survivor + 61 padding
     }
   }
 
@@ -221,66 +229,43 @@ class DiscogsXmlSpec extends AnyFunSuite {
         |  <release id="7" status="Accepted"><title>Duplicate</title></release>
         |</releases>
         |""".stripMargin
-    val f = java.nio.file.Files.createTempFile("restage-releases", ".xml")
-    java.nio.file.Files.writeString(f, xml)
-    withTempDir("restage-out") { out =>
-      val staged = DiscogsXml.restage(spark, f.toString, out.toString, partitions = 3)
-      val direct = DiscogsXml.readReleases(spark, f.toString).release
-      val viaStage = DiscogsXml.readReleasesStaged(spark, staged).release
-      assert(viaStage.schema == direct.schema)
-      assert(viaStage.collect().toSet == direct.collect().toSet)
-      assert(viaStage.filter("id = 7").first().getString(2) == "First")
-      // gz fixture round-trips through restage for the other entities too
-      val aStaged = DiscogsXml.restage(spark, res("artists.xml.gz"), out.toString)
-      assert(DiscogsXml.readArtistsStaged(spark, aStaged).collect().toSet ==
-        DiscogsXml.readArtists(spark, res("artists.xml.gz")).collect().toSet)
-    }
-  }
-
-  test("loadAllStaged over re-staged dumps matches direct loadAll") {
-    withTempDir("staged-all") { out =>
-      val staged = Seq(res("releases.xml.gz"), res("artists.xml.gz"),
-        res("labels.xml.gz"), res("masters.xml.gz")).zipWithIndex.map {
-        case (f, i) => DiscogsXml.restage(spark, f, s"$out/d$i")
-      }
-      val viaStage = DiscogsXml.loadAllStaged(spark, staged)
-      val direct = DiscogsXml.loadAll(spark, Seq(
-        res("releases.xml.gz"), res("artists.xml.gz"),
-        res("labels.xml.gz"), res("masters.xml.gz")))
-      assert(viaStage.keySet == direct.keySet)
-      viaStage.keySet.foreach { t =>
-        assert(viaStage(t).collect().toSet == direct(t).collect().toSet, s"table $t")
+    def staged(entity: String, path: String) =
+      DiscogsXml.readStagedGroup(spark, entity, Seq(path)).tables.toMap
+    withXml("restage-releases.xml", xml) { f =>
+      withTempDir("restage-out") { out =>
+        val stagedPath = DiscogsXml.restage(spark, f, out.toString, partitions = 3)
+        val direct = load(f)("release")
+        val viaStage = staged("releases", stagedPath)("release")
+        assert(viaStage.schema == direct.schema)
+        assert(viaStage.collect().toSet == direct.collect().toSet)
+        assert(viaStage.filter("id = 7").first().getString(2) == "First")
+        // gz fixture round-trips through restage for the other entities too
+        val aStaged = DiscogsXml.restage(spark, res("artists.xml.gz"), out.toString)
+        assert(staged("artists", aStaged)("artist").collect().toSet ==
+          load(res("artists.xml.gz"))("artist").collect().toSet)
       }
     }
   }
 
   test("loadAll dispatches all four entities") {
-    val all = DiscogsXml.loadAll(spark, Seq(
-      res("releases.xml.gz"), res("artists.xml.gz"),
-      res("labels.xml.gz"), res("masters.xml.gz")))
+    val all = DiscogsXml.loadAll(spark, fixtures)
     assert(all.keySet == Set("release", "release_label", "release_video",
       "artist", "label", "master", "master_artist"))
     assert(all("release").count() == 3)
     assert(all("artist").count() == 4)
   }
 
-  test("typed Dataset accessors round-trip through case-class encoders") {
-    val artists = DiscogsXml.readArtistsTyped(spark, res("artists.xml.gz"))
-      .collect().map(a => a.id -> a).toMap
-    assert(artists(1).name == "The Persuader")
-    assert(artists(1).aliases.length == 7)
-    assert(artists(2).members == Seq("Alexi Delano", "Cari Lekebusch"))
-    val masters = DiscogsXml.readMastersTyped(spark, res("masters.xml.gz"))
-      .filter(_.year > 2000).collect()
-    assert(masters.map(_.id).sorted.toSeq == Seq(113, 115))
-  }
-
   test("output schemas match the declared FIXTURES §2 schemas") {
-    val t = DiscogsXml.readReleases(spark, res("releases.xml.gz"))
-    assert(t.release.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      graft.schemas.Discogs.releaseSchema.fields.map(f => (f.name, f.dataType)).toSeq)
-    val a = DiscogsXml.readArtists(spark, res("artists.xml.gz"))
-    assert(a.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-      graft.schemas.Discogs.artistSchema.fields.map(f => (f.name, f.dataType)).toSeq)
+    import graft.schemas.Discogs._
+    val declared = Map("release" -> releaseSchema,
+      "release_label" -> releaseLabelSchema, "release_video" -> releaseVideoSchema,
+      "artist" -> artistSchema, "label" -> labelSchema,
+      "master" -> masterSchema, "master_artist" -> masterArtistSchema)
+    val all = DiscogsXml.loadAll(spark, fixtures)
+    assert(all.keySet == declared.keySet)
+    declared.foreach { case (t, schema) =>
+      assert(all(t).schema.fields.map(f => (f.name, f.dataType)).toSeq ==
+        schema.fields.map(f => (f.name, f.dataType)).toSeq, s"table $t")
+    }
   }
 }

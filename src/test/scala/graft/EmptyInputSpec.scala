@@ -15,12 +15,12 @@ import org.scalatest.funsuite.AnyFunSuite
 // @Slow: excluded from the driver fast lane (`sbt test`; see
 // build.sbt) — all-queries empty-input sweep (~1 min); run with the full suite: `sbt "testOnly *"`
 @org.scalatest.tags.Slow
-class EmptyInputSpec extends AnyFunSuite {
+class EmptyInputSpec extends AnyFunSuite with SuiteTempDir {
 
   lazy val spark = TestSpark.spark
 
   private lazy val emptyDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    val dir = suiteTempDir("graft-empty").toString
     def write(name: String, schema: StructType): Unit =
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")

@@ -1,6 +1,6 @@
 package graft
 
-import java.io.{InputStream, Reader}
+import java.io.InputStream
 import java.lang.reflect.{InvocationHandler, Method, Proxy}
 import java.sql.Connection
 
@@ -31,22 +31,14 @@ object FakePg {
     out.result()
   }
 
-  /** Capturing CopyManager. Both overloads pgjdbc exposes and the
-    * writers reflect on: binary (InputStream) and csv (Reader). */
+  /** Capturing CopyManager: the `copyIn(String, InputStream)` overload
+    * pgjdbc exposes and the binary writer reflects on. */
   final class CopyApi {
     def copyIn(sql: String, in: InputStream): java.lang.Long = {
       val bytes = in.readAllBytes()
       captureQ.add(Captured(sql, bytes))
       java.lang.Long.valueOf(tupleFrames(bytes,
         failOnBadFraming = false).size.toLong)
-    }
-    def copyIn(sql: String, in: Reader): java.lang.Long = {
-      val sb = new StringBuilder
-      val buf = new Array[Char](8192)
-      var n = in.read(buf)
-      while (n >= 0) { sb.appendAll(buf, 0, n); n = in.read(buf) }
-      captureQ.add(Captured(sql, sb.toString.getBytes("UTF-8")))
-      java.lang.Long.valueOf(sb.toString.count(_ == '\n').toLong)
     }
   }
 
@@ -55,7 +47,7 @@ object FakePg {
     override def getCopyAPI: AnyRef = api
   }
 
-  /** java.sql.Connection proxy that passes [[graft.sources.PgCopy
+  /** java.sql.Connection proxy that passes [[graft.sources.PgBinaryCopy
     * .isPostgres]] and unwraps to the fake PGConnection. Anything the
     * COPY path doesn't call throws, so a behavior change in the writer
     * surfaces here instead of silently no-opping. */

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * detected and rebuilt — silently mis-serving from an old index is
   * the failure mode this store exists to prevent.
   */
-class IndexStoreSpec extends AnyFunSuite {
+class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
 
   lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
@@ -260,8 +260,7 @@ class IndexStoreSpec extends AnyFunSuite {
       import spark.implicits._
       val one = Seq((0L, Array.fill(64)(0.25f), 1)).toDF(
         "vec_id", "embedding", "label")
-      val tdir = java.nio.file.Files
-        .createTempDirectory("graft-tinycorpus").toString
+      val tdir = suiteTempDir("graft-tinycorpus").toString
       one.coalesce(1).write.mode("overwrite")
         .parquet(s"$tdir/embeddings.parquet")
       val (cents, asg, entries, graph) =

@@ -101,10 +101,10 @@ class PgBinaryCopySpec extends AnyFunSuite {
   }
 
   test("non-UTC JVM: binary timestamp matches the CSV/INSERT wall clock") {
-    // postgres `timestamp` is zoneless; Timestamp.toString (CSV COPY)
-    // and pgjdbc setObject (INSERT fallback) both bind the default-zone
-    // wall clock. The binary path must agree — an epoch-instant
-    // encoding would shift this value by -5h (EST) relative to them.
+    // postgres `timestamp` is zoneless; Timestamp.toString (its text
+    // form) and pgjdbc setObject (INSERT fallback) both carry the
+    // default-zone wall clock. The binary path must agree — an
+    // epoch-instant encoding would shift this value by -5h (EST).
     val schema = StructType(Seq(StructField("ts", TimestampType)))
     val tz = java.util.TimeZone.getDefault
     java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/New_York"))
@@ -140,5 +140,17 @@ class PgBinaryCopySpec extends AnyFunSuite {
       PgBinaryCopy.encodeRow(Row(Map("a" -> "b")), schema)
     }
     assert(e.getMessage.contains("unsupported type"))
+  }
+
+  test("isPostgres sees the test-scope PGConnection; non-pg connections refuse COPY") {
+    // the test classpath deliberately carries org.postgresql.PGConnection
+    // (see that trait's scaladoc) so CopySinkE2ESpec can drive the real
+    // COPY writer — on the production classpath (no pgjdbc dep) every
+    // connection answers false. What must hold everywhere: a
+    // non-postgres connection never routes into COPY.
+    val derby = java.sql.DriverManager
+      .getConnection("jdbc:derby:memory:pgcopyprobe;create=true")
+    try assert(!PgBinaryCopy.isPostgres(derby)) finally derby.close()
+    assert(PgBinaryCopy.isPostgres(FakePg.connection()))
   }
 }

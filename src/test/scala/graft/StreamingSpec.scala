@@ -13,13 +13,13 @@ import java.nio.file.{Files, Paths}
 // @Slow: excluded from the driver fast lane (`sbt test`; see
 // build.sbt) — streaming replay e2e (~4 min); run with the full suite: `sbt "testOnly *"`
 @org.scalatest.tags.Slow
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with SuiteTempDir {
 
   lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
 
   private def stageDir(): String = {
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = suiteTempDir("graft-stream").toString
     Files.copy(Paths.get(s"$sfDir/events.parquet"),
       Paths.get(s"$dir/events.parquet"))
     dir
@@ -30,7 +30,7 @@ class StreamingSpec extends AnyFunSuite {
     val all = Tables.documents(spark, sfDir)
     val corpus = all.filter(col("doc_id") % 17 =!= 0)
     // stage the d16 delivery slice as the arriving stream
-    val dir = Files.createTempDirectory("graft-docstream").toString
+    val dir = suiteTempDir("graft-docstream").toString
     all.filter(col("doc_id") % 17 === 0)
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
       .select("doc_id", "text", "lang", "source", "arrival")
@@ -142,7 +142,7 @@ class StreamingSpec extends AnyFunSuite {
     // in time, so derive an order stream FROM the events: every 50th
     // event becomes an "order" at its timestamp — same-user events in
     // the 24 h before it are guaranteed to exist
-    val odir = Files.createTempDirectory("graft-orders").toString
+    val odir = suiteTempDir("graft-orders").toString
     val pseudoOrders = Tables.events(spark, sfDir)
       .filter(col("event_id") % 50 === 0)
       .select(col("event_id").as("o_orderkey"),
@@ -173,8 +173,8 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-stream LEFT OUTER interval join == static left join, state evicted at watermark") {
     import spark.implicits._
-    val edir = Files.createTempDirectory("graft-loj-events").toString
-    val odir = Files.createTempDirectory("graft-loj-orders").toString
+    val edir = suiteTempDir("graft-loj-events").toString
+    val odir = suiteTempDir("graft-loj-orders").toString
     // orders derived from events (same trick as the inner-join test),
     // but every 3rd order is re-keyed to a user that produces no
     // events (negative custkey) so the left-outer null path has rows
@@ -308,7 +308,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming funnel advances across micro-batches") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-funnel").toString
+    val dir = suiteTempDir("graft-funnel").toString
     def write(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("append").parquet(s"$dir/$name")
@@ -373,7 +373,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming embedding-drift gate reports exactly batch s12, zero state") {
     val all = Tables.embeddings(spark, sfDir)
     val corpus = all.filter(col("vec_id") % 5 =!= 0)
-    val dir = Files.createTempDirectory("graft-driftstream").toString
+    val dir = suiteTempDir("graft-driftstream").toString
     all.filter(col("vec_id") % 5 === 0)
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
       .select(col("vec_id"), col("label"),
@@ -408,7 +408,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming token-drift gate reports exactly batch t28, zero state") {
     val all = Tables.documents(spark, sfDir)
     val corpus = all.filter(col("doc_id") % 17 =!= 0)
-    val dir = Files.createTempDirectory("graft-tokdriftstream").toString
+    val dir = suiteTempDir("graft-tokdriftstream").toString
     all.filter(col("doc_id") % 17 === 0)
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
       .select("doc_id", "text", "lang", "source", "arrival")
@@ -446,7 +446,7 @@ class StreamingSpec extends AnyFunSuite {
     val all = Tables.embeddings(spark, sfDir)
     val corpus = all.filter(col("vec_id") % 13 =!= 0)
     val delivery = all.filter(col("vec_id") % 13 === 0)
-    val dir = Files.createTempDirectory("graft-embstream").toString
+    val dir = suiteTempDir("graft-embstream").toString
     delivery
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
       .select(col("vec_id"), col("embedding").cast("array<double>"),
@@ -497,7 +497,7 @@ class StreamingSpec extends AnyFunSuite {
     val all = Tables.embeddings(spark, sfDir)
     // the query stream: s23/s25's own query set (%97 convention),
     // arriving as a delivery — answers must equal the batch path's
-    val dir = Files.createTempDirectory("graft-annserve").toString
+    val dir = suiteTempDir("graft-annserve").toString
     all.filter(col("vec_id") % 97 === 0 &&
         col("vec_id") < operators.Similarity.QueryIdBound)
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
@@ -550,7 +550,7 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
       .select(col("vec_id"), col("embedding").cast("array<double>"),
         col("arrival"))
-    val qdir = Files.createTempDirectory("graft-annrefresh").toString
+    val qdir = suiteTempDir("graft-annrefresh").toString
     queries.coalesce(1).write.mode("overwrite").parquet(qdir)
     def expectedFromArtifact(): Set[String] = {
       val (cents, asg, entries, graph) =
@@ -620,11 +620,11 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
       .select(col("vec_id"), col("embedding").cast("array<double>"),
         col("arrival"))
-    val qdir = Files.createTempDirectory("graft-anntomb").toString
+    val qdir = suiteTempDir("graft-anntomb").toString
     queries.coalesce(1).write.mode("overwrite").parquet(qdir)
     // the delete-set location does NOT exist yet: batch 1 must treat
     // the unreadable dir as "no deletes", not fail
-    val tdir = Files.createTempDirectory("graft-anntomb-meta").toString +
+    val tdir = suiteTempDir("graft-anntomb-meta").toString +
       "/deletes"
     val reports = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Array[org.apache.spark.sql.Row])]
@@ -685,7 +685,7 @@ class StreamingSpec extends AnyFunSuite {
     val qIds = e.filter(col("vec_id") % 97 === 0 &&
         col("vec_id") < operators.Similarity.QueryIdBound)
       .select(col("vec_id").as("q_id"))
-    val qdir = Files.createTempDirectory("graft-annfilter").toString
+    val qdir = suiteTempDir("graft-annfilter").toString
     e.filter(col("vec_id") % 97 === 0 &&
         col("vec_id") < operators.Similarity.QueryIdBound)
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
@@ -727,7 +727,7 @@ class StreamingSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
     // the query stream: s33's own query set (%97 convention)
-    val qdir = Files.createTempDirectory("graft-hybserve").toString
+    val qdir = suiteTempDir("graft-hybserve").toString
     e.filter(col("vec_id") % 97 === 0 &&
         col("vec_id") < operators.Similarity.QueryIdBound)
       .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
