@@ -140,4 +140,11 @@ object Discogs {
   val masterArtistSchema: StructType = s(
     f("artist_id", IntegerType), f("master_id", IntegerType),
     f("name", StringType), f("anv", StringType), f("role", StringType))
+
+  /** Every output table's schema, by table name. */
+  val tableSchemas: Map[String, StructType] = Map(
+    "release" -> releaseSchema, "release_label" -> releaseLabelSchema,
+    "release_video" -> releaseVideoSchema, "artist" -> artistSchema,
+    "label" -> labelSchema, "master" -> masterSchema,
+    "master_artist" -> masterArtistSchema)
 }

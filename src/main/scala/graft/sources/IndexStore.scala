@@ -435,7 +435,8 @@ object IndexStore {
     * the fingerprint — a knob change is a rebuild, never a stale
     * serve. A fingerprint hit with no catalog entry (a fresh session
     * over an existing warehouse) re-attaches the bucket spec via
-    * [[registerKnnGraph]] instead of rebuilding; an empty corpus never
+    * [[registerKnnGraph]] instead of rebuilding; a fingerprint hit
+    * whose table location is missing is a miss; an empty corpus never
     * persists. Same crash discipline as [[saveCellIndex]]: the prior
     * meta is deleted before the table overwrite and the new meta is
     * written last, so any mid-save state reads as a miss. */
@@ -454,9 +455,12 @@ object IndexStore {
     val metaDir = s"$root/knn_$safe"
     val fp = s"${corpusFingerprintMemo(standing)}_$params"
     if (fp.startsWith("0_")) return build(standing)
-    val hit = metaFp(readMeta(spark, metaDir)).contains(fp)
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val (wf, wp) = fs(spark, s"$wh/$table")
+    // the meta is only half the artifact: a hit whose table files are
+    // gone (a fresh warehouse, a dropped managed table) is a miss
+    val hit = metaFp(readMeta(spark, metaDir)).contains(fp) && wf.exists(wp)
     if (hit && !spark.catalog.tableExists(table)) {
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
       registerKnnGraph(spark, table, s"$wh/$table", buckets)
     } else if (!hit) {
       val (f, p) = fs(spark, s"$metaDir/_graft_meta")
@@ -468,8 +472,6 @@ object IndexStore {
       // an existing location, so drop the entry AND the location
       // (ours by construction: the graft_knn_ prefix + this key)
       spark.sql(s"DROP TABLE IF EXISTS $table")
-      val wh = spark.conf.get("spark.sql.warehouse.dir")
-      val (wf, wp) = fs(spark, s"$wh/$table")
       if (wf.exists(wp)) wf.delete(wp, true)
       saveKnnGraph(build(standing), table, buckets)
       writeMeta(spark, metaDir, fp)

@@ -221,6 +221,32 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
     } finally { IndexStore.root = prior }
   }
 
+  test("a kNN-graph meta hit whose table files are gone rebuilds") {
+    // the meta under IndexStore.root outlives the warehouse table (a
+    // fresh checkout, a dropped table): re-registering the missing
+    // location would fail with PATH_NOT_FOUND instead of rebuilding
+    val e = Tables.embeddings(spark, sfDir).filter(col("vec_id") % 4 === 0)
+    def build(c: org.apache.spark.sql.DataFrame) =
+      c.select(col("vec_id").as("src"), lit(1).as("rk"),
+        (col("vec_id") + 1).as("dst"), lit(0L).as("d2"))
+    val prior = IndexStore.root
+    try {
+      IndexStore.root = suiteTempDir("graft-knnlost").getPath
+      val first = rowSet(IndexStore.ensureKnnGraph(spark, "knnlost", e, "p",
+        build, buckets = 2))
+      val table = spark.catalog.listTables().collect().map(_.name)
+        .filter(_.endsWith("_knnlost"))
+      assert(table.length == 1, s"expected one knnlost table: ${table.toSeq}")
+      // a managed table: the drop deletes its files, the meta stays
+      spark.sql(s"DROP TABLE ${table.head}")
+      val again = rowSet(IndexStore.ensureKnnGraph(spark, "knnlost", e, "p",
+        build, buckets = 2))
+      assert(first == rowSet(build(e)), "the first build is wrong")
+      assert(again == first, "the rebuilt graph differs from the first")
+      spark.sql(s"DROP TABLE IF EXISTS ${table.head}")
+    } finally { IndexStore.root = prior }
+  }
+
   test("band index probe prunes to one bucket on an equality probe") {
     dropTable("band_idx_spec")
     val docs = Tables.documents(spark, sfDir)
