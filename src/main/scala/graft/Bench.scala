@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
-  * `SPARK_GRAFT_SF_DIR` at local[$SPARK_GRAFT_CPUS] and prints ONE
+  * `SPARK_GRAFT_SF_DIR` on [[Harness.session]] and prints ONE
   * JSON line with per-query wall seconds (the full-detail line, also
   * written to `$SPARK_GRAFT_BENCH_OUT` and BENCH_LOCAL.json), followed
   * by a COMPACT totals-only line sized for the driver's 2,000-char
@@ -11,10 +9,10 @@ import org.apache.spark.sql.SparkSession
   * tail-window line at any key width — r12's short-key line parsed
   * null at ~2,100 chars; the map lives in the out files).
   *
-  * A tiny warm-up query runs first (not reported) so JVM/codegen/
-  * parquet-footer warm-up cost doesn't land on whichever query happens
-  * to run first; queries then run in sorted name order for stable
-  * attribution across rounds.
+  * An untimed warm-up pass ([[Harness.warmUp]]) runs first so JVM/
+  * codegen/parquet-footer warm-up cost doesn't land on whichever query
+  * happens to run first; queries then run in sorted name order for
+  * stable attribution across rounds.
   */
 object Bench {
 
@@ -31,19 +29,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR, not WARN: benign WARNs (broadcast-size, plan-truncation)
-    // carry multi-line payloads that landed around round 1's JSON line
-    // and broke the driver's parse
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-bench")
 
     // PINNED measurement protocol (round 13 — BENCH walls were not
     // comparable across rounds before it; a semantics-only commit
@@ -64,61 +50,20 @@ object Bench {
     // Per-entry wall cap (round-14 measurement contract): the r13
     // 32-core driver run hit its outer timeout with ZERO per-query
     // output — Bench printed nothing between startup and the final
-    // JSON, so the kill point was unattributable. Each timed action
-    // now runs on a watchdogged thread inside a cancellable job group:
-    // past the cap the group is cancelled, the entry records its
-    // elapsed wall with a TIMEOUT marker on stderr, and the suite
-    // CONTINUES — a pathological entry costs one cap, not the run.
+    // JSON, so the kill point was unattributable. Each timed entry
+    // runs through `Harness.run`, which cancels it past the cap; the
+    // entry records its elapsed wall with a TIMEOUT marker on stderr,
+    // and the suite CONTINUES.
     val entryCap =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ENTRY_CAP_SEC", "180").toLong
-    // run fn(...).count() on a watchdogged thread; returns (sec, rows)
-    // with rows = -1 on failure, -2 on cap timeout
-    def capped(name: String, fn: (org.apache.spark.sql.SparkSession,
-        String) => org.apache.spark.sql.DataFrame, dir: String,
-        capSec: Long): (Double, Long) = {
-      @volatile var n = -1L
-      val t0 = System.nanoTime()
-      val th = new Thread(() => {
-        spark.sparkContext.setJobGroup(s"bench-$name", name,
-          interruptOnCancel = true)
-        try n = fn(spark, dir).count()
-        catch { case e: Throwable => // n stays -1
-          System.err.println(s"[bench] FAILED rep of $name: $e")
-        }
-      }, s"bench-$name")
-      th.setDaemon(true)
-      th.start()
-      th.join(capSec * 1000)
-      if (th.isAlive) {
-        System.err.println(s"[bench] TIMEOUT $name after ${capSec}s — cancelling")
-        try spark.sparkContext.cancelJobGroup(s"bench-$name")
-        catch { case _: Throwable => () }
-        th.interrupt()
-        th.join(30000)
-        n = -2L
-      }
-      ((System.nanoTime() - t0) / 1e9, n)
-    }
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     val loadStart = osBean.getSystemLoadAverage
-    for (root <- Seq(graft.sources.IndexStore.root, "/tmp/graft_index")
-        .distinct) {
-      try org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(root))
-      catch { case _: Throwable => () }
-    }
+    Harness.coldStores()
 
-    // warm-up: run every query once at the smallest SF so JVM/JIT/
-    // codegen/shuffle-infra warm-up cost doesn't land inside the timed
-    // runs (standard warm-up discipline; the timed SF data is
-    // untouched, and the warm-up SF's index keys are distinct from the
-    // timed SF's, so the stores stay cold for the timed entries)
-    val warmDir = "/root/testdata/sf0.001"
-    System.err.println(s"[bench] warm-up pass ($warmDir) starting")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      capped(s"warm-$name", fn, warmDir, math.min(entryCap, 90L))
-      CacheScope.releaseAll()
-    }
+    // warm-up: every query once at the smallest SF (its index keys are
+    // distinct from the timed SF's, so the stores stay cold)
+    System.err.println(s"[bench] warm-up pass (${Harness.WarmDir}) starting")
+    Harness.warmUp(spark, capSec = math.min(entryCap, 90L))
     System.err.println(s"[bench] warm-up done; timed suite ($sfDir, " +
       s"best-of-$repeats, cap ${entryCap}s/entry) starting")
 
@@ -126,12 +71,7 @@ object Bench {
     var qi = 0
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val (best, n) = foldReps((1 to repeats).map { _ =>
-        spark.catalog.clearCache() // intra-query persists don't carry over
-        val rep = capped(name, fn, sfDir, entryCap)
-        // post-consumption release of the query's persists + RDD-level
-        // checkpoint blocks (clearCache above cannot evict the latter)
-        CacheScope.releaseAll()
-        rep
+        Harness.run(spark, name, entryCap)(fn(spark, sfDir).count())
       })
       qi += 1
       // one UNBUFFERED stderr line per finished entry: if the outer
@@ -177,8 +117,7 @@ object Bench {
         System.err.println(s"[bench] restage failed: ${e.getMessage}"); (0L, 0.0, 0.0, 0.0)
       }
     val loadEnd = osBean.getSystemLoadAverage
-    val cores = Runtime.getRuntime.availableProcessors
-    val json = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","protocol":"cold-stores,best-of-$repeats","load_avg_start":${d3(loadStart)},"load_avg_end":${d3(loadEnd)},"cores":$cores,"ingest_records":$inRows,"ingest_sec":${d3(inSec)},"ingest_records_per_sec":${d0(inRate)},"ingest_records_per_sec_4files":${d0(parRate)},"restage_sec":${d3(stageSec)},"restaged_scan_records_per_sec":${d0(stagedRate)}}"""
+    val json = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","protocol":"cold-stores,best-of-$repeats","load_avg_start":${d3(loadStart)},"load_avg_end":${d3(loadEnd)},"cores":${Harness.cores},"ingest_records":$inRows,"ingest_sec":${d3(inSec)},"ingest_records_per_sec":${d0(inRate)},"ingest_records_per_sec_4files":${d0(parRate)},"restage_sec":${d3(stageSec)},"restaged_scan_records_per_sec":${d0(stagedRate)}}"""
     // stdout under sbt gets [info]-decorated and interleaved with Spark
     // log noise; a well-known file is the machine-readable channel
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench_out.json")

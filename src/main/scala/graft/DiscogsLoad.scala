@@ -62,15 +62,7 @@ object DiscogsLoad {
 
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args.toList)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("discogs-load")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("discogs-load")
     try run(opts, spark) finally spark.stop()
   }
 

@@ -12,27 +12,22 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-plandump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (n <- names) {
-      val txt =
-        try {
-          val df = SparkEntry.queries(n)(spark, sfDir)
-          df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-        } catch { case e: Throwable => s"ERROR: ${e}" }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
-        txt.getBytes("UTF-8"))
-      println(s"[plandump] wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
-      CacheScope.releaseAll(); spark.catalog.clearCache()
+      Harness.run(spark, n) {
+        val txt =
+          try {
+            val df = SparkEntry.queries(n)(spark, sfDir)
+            df.queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
+          } catch { case e: Throwable => s"ERROR: ${e}" }
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
+          txt.getBytes("UTF-8"))
+        println(s"[plandump] wrote $outDir/${n}_$suffix.txt (${txt.length} chars)")
+        0L
+      }
     }
     spark.stop()
   }

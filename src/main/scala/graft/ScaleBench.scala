@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Scale-growth bench: runs the full `SparkEntry.queries` suite at the
@@ -30,22 +29,12 @@ object ScaleBench {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val scaledDir = args.lift(1).getOrElse("/tmp/graft_scale/sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Harness.session("graft-scalebench")
     // SPARK_GRAFT_CHECKPOINT_DIR switches every CacheScope.cut from
     // localCheckpoint to reliable checkpoint(dir) — the multi-node
     // cluster mode — so the scale bench can measure that path too
-    val ckptDir = sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_DIR", "")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalebench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    val spark = (if (ckptDir.nonEmpty)
-      builder.config("spark.graft.checkpointDir", ckptDir) else builder)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
+      .foreach(spark.conf.set("spark.graft.checkpointDir", _))
 
     // generate the scaled SF if absent (idempotent marker: last table)
     val marker = new java.io.File(s"$scaledDir/embeddings.parquet")
@@ -54,30 +43,17 @@ object ScaleBench {
       ScaleGen.generate(spark, baseDir, scaledDir, factor)
     }
 
-    // warm-up pass (JIT/codegen/parquet footers), never reported
-    val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try fn(spark, warmDir).count() catch { case _: Throwable => () }
-      CacheScope.releaseAll()
-    }
+    Harness.warmUp(spark)
 
+    // uncapped: a growth ratio needs both walls whole
     def timeAt(dir: String): Seq[(String, Double, Long)] = {
       // COLD STORES before each SF pass (the pinned Bench protocol):
       // ratios must compare build-inclusive walls at BOTH factors —
       // a warm standing index at one SF and cold at the other would
       // fake a sub/super-linear serving entry
-      for (root <- Seq(graft.sources.IndexStore.root, "/tmp/graft_index")
-          .distinct) {
-        try org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(root))
-        catch { case _: Throwable => () }
-      }
+      Harness.coldStores()
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val n = try fn(spark, dir).count() catch { case _: Throwable => -1L }
-        val sec = (System.nanoTime() - t0) / 1e9
-        CacheScope.releaseAll()
+        val (sec, n) = Harness.run(spark, name)(fn(spark, dir).count())
         (name, sec, n)
       }
     }
@@ -89,16 +65,10 @@ object ScaleBench {
 
     // d09's distributed CC tier, which driver SFs never push past the
     // 5M-edge union-find ceiling: force it at the scaled SF
-    def timedDistCC(dir: String): (Double, Long) = {
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      val n = operators.Dedup.dupClusters(
+    def timedDistCC(dir: String): (Double, Long) =
+      Harness.run(spark, "x_d09_distributed_cc")(operators.Dedup.dupClusters(
         operators.Dedup.ngramJaccardPairs(Tables.documents(spark, dir))
-          .select(col("id_a"), col("id_b")), 0L).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      CacheScope.releaseAll()
-      (sec, n)
-    }
+          .select(col("id_a"), col("id_b")), 0L).count())
     val (ccBaseSec, ccBaseN) = timedDistCC(baseDir)
     val (ccScaledSec, ccScaledN) = timedDistCC(scaledDir)
 
@@ -110,7 +80,6 @@ object ScaleBench {
     // index build runs OUTSIDE the timer — the audit is the operator
     // under measurement.
     def timedSkewAudit(dir: String): (Double, Long) = {
-      spark.catalog.clearCache()
       val e = Tables.embeddings(spark, dir)
       val standing = e.filter(col("vec_id") % 5 =!= 0)
       val (cents0, asg0, _) = operators.Similarity.cellIndex(standing)
@@ -123,11 +92,8 @@ object ScaleBench {
       val skewed = e.filter(col("vec_id") % 5 === 0)
         .withColumn("embedding",
           org.apache.spark.sql.functions.typedLit(emb))
-      val t0 = System.nanoTime()
-      val n = operators.Similarity.indexHealth(cents, asg, skewed).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      CacheScope.releaseAll()
-      (sec, n)
+      Harness.run(spark, "x_s26_skewed_audit")(
+        operators.Similarity.indexHealth(cents, asg, skewed).count())
     }
     val (skBaseSec, skBaseN) = timedSkewAudit(baseDir)
     val (skScaledSec, skScaledN) = timedSkewAudit(scaledDir)

@@ -7,27 +7,12 @@ object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (n <- names) {
-      // one untimed warm-up at the smallest SF, like Bench
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
-      CacheScope.releaseAll(); spark.catalog.clearCache()
-      for (r <- 1 to reps) {
-        val t0 = System.nanoTime()
-        val rows = SparkEntry.queries(n)(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[timeone] $n rep$r: $sec%.2f s ($rows rows)")
-        CacheScope.releaseAll(); spark.catalog.clearCache()
-      }
+    val names = args.drop(2).toSeq
+    val spark = Harness.session("graft-timeone")
+    Harness.warmUp(spark, names)
+    for (n <- names; r <- 1 to reps) {
+      val (sec, rows) = Harness.run(spark, n)(SparkEntry.queries(n)(spark, sfDir).count())
+      println(f"[timeone] $n rep$r: $sec%.2f s ($rows rows)")
     }
     spark.stop()
   }

@@ -4,21 +4,30 @@ import graft.operators.DiscogsQueries._
 import graft.sources.DiscogsXml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY §2.3 query surface exercised on the fixture-loaded discogs
   * star schema. */
-class DiscogsQueriesSpec extends AnyFunSuite {
+class DiscogsQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark = TestSpark.spark
   private def res(name: String) = getClass.getResource(s"/$name").getPath
 
+  @volatile private var loaded = false
   private lazy val t: Map[String, DataFrame] = {
     val m = DiscogsXml.loadAll(spark, Seq(
       res("releases.xml.gz"), res("artists.xml.gz"),
       res("labels.xml.gz"), res("masters.xml.gz")))
+    loaded = true
     m.map { case (k, v) => k -> v.cache() }
   }
+
+  // the tables are cached in the shared test session: left there, any
+  // later suite's plan over the same fixture dumps reads these caches
+  // instead of its own scans
+  override def afterAll(): Unit =
+    try if (loaded) t.values.foreach(_.unpersist()) finally super.afterAll()
 
   test("point lookup by PK") {
     val r = releaseById(t("release"), 8).collect()
