@@ -76,8 +76,19 @@ object CacheScope {
   /** Register the checkpoint RDDs referenced by an already-built
     * DataFrame (e.g. the final round of an iterative loop). */
   def trackRddsOf(df: DataFrame): Unit =
+    rddsOf(df).foreach { r => tracked.add(() => { r.unpersist(false); () }) }
+
+  /** Unpersist the checkpoint RDDs of `df` now, without registering
+    * them — for an owner that bounds a [[cut]]'s lifetime itself (one
+    * load group; a [[releaseAll]] there would also free what other
+    * callers still read). The same post-consumption rule applies.
+    * Files of a reliable checkpoint stay, as with [[releaseAll]].
+    * Idempotent; never throws. */
+  def release(df: DataFrame): Unit =
+    rddsOf(df).foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
+
+  private def rddsOf(df: DataFrame) =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
-      .foreach { r => tracked.add(() => { r.unpersist(false); () }) }
 
   /** Unpersist every registered cache/checkpoint block. Call after the
     * consuming action; idempotent; never throws. */

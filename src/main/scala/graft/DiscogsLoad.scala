@@ -12,11 +12,11 @@ import scala.util.{Failure, Try}
   * Usage:
   *   discogs-load [--out DIR] [--batch-size N] [--db-url JDBC_URL]
   *     [--db-user U] [--db-password P] [--create-indexes]
-  *     [--partitions N] [--restage DIR] FILE...
+  *     [--restage DIR] FILE...
   *
   * Each FILE is a discogs dump (`.xml` or `.xml.gz`); entity type is
   * auto-detected from the root element (O2). Tables always land as
-  * clustered parquet under --out (engine-native sink); with --db-url
+  * key-sorted parquet under --out (engine-native sink); with --db-url
   * each is then loaded over JDBC from its landed parquet with
   * --batch-size-row batches, and --create-indexes runs the deferred
   * index DDL (O17) once every table is in. A postgres target takes the
@@ -27,11 +27,18 @@ import scala.util.{Failure, Try}
   * load side by side, one thread each (at most four, one per entity):
   * a gz dump parses as a single task, so four dumps keep four cores
   * busy. Inside a group the dump is parsed and first-wins-deduped once
-  * and its tables land one after another — a fan-out dump (releases,
-  * masters) persists its deduped raw rows for its 2-3 tables and drops
-  * them when the group ends (the reference writes all maps of a dump
-  * from one pass, `db.rs:55-97`); a single-table dump streams straight
-  * into the writer.
+  * and its tables land one after another (the reference writes all
+  * maps of a dump from one pass, `db.rs:55-97`). The dedup shuffle is
+  * the load's only shuffle: it hashes the rows by id, every table's
+  * key starts with that id, and each child row comes from one deduped
+  * parent row, so every table is already clustered and the sink only
+  * sorts. A single-table dump streams straight into the writer. A
+  * fan-out dump (releases, masters) cuts the lineage of its deduped
+  * raw rows once ([[CacheScope.cut]]) for its 2-3 tables and releases
+  * the cut when the group ends. A cut, not a persist: the cut runs
+  * eagerly under AQE, which sizes the dedup shuffle's partitions from
+  * the data, while a cached plan keeps `spark.sql.shuffle.partitions`
+  * partitions and would land every fan-out table in that many files.
   *
   * --restage DIR re-stages each group's gz dumps to splittable parquet
   * under DIR first (one single-stream parse each, paid once), then
@@ -43,8 +50,7 @@ object DiscogsLoad {
   final case class Opts(files: Seq[String] = Nil, out: String = "out",
       batchSize: Int = 10000, dbUrl: Option[String] = None,
       dbUser: String = "dev", dbPassword: String = "dev_pass",
-      createIndexes: Boolean = false, partitions: Option[Int] = None,
-      restageDir: Option[String] = None)
+      createIndexes: Boolean = false, restageDir: Option[String] = None)
 
   def parseArgs(args: List[String], o: Opts = Opts()): Opts = args match {
     case Nil => o
@@ -54,7 +60,6 @@ object DiscogsLoad {
     case "--db-user" :: v :: rest => parseArgs(rest, o.copy(dbUser = v))
     case "--db-password" :: v :: rest => parseArgs(rest, o.copy(dbPassword = v))
     case "--create-indexes" :: rest => parseArgs(rest, o.copy(createIndexes = true))
-    case "--partitions" :: v :: rest => parseArgs(rest, o.copy(partitions = Some(v.toInt)))
     case "--restage" :: v :: rest => parseArgs(rest, o.copy(restageDir = Some(v)))
     case f :: rest if !f.startsWith("--") => parseArgs(rest, o.copy(files = o.files :+ f))
     case bad :: _ => throw new IllegalArgumentException(s"unknown flag $bad")
@@ -80,20 +85,18 @@ object DiscogsLoad {
       opts.restageDir match {
         case Some(rd) =>
           DiscogsXml.readStagedGroup(spark, entity, files.map { f =>
-            DiscogsXml.restage(spark, f, s"$rd/d${opts.files.indexOf(f)}",
-              opts.partitions.getOrElse(0))
+            DiscogsXml.restage(spark, f, s"$rd/d${opts.files.indexOf(f)}")
           })
         case None => DiscogsXml.readGroup(spark, entity, files)
       }
 
     def load(entity: String, files: Seq[String]): Seq[String] = {
       val g = open(entity, files)
-      val shared = g.tables.size > 1
-      if (shared) g.raw.persist()
-      try g.tables.foreach { case (name, df) =>
-        val n = Sinks.writeParquet(df, name, opts.out, opts.partitions)
+      val cut = if (g.tables.size > 1) Some(CacheScope.cut(g.raw)) else None
+      try cut.fold(g)(c => g.copy(raw = c)).tables.foreach { case (name, df) =>
+        val n = Sinks.writeParquet(df, name, opts.out)
         println(s"[discogs-load] $name: $n rows -> ${opts.out}/$name")
-      } finally if (shared) g.raw.unpersist()
+      } finally cut.foreach(CacheScope.release)
       jdbc.foreach { cfg =>
         g.tables.foreach { case (name, _) =>
           Sinks.writeJdbc(spark.read.parquet(s"${opts.out}/$name"), name, cfg)

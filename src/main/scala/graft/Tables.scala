@@ -10,15 +10,36 @@ import org.apache.spark.sql.types._
   * All readers go through [[Tables.load]] so every query in the engine
   * benefits from the same scan behavior: explicit parquet source,
   * column pruning + predicate pushdown handled by Catalyst (never
-  * disable), and no schema inference beyond parquet footer metadata.
+  * disable), and the footer schema inferred once per table version.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Footer schemas by (files identity, nanosAsLong): inferring one is
+    * a Spark job (one task), paid by every read without a schema. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** The table's parquet, read with the schema inferred at its first
+    * load. The memo key is the table's physical identity
+    * ([[sources.IndexStore.filesIdentity]]), so a rewritten table is
+    * inferred again, plus `nanosAsLong`, which [[events]] sets and
+    * which turns a nanosecond timestamp into a long. A path that
+    * cannot be walked is read as before. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    scala.util.Try(sources.IndexStore.filesIdentity(spark, Seq(path)) +
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")).toOption
+      .fold(spark.read.parquet(path)) { key =>
+        val schema = Option(schemas.get(key)).getOrElse {
+          val inferred = spark.read.parquet(path).schema
+          schemas.put(key, inferred)
+          inferred
+        }
+        spark.read.schema(schema).parquet(path)
+      }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

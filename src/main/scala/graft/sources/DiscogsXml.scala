@@ -34,8 +34,16 @@ object DiscogsXml {
     * file deduped on its own, then UNION ALL — see [[loadAll]]) and the
     * tables derived from `raw`, in write order. A fan-out entity
     * (releases, masters) derives several tables from the same `raw`,
-    * so a caller that writes them all persists `raw` once first. */
-  final case class DumpGroup(raw: DataFrame, tables: Seq[(String, DataFrame)])
+    * so a caller that writes them all materializes `raw` once first
+    * and derives the tables from that copy (`copy(raw = ...)`). */
+  final case class DumpGroup(entity: String, raw: DataFrame) {
+    def tables: Seq[(String, DataFrame)] = entity match {
+      case "releases" => normalizeReleases(raw)
+      case "artists" => normalizeArtists(raw)
+      case "labels" => normalizeLabels(raw)
+      case "masters" => normalizeMasters(raw)
+    }
+  }
 
   private def str0(c: org.apache.spark.sql.Column) = coalesce(c, lit(""))
   private def int0(c: org.apache.spark.sql.Column) = coalesce(c, lit(0))
@@ -348,13 +356,6 @@ object DiscogsXml {
     group(entity, stagedPaths.map(spark.read.parquet(_).drop("__ord")))
   }
 
-  private def group(entity: String, raws: Seq[DataFrame]): DumpGroup = {
-    val raw = raws.reduce(_.unionByName(_))
-    DumpGroup(raw, entity match {
-      case "releases" => normalizeReleases(raw)
-      case "artists" => normalizeArtists(raw)
-      case "labels" => normalizeLabels(raw)
-      case "masters" => normalizeMasters(raw)
-    })
-  }
+  private def group(entity: String, raws: Seq[DataFrame]): DumpGroup =
+    DumpGroup(entity, raws.reduce(_.unionByName(_)))
 }

@@ -98,16 +98,10 @@ object IndexStore {
       if (plan.subqueriesAll.nonEmpty) return None
       val files = new StringBuilder
       var pure = true
-      val conf = e.sparkSession.sparkContext.hadoopConfiguration
       plan.foreachUp {
         case lr: LogicalRelation => lr.relation match {
           case h: HadoopFsRelation =>
-            h.location.inputFiles.sorted.foreach { f =>
-              val p = new org.apache.hadoop.fs.Path(f)
-              val st = p.getFileSystem(conf).getFileStatus(p)
-              files.append(f).append('|').append(st.getLen).append('|')
-                .append(st.getModificationTime).append('\n')
-            }
+            files.append(filesIdentity(e.sparkSession, h.location.inputFiles.toSeq))
           case _ => pure = false
         }
         case leaf if leaf.children.isEmpty => pure = false
@@ -118,6 +112,34 @@ object IndexStore {
       else Some(org.apache.commons.codec.digest.DigestUtils.md5Hex(
         plan.canonicalized.toString + "#" + files))
     } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** The physical identity of `paths`: one `path|length|mtime` line
+    * per file, in path order, a directory standing for every visible
+    * file under it (names starting with `_` or `.` are not data).
+    * Keys [[corpusFingerprintMemo]] and [[graft.Tables.load]]'s schema
+    * memo. Throws when a path does not exist. */
+  private[graft] def filesIdentity(spark: SparkSession, paths: Seq[String]): String = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = paths.flatMap { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val fs = p.getFileSystem(conf)
+      val st = fs.getFileStatus(p)
+      if (!st.isDirectory) Seq(f -> st)
+      else {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .filterNot(s => s.getPath.getName.startsWith("_") ||
+            s.getPath.getName.startsWith("."))
+          .map(s => s.getPath.toString -> s).toSeq
+      }
+    }
+    val sb = new StringBuilder
+    files.sortBy(_._1).foreach { case (f, st) =>
+      sb.append(f).append('|').append(st.getLen).append('|')
+        .append(st.getModificationTime).append('\n')
+    }
+    sb.toString
+  }
 
   private def memoGet(spark: SparkSession, id: String): Option[String] =
     readMeta(spark, s"$root/_fp_cache/$id") // same torn-read discipline:

@@ -9,8 +9,8 @@ import java.sql.{Connection, DriverManager}
   * (O13-O17, `db.rs:55-180`).
   *
   *  - Parquet is the engine-native sink: truncate-and-reload
-  *    (`mode=overwrite`, reference O16 DROP+CREATE semantics) with the
-  *    table sorted within partitions by its key — the Parquet
+  *    (`mode=overwrite`, reference O16 DROP+CREATE semantics) with
+  *    each file sorted by the table's key — the Parquet
   *    row-group min/max analogue of the reference's deferred btree
   *    indexes (O17, `sql/indexes.sql`): point lookups and merge joins
   *    skip row groups instead of walking a btree.
@@ -26,7 +26,7 @@ import java.sql.{Connection, DriverManager}
 object Sinks {
 
   /** Keys mirroring the reference's deferred indexes
-    * (`sql/indexes.sql:7-16`) — used as sort/cluster keys. */
+    * (`sql/indexes.sql:7-16`) — the parquet sort keys. */
   val indexKeys: Map[String, Seq[String]] = Map(
     "release" -> Seq("id"),
     "release_label" -> Seq("release_id"),
@@ -36,27 +36,21 @@ object Sinks {
     "master" -> Seq("id"),
     "master_artist" -> Seq("master_id", "artist_id"))
 
-  /** Engine-native sink: overwrite parquet, clustered by the table's
-    * index key. `repartition(key)` co-locates each key range,
-    * `sortWithinPartitions` orders inside files → row-group skipping
-    * serves later point lookups / co-partitioned joins. Returns the
-    * number of rows written, counted by the write itself (no read-back
-    * job). */
-  def writeParquet(df: DataFrame, table: String, outDir: String,
-      numPartitions: Option[Int] = None): Long = {
-    val keys = indexKeys.getOrElse(table, Seq.empty)
+  /** Engine-native sink: overwrite parquet, each file sorted by the
+    * table's index key, so row-group min/max skipping serves later
+    * point lookups and merge joins. The sink adds no shuffle: the
+    * clustering comes from the frame's own partitioning — a Discogs
+    * table's key starts with its dump's id, and the dump's first-wins
+    * dedup shuffle has already hashed its rows by that id (see
+    * [[graft.DiscogsLoad]]) — so the file count is whatever AQE made of
+    * that shuffle. Returns the number of rows written, counted by the
+    * write itself (no read-back job). */
+  def writeParquet(df: DataFrame, table: String, outDir: String): Long = {
+    val keys = indexKeys.getOrElse(table, Nil).map(col)
     val rows = Observation()
     val counted = df.observe(rows, count(lit(1)).as("rows"))
-    val clustered = keys match {
-      case Nil => counted
-      case ks =>
-        val cols = ks.map(col)
-        val rep = numPartitions
-          .map(n => counted.repartition(n, cols: _*))
-          .getOrElse(counted.repartition(cols: _*))
-        rep.sortWithinPartitions(cols: _*)
-    }
-    clustered.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table")
+    val sorted = if (keys.isEmpty) counted else counted.sortWithinPartitions(keys: _*)
+    sorted.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table")
     rows.get("rows").asInstanceOf[Long]
   }
 
@@ -73,9 +67,11 @@ object Sinks {
     * partitioned layout is refused (rewriting it here would flatten
     * the partition columns into data and break pruning).
     *
-    * `clusterBy` preserves a [[writeParquet]]-style layout: repartition
-    * on the keys + sort within partitions, so row-group min/max
-    * skipping survives compaction. The default round-robin spread
+    * `clusterBy` lays the files out by key: repartition on the keys +
+    * sort within partitions (the sort [[writeParquet]] leaves in each
+    * file), so row-group min/max skipping survives compaction; the
+    * repartition is needed here because compaction picks its own file
+    * count. The default round-robin spread
     * maximizes write parallelism but scatters any pre-existing
     * clustering — pass the table's index keys when it has them.
     * Returns (filesBefore, filesAfter).

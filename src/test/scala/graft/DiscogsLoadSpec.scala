@@ -5,6 +5,7 @@ import graft.sources.DiscogsXml
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -164,6 +165,20 @@ class DiscogsLoadSpec extends AnyFunSuite {
         assert(scans.count(_.contains(f)) == 1, s"$f scanned ${scans.count(_.contains(f))} times")
       }
       assert(!scans.flatten.exists(_.startsWith(out)), "a query of the load read its output back")
+    }
+  }
+
+  test("at fixture size each table lands in one file, and each dump's dedup is the load's only shuffle") {
+    withTempDir("graft-load-layout") { dir =>
+      val out = new File(dir, "out").getPath
+      val plans = executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = fixtures, out = out), spark))
+      tableNames.foreach { t =>
+        val parts = new File(out, t).list().filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+        assert(parts.length == 1, s"$t landed in ${parts.length} files")
+      }
+      val exchanges = plans.flatMap(nodes).collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == fixtures.size,
+        s"${exchanges.size} shuffles for ${fixtures.size} dumps:\n${exchanges.mkString("\n")}")
     }
   }
 }
