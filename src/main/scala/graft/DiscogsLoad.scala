@@ -24,26 +24,36 @@ import scala.util.{Failure, Try}
   * any other JDBC target takes batched INSERTs.
   *
   * The unit of work is a dump group: the files of one entity. Groups
-  * load side by side, one thread each (at most four, one per entity):
-  * a gz dump parses as a single task, so four dumps keep four cores
-  * busy. Inside a group the dump is parsed and first-wins-deduped once
-  * and its tables land one after another (the reference writes all
+  * load side by side, one thread each (at most four, one per entity).
+  * Before they start, each gz dump of at least
+  * [[DiscogsXml.SplitMinGzBytes]] is split into its share of the cores
+  * by size ([[DiscogsXml.chunkCount]]), all in one job
+  * ([[DiscogsXml.withChunks]], under `--out/_chunks-<uuid>`, removed
+  * when the load ends, on success or failure), so the biggest dump no
+  * longer parses as one long task; every other dump parses as one
+  * task. Splitting first keeps the split's tasks clear of the groups'
+  * query planning, which fills every core while the groups start. Each
+  * dump is parsed and first-wins-deduped once (the reference writes all
   * maps of a dump from one pass, `db.rs:55-97`). The dedup shuffle is
-  * the load's only shuffle: it hashes the rows by id, every table's
-  * key starts with that id, and each child row comes from one deduped
+  * the load's only shuffle: it hashes the rows by id, every table's key
+  * starts with that id, and each child row comes from one deduped
   * parent row, so every table is already clustered and the sink only
   * sorts. A single-table dump streams straight into the writer. A
-  * fan-out dump (releases, masters) cuts the lineage of its deduped
-  * raw rows once ([[CacheScope.cut]]) for its 2-3 tables and releases
-  * the cut when the group ends. A cut, not a persist: the cut runs
-  * eagerly under AQE, which sizes the dedup shuffle's partitions from
-  * the data, while a cached plan keeps `spark.sql.shuffle.partitions`
-  * partitions and would land every fan-out table in that many files.
+  * fan-out dump (releases, masters) cuts the lineage of its deduped raw
+  * rows once ([[CacheScope.cut]]), writes its 2-3 tables from the cut
+  * side by side, and releases the cut once every one of those writes
+  * has ended. A cut, not a persist: the cut runs eagerly under AQE,
+  * which sizes the dedup shuffle's partitions from the data, while a
+  * cached plan keeps `spark.sql.shuffle.partitions` partitions and
+  * would land every fan-out table in that many files. The writes start
+  * only after the cut has materialized, so they never compete with the
+  * parse.
   *
   * --restage DIR re-stages each group's gz dumps to splittable parquet
-  * under DIR first (one single-stream parse each, paid once), then
-  * loads the group from the staged copies — the layout every later
-  * pass over a big dump should read.
+  * under DIR first (one parse each, paid once; the restage splits a
+  * big gz dump the same way, with its chunks under DIR), then loads the
+  * group from the staged copies — the layout every later pass over a
+  * big dump should read.
   */
 object DiscogsLoad {
 
@@ -75,7 +85,9 @@ object DiscogsLoad {
     * process/session lifecycle, so e2e tests drive the identical path.
     * Row counts printed per table come from the writes themselves. A
     * failed group fails the run only after every group has finished,
-    * and leaves nothing persisted in the session. */
+    * and a failed table fails its group only after its sibling tables
+    * have landed; either way the run leaves nothing persisted in the
+    * session and no chunk on disk. */
   def run(opts: Opts, spark: SparkSession): Unit = {
     require(opts.files.nonEmpty, "at least one dump FILE required")
     val jdbc = opts.dbUrl.map(url => Sinks.JdbcConfig(url, opts.dbUser,
@@ -93,10 +105,12 @@ object DiscogsLoad {
     def load(entity: String, files: Seq[String]): Seq[String] = {
       val g = open(entity, files)
       val cut = if (g.tables.size > 1) Some(CacheScope.cut(g.raw)) else None
-      try cut.fold(g)(c => g.copy(raw = c)).tables.foreach { case (name, df) =>
-        val n = Sinks.writeParquet(df, name, opts.out)
-        println(s"[discogs-load] $name: $n rows -> ${opts.out}/$name")
-      } finally cut.foreach(CacheScope.release)
+      try sideBySide(cut.fold(g)(c => g.copy(raw = c)).tables.map { case (name, df) =>
+        () => {
+          val n = Sinks.writeParquet(df, name, opts.out)
+          println(s"[discogs-load] $name: $n rows -> ${opts.out}/$name")
+        }
+      }) finally cut.foreach(CacheScope.release)
       jdbc.foreach { cfg =>
         g.tables.foreach { case (name, _) =>
           Sinks.writeJdbc(spark.read.parquet(s"${opts.out}/$name"), name, cfg)
@@ -105,23 +119,33 @@ object DiscogsLoad {
       g.tables.map(_._1)
     }
 
+    def loadGroups(groups: Seq[(String, Seq[String])]): Seq[Seq[String]] =
+      sideBySide(groups.map { case (e, fs) => () => load(e, fs) })
+
     val groups = DiscogsXml.groupByEntity(opts.files)
-    // the pool's threads start here, on the calling thread, so they
-    // inherit its Spark local properties (job group, scheduler pool)
-    val pool = Executors.newFixedThreadPool(groups.size)
+    val loaded =
+      if (opts.restageDir.isDefined) loadGroups(groups) // restage splits its own dumps
+      else DiscogsXml.withChunks(spark, groups, opts.out)(loadGroups)
+    jdbc.filter(_ => opts.createIndexes).foreach(Sinks.createIndexes(_, loaded.flatten))
+  }
+
+  /** Runs every task on a thread of its own and waits for all of them;
+    * returns their results in order, or throws the first failure with
+    * the others suppressed. The threads start here, on the calling
+    * thread, so they inherit its Spark local properties (job group,
+    * scheduler pool). */
+  private def sideBySide[A](tasks: Seq[() => A]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
     val outcomes = try {
-      groups
-        .map { case (e, fs) => pool.submit[Seq[String]](() => load(e, fs)) }
-        .map(f => Try(f.get()).recoverWith {
-          case e: ExecutionException => Failure(e.getCause)
-        })
+      tasks
+        .map(t => pool.submit[A](() => t()))
+        .map(f => Try(f.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
     } finally pool.shutdownNow()
     val failures = outcomes.collect { case Failure(e) => e }
     failures.headOption.foreach { first =>
       failures.tail.foreach(first.addSuppressed)
       throw first
     }
-    jdbc.filter(_ => opts.createIndexes)
-      .foreach(Sinks.createIndexes(_, outcomes.flatMap(_.get)))
+    outcomes.map(_.get)
   }
 }

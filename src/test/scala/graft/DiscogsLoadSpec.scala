@@ -44,6 +44,49 @@ class DiscogsLoadSpec extends AnyFunSuite {
     f.getPath
   }
 
+  /** A gz releases dump above [[DiscogsXml.SplitMinGzBytes]], so the
+    * load splits it, holding every case the split's tag scan must read
+    * as the parser does: self-closing records, tag text inside
+    * comments, CDATA sections and quoted attribute values, processing
+    * instructions, and a `<release>` nested inside a record. Id 7 comes
+    * again at the very end with other content and children, so its two
+    * copies land in different chunks and only the first may survive. */
+  private def bigReleases(dir: File): String = {
+    val f = new File(dir, "releases-big.xml.gz")
+    val rnd = new scala.util.Random(8)
+    val out = new java.io.OutputStreamWriter(
+      new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f)), "UTF-8")
+    try {
+      out.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<releases>\n")
+      (1 to 4000).foreach { id =>
+        // random text, so the dump stays above the line in few records
+        val noise = Seq.fill(6)(rnd.nextLong().toHexString).mkString(" ")
+        if (id % 97 == 0) out.write(s"""  <release id="$id" status="Accepted"/>\n""")
+        else {
+          out.write(s"""  <release id="$id" status="${if (id % 89 == 0) "a>b" else "Accepted"}">""")
+          out.write(s"<title>Release $id $noise</title>")
+          out.write(s"""<labels><label name="L$id" catno="C$id" id="${id % 50}"/></labels>""")
+          if (id % 3 == 0)
+            out.write(s"<notes><![CDATA[$id < 2 </release> <release id=\"${300000 + id}\">]]></notes>")
+          if (id % 5 == 0)
+            out.write(s"""<videos><video src="http://v/$id" duration="$id" embed="true"><title>v$id</title></video></videos>""")
+          if (id % 7 == 0)
+            out.write(s"""<extra><release id="${200000 + id}" status="Inner"><title>inner</title></release></extra>""")
+          if (id % 11 == 0) out.write("<!-- </release> <release id=\"1\"> -->")
+          out.write("</release>\n")
+        }
+        if (id % 13 == 0)
+          out.write(s"""  <!-- <release id="${100000 + id}" status="Ghost"><title>ghost</title></release> -->\n""")
+        if (id % 17 == 0) out.write(s"  <?graft skip <release>?>\n")
+      }
+      out.write("""  <release id="7" status="Accepted"><title>Seven again</title>""" +
+        """<labels><label name="Late" catno="L7" id="3"/></labels></release>""" + "\n")
+      out.write("</releases>\n")
+    } finally out.close()
+    assert(f.length >= DiscogsXml.SplitMinGzBytes, s"${f.length} bytes: below the split line")
+    f.getPath
+  }
+
   /** Runs the load with its stdout captured; returns the printed row
     * count per table. */
   private def runCounted(opts: DiscogsLoad.Opts): Map[String, Long] = {
@@ -101,17 +144,85 @@ class DiscogsLoadSpec extends AnyFunSuite {
       assert(persisted == before)
 
       // release_label cannot be created (a dangling symlink holds its
-      // name), so the releases group fails after `release` landed from
-      // its cache; the other groups still finish
-      val out = new File(dir, "bad")
-      out.mkdirs()
-      Files.createSymbolicLink(new File(out, "release_label").toPath,
-        new File(dir, "nowhere").toPath)
+      // name), so the releases group fails while its sibling tables
+      // land from the cut; the other groups still finish
+      val out = badOut(dir)
       val e = intercept[Exception](
         DiscogsLoad.run(DiscogsLoad.Opts(files = fixtures, out = out.getPath), spark))
       assert(!e.isInstanceOf[java.util.concurrent.ExecutionException], e.toString)
-      assert(new File(out, "release/_SUCCESS").exists(), "the failure came before the cache was read")
+      Seq("release", "release_video").foreach { t =>
+        assert(new File(out, s"$t/_SUCCESS").exists(), s"sibling $t did not land")
+      }
       assert(new File(out, "master_artist/_SUCCESS").exists(), "a healthy group was not joined")
+      assert(persisted == before)
+    }
+  }
+
+  /** An output directory where `release_label` cannot be created: a
+    * dangling symlink holds its name. */
+  private def badOut(dir: File): File = {
+    val out = new File(dir, "bad")
+    out.mkdirs()
+    Files.createSymbolicLink(new File(out, "release_label").toPath,
+      new File(dir, "nowhere").toPath)
+    out
+  }
+
+  /** Every chunk directory anywhere under `dir`. */
+  private def chunkDirs(dir: String): Seq[String] =
+    if (!new File(dir).exists()) Nil
+    else {
+      val walk = Files.walk(new File(dir).toPath)
+      try walk.iterator().asScala.map(_.toString).filter(_.contains("/_chunks-")).toSeq
+      finally walk.close()
+    }
+
+  test("a dump above the split line lands what the one-task parse lands, first-wins survivors included") {
+    withTempDir("graft-load-split") { dir =>
+      val files = Seq(bigReleases(dir))
+      assert(DiscogsXml.chunkCount(files.head, new File(files.head).length,
+        spark.sparkContext.defaultParallelism) > 1)
+      val want = DiscogsXml.loadAll(spark, files)
+      Seq(None, Some(new File(dir, "staged").getPath)).foreach { restage =>
+        val out = new File(dir, s"out-${restage.isDefined}").getPath
+        val printed = runCounted(DiscogsLoad.Opts(files = files, out = out, restageDir = restage))
+        Seq("release", "release_label", "release_video").foreach { t =>
+          val got = spark.read.parquet(s"$out/$t")
+          val exp = want(t).select(got.columns.map(org.apache.spark.sql.functions.col): _*)
+          assert(got.exceptAll(exp).isEmpty, s"$t ($restage): rows the one-task parse does not have")
+          assert(exp.exceptAll(got).isEmpty, s"$t ($restage): one-task parse rows missing")
+          assert(printed.get(t).contains(got.count()), s"$t ($restage): printed ${printed.get(t)}")
+        }
+        val release = spark.read.parquet(s"$out/release")
+        assert(release.count() == 4000)
+        assert(release.filter("id = 7").collect().map(_.getAs[String]("title")).toSeq
+          .map(_.startsWith("Release 7 ")) == Seq(true))
+        assert(spark.read.parquet(s"$out/release_label").filter("label = 'Late'").isEmpty)
+        assert(chunkDirs(out).isEmpty && restage.forall(chunkDirs(_).isEmpty), "chunks left behind")
+      }
+    }
+  }
+
+  test("a split dump's chunks are each scanned once, and none is left after a failed run") {
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet
+    withTempDir("graft-load-chunks") { dir =>
+      val big = bigReleases(dir)
+      val out = new File(dir, "out").getPath
+      val scans = fileScans(executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(big), out = out), spark)))
+      val chunks = scans.flatten.filter(_.contains("/_chunks-"))
+      assert(chunks.distinct.size == sc.defaultParallelism, chunks.distinct.mkString("\n"))
+      assert(chunks.size == chunks.distinct.size, s"a chunk was scanned twice:\n${chunks.mkString("\n")}")
+      assert(!scans.flatten.contains(big), "the dump itself was parsed beside its chunks")
+      assert(chunkDirs(out).isEmpty, "chunks left after a successful run")
+
+      val before = persisted
+      val bad = badOut(dir)
+      intercept[Exception](DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(big), out = bad.getPath), spark))
+      assert(chunkDirs(bad.getPath).isEmpty, "chunks left after a failed run")
+      Seq("release", "release_video").foreach { t =>
+        assert(new File(bad, s"$t/_SUCCESS").exists(), s"sibling $t did not land")
+      }
       assert(persisted == before)
     }
   }

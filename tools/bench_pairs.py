@@ -2,7 +2,7 @@
 """Alternating benchmark pairs: one workload in two checkouts.
 
     python3 tools/bench_pairs.py --parent DIR --change DIR --workload load \
-        --pairs 10 [--first-seed 1] [--seconds 16] [--raw FILE]
+        --pairs 10 [--first-seed 1] [--seconds 16] [--trace 0|1] [--raw FILE]
 
 Pair i runs `perfbench/run.py --workload W --seed first-seed+i` once in
 each checkout; even pairs run the parent first, odd pairs the change
@@ -10,7 +10,12 @@ first, so drift on the host falls on both sides alike. For every
 end-to-end metric of BENCHMARK.json (read from the change checkout) it
 prints each side's median and quartiles, the pairs the change won, and
 whether the medians differ by more than the parent's interquartile
-range. --raw appends every run's result line to FILE as JSON.
+range. --trace is passed through to run.py; with --trace 1 it also
+prints each side's median and quartiles of every per-layer metric of
+BENCHMARK.json that is not 0 on both sides (`discogsxml.parse_s`,
+`discogsload.jobs`, `sinks.write_s`, ...), so a difference in the
+end-to-end metrics comes with the profile that explains it. --raw
+appends every run's result line to FILE as JSON.
 
 Exits 1 if any run fails: run.py exits non-zero, or its result reports
 a wrong output or a failed op.
@@ -24,11 +29,11 @@ import sys
 from pathlib import Path
 
 
-def run_once(checkout, workload, seed, seconds):
+def run_once(checkout, workload, seed, seconds, trace):
     """One benchmark run; returns its result object, or None."""
     p = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
-         "--seed", str(seed), "--seconds", str(seconds)],
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
         cwd=checkout, stdout=subprocess.PIPE, text=True)
     lines = [l for l in p.stdout.splitlines() if l.strip()]
     if p.returncode != 0 or not lines:
@@ -55,6 +60,7 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=16)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--raw")
     a = ap.parse_args()
 
@@ -67,7 +73,7 @@ def main():
         seed = a.first_seed + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            r = run_once(sides[side], a.workload, seed, a.seconds)
+            r = run_once(sides[side], a.workload, seed, a.seconds, a.trace)
             ok = r is not None and r.get("correct") and r.get("failed") == 0
             print(f"[pairs] pair {i + 1}/{a.pairs} seed {seed} {side}: "
                   + ("ok" if ok else f"FAILED {r and {k: r[k] for k in r if k != 'metrics'}}"),
@@ -98,6 +104,16 @@ def main():
         print(f"  {name}: {pq[1]:.4g} [{pq[0]:.4g}-{pq[2]:.4g}] -> "
               f"{cq[1]:.4g} [{cq[0]:.4g}-{cq[2]:.4g}]; change won {won}/{len(both)}; "
               f"median gap {'>' if beyond else '<='} parent IQR")
+    if a.trace:
+        print("  per layer, median [q1-q3], parent -> change:")
+        for m in spec["per_layer"]:
+            p, c = values("parent", m["name"]), values("change", m["name"])
+            ps, cs = [x for x in p if x is not None], [y for y in c if y is not None]
+            if not ps or not cs or not any(ps + cs):
+                continue
+            pq, cq = quartiles(ps), quartiles(cs)
+            print(f"    {m['name']} ({m['unit']}): {pq[1]:.4g} [{pq[0]:.4g}-{pq[2]:.4g}] -> "
+                  f"{cq[1]:.4g} [{cq[0]:.4g}-{cq[2]:.4g}]")
     for side in ("parent", "change"):
         ops = [(r["failed"], r["attempted"]) for r in results[side] if r]
         print(f"  failed ops, {side}: {sum(f for f, _ in ops)}/{sum(n for _, n in ops)}")
