@@ -90,7 +90,7 @@ object Bench {
     val total = results.map(_._2).sum
     val failed = results.filter(_._3 < 0).map(_._1)
     if (failed.nonEmpty) System.err.println(s"[bench] FAILED: ${failed.mkString(",")}")
-    // warm the ingest path (split, parse codegen, gzip codec, window
+    // warm the ingest path (parse, codegen, gzip codec, window
     // shuffle, parquet writer) on a small dump so neither timed ingest
     // run eats cold-JVM cost
     try { IngestBench.run(spark, n = 5000); () } catch { case _: Throwable => () }

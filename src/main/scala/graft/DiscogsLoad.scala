@@ -25,14 +25,12 @@ import scala.util.{Failure, Try}
   *
   * The unit of work is a dump group: the files of one entity. Groups
   * load side by side, one thread each (at most four, one per entity).
-  * Before they start, each gz dump of at least
-  * [[DiscogsXml.SplitMinGzBytes]] is split into its share of the cores
-  * by size ([[DiscogsXml.chunkCount]]), all in one job
-  * ([[DiscogsXml.withChunks]], under `--out/_chunks-<uuid>`, removed
-  * when the load ends, on success or failure), so the biggest dump no
-  * longer parses as one long task; every other dump parses as one
-  * task. Splitting first keeps the split's tasks clear of the groups'
-  * query planning, which fills every core while the groups start. Each
+  * Each dump file of at least [[DiscogsXml.SplitMinBytes]] is read in
+  * its share of the cores by size ([[DiscogsXml.rangeCount]]), one
+  * task per byte range, each parsing its own records
+  * ([[DiscogsXml.readGroups]]), so the biggest dump does not parse as
+  * one long task; every other dump parses as one task. No job runs
+  * before the groups start and nothing is written but the tables. Each
   * dump is parsed and first-wins-deduped once (the reference writes all
   * maps of a dump from one pass, `db.rs:55-97`). The dedup shuffle is
   * the load's only shuffle: it hashes the rows by id, every table's key
@@ -50,10 +48,10 @@ import scala.util.{Failure, Try}
   * parse.
   *
   * --restage DIR re-stages each group's gz dumps to splittable parquet
-  * under DIR first (one parse each, paid once; the restage splits a
-  * big gz dump the same way, with its chunks under DIR), then loads the
-  * group from the staged copies — the layout every later pass over a
-  * big dump should read.
+  * under DIR first (one parse each, paid once; the restage reads a big
+  * dump in ranges the same way, on every core), then loads the group
+  * from the staged copies — the layout every later pass over a big dump
+  * should read.
   */
 object DiscogsLoad {
 
@@ -87,45 +85,44 @@ object DiscogsLoad {
     * failed group fails the run only after every group has finished,
     * and a failed table fails its group only after its sibling tables
     * have landed; either way the run leaves nothing persisted in the
-    * session and no chunk on disk. */
+    * session and nothing on disk but the tables that landed. */
   def run(opts: Opts, spark: SparkSession): Unit = {
     require(opts.files.nonEmpty, "at least one dump FILE required")
     val jdbc = opts.dbUrl.map(url => Sinks.JdbcConfig(url, opts.dbUser,
       opts.dbPassword, opts.batchSize))
 
-    def open(entity: String, files: Seq[String]): DiscogsXml.DumpGroup =
-      opts.restageDir match {
-        case Some(rd) =>
-          DiscogsXml.readStagedGroup(spark, entity, files.map { f =>
-            DiscogsXml.restage(spark, f, s"$rd/d${opts.files.indexOf(f)}")
-          })
-        case None => DiscogsXml.readGroup(spark, entity, files)
-      }
+    val groups = DiscogsXml.groupByEntity(opts.files)
+    // direct: every dump's ranges cut for the whole load up front; each
+    // group's frames are built in its own thread
+    val direct = if (opts.restageDir.isDefined) Nil else DiscogsXml.readGroups(spark, groups)
 
-    def load(entity: String, files: Seq[String]): Seq[String] = {
-      val g = open(entity, files)
-      val cut = if (g.tables.size > 1) Some(CacheScope.cut(g.raw)) else None
-      try sideBySide(cut.fold(g)(c => g.copy(raw = c)).tables.map { case (name, df) =>
+    def open(k: Int): DiscogsXml.DumpGroup = opts.restageDir match {
+      case Some(rd) =>
+        val (entity, files) = groups(k)
+        DiscogsXml.readStagedGroup(spark, entity, files.map { f =>
+          DiscogsXml.restage(spark, f, s"$rd/d${opts.files.indexOf(f)}")
+        })
+      case None => direct(k)()
+    }
+
+    def load(k: Int): Seq[String] = {
+      val g = open(k)
+      val cut = if (g.fanOut) Some(CacheScope.cut(g.raw)) else None
+      val landing = cut.fold(g)(c => g.copy(raw = c))
+      try sideBySide(landing.tables.map { case (name, df) =>
         () => {
           val n = Sinks.writeParquet(df, name, opts.out)
           println(s"[discogs-load] $name: $n rows -> ${opts.out}/$name")
         }
       }) finally cut.foreach(CacheScope.release)
+      val names = landing.tables.map(_._1)
       jdbc.foreach { cfg =>
-        g.tables.foreach { case (name, _) =>
-          Sinks.writeJdbc(spark.read.parquet(s"${opts.out}/$name"), name, cfg)
-        }
+        names.foreach(name => Sinks.writeJdbc(spark.read.parquet(s"${opts.out}/$name"), name, cfg))
       }
-      g.tables.map(_._1)
+      names
     }
 
-    def loadGroups(groups: Seq[(String, Seq[String])]): Seq[Seq[String]] =
-      sideBySide(groups.map { case (e, fs) => () => load(e, fs) })
-
-    val groups = DiscogsXml.groupByEntity(opts.files)
-    val loaded =
-      if (opts.restageDir.isDefined) loadGroups(groups) // restage splits its own dumps
-      else DiscogsXml.withChunks(spark, groups, opts.out)(loadGroups)
+    val loaded = sideBySide(groups.indices.map(k => () => load(k)))
     jdbc.filter(_ => opts.createIndexes).foreach(Sinks.createIndexes(_, loaded.flatten))
   }
 

@@ -18,17 +18,27 @@ object Harness {
     * loop run here. */
   val WarmDir = "/root/testdata/sf0.001"
 
+  /** Entries of Spark's cache of compiled generated classes
+    * (`spark.sql.codegen.cache.maxEntries`, static, default 100). A
+    * `graft.Bench` run at sf0.01 compiles about 2,700 distinct classes
+    * (about 2,470 in its warm-up pass), so at 100 a class is evicted
+    * long before the entry that made it runs again, and every warm pass
+    * recompiles what it needs. */
+  val CodegenCacheEntries = 5000
+
   /** The session: `local[cores]` unless `spark.master` is already set
     * (spark-submit `--master`, `-Dspark.master`), `cores` shuffle
-    * partitions, UTC, no UI. Log level ERROR, not WARN: benign WARNs
-    * (broadcast-size, plan-truncation) carry multi-line payloads that
-    * landed around Bench's JSON line and broke its parse. */
+    * partitions, UTC, no UI, a codegen cache that holds a whole roster
+    * pass ([[CodegenCacheEntries]]). Log level ERROR, not WARN: benign
+    * WARNs (broadcast-size, plan-truncation) carry multi-line payloads
+    * that landed around Bench's JSON line and broke its parse. */
   def session(app: String, cores: Int = Harness.cores): SparkSession = {
     val b = SparkSession.builder()
       .appName(app)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     if (!new SparkConf().contains("spark.master")) b.master(s"local[$cores]")
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,16 +1,17 @@
 package graft
 
-import java.io.{BufferedOutputStream, FileOutputStream, OutputStreamWriter}
+import java.io.{BufferedOutputStream, File, FileOutputStream, OutputStreamWriter}
 import java.util.zip.GZIPOutputStream
 
 /** XML-ingest throughput measurement, comparable to the reference's
   * only published number (~16,600 releases/s single-threaded, parse
   * plus binary COPY of the release tables, BASELINE.md): generate a
   * synthetic releases dump shaped like the fixture corpus, load it
-  * through [[DiscogsLoad.run]] (split, parse, dedup, the three release
+  * through [[DiscogsLoad.run]] (parse, dedup, the three release
   * tables landed as parquet), report records/s.
   *
-  * The dump is written once to /tmp and reused across runs.
+  * Each run writes its dump and its output under a directory of its
+  * own in the JVM's temp dir, and removes it when it ends.
   */
 object IngestBench {
 
@@ -20,18 +21,20 @@ object IngestBench {
     * by the caller, so no root-element peek runs inside a timed region. */
   private def release(g: sources.DiscogsXml.DumpGroup) = g.tables.toMap.apply("release")
 
-  def dumpPath(n: Int): String = s"/tmp/graft_ingest_bench_$n.xml.gz"
+  /** `body` on a scratch directory created for it and removed, with
+    * everything in it, when it returns or throws. */
+  private def withScratch[A](body: File => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-bench").toFile
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
 
-  /** Deterministic synthetic releases dump (fixture-shaped: attributes,
-    * nested arrays, fan-out children, XML entities), ids 1 to `n`. */
-  def ensureDump(n: Int = defaultRecords): String = {
-    val path = dumpPath(n)
-    if (new java.io.File(path).exists()) return path
-    // write-then-rename: an interrupted write must not leave a
-    // truncated (but gzip-valid) dump that later runs silently reuse
-    val tmp = path + ".tmp"
+  /** Writes a deterministic synthetic releases dump (fixture-shaped:
+    * attributes, nested arrays, fan-out children, XML entities), ids 1
+    * to `n`, into `dir`; returns its path. */
+  private def writeDump(dir: File, n: Int): String = {
+    val path = new File(dir, s"releases-$n.xml.gz").getPath
     val out = new OutputStreamWriter(new GZIPOutputStream(
-      new BufferedOutputStream(new FileOutputStream(tmp), 1 << 16)), "UTF-8")
+      new BufferedOutputStream(new FileOutputStream(path), 1 << 16)), "UTF-8")
     try {
       val genres = Array("Electronic", "Rock", "Jazz", "Hip Hop", "Folk, World, &amp; Country")
       val styles = Array("Deep House", "Techno", "Ambient", "Experimental", "Tech House")
@@ -60,30 +63,20 @@ object IngestBench {
         i += 1
       }
       out.write("</releases>\n")
-      out.close()
-      java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-        java.nio.file.Paths.get(path),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    } finally {
-      try out.close() catch { case _: Throwable => () }
-      new java.io.File(tmp).delete(): Unit
-    }
+    } finally out.close()
     path
   }
 
-  /** Load the dump through [[DiscogsLoad.run]] into a scratch
-    * directory, removed afterwards; returns (records, seconds,
-    * records/s). Every id of the dump is unique, so records = `n`. */
+  /** Load an `n`-record dump through [[DiscogsLoad.run]]; returns
+    * (records, seconds, records/s). Every id of the dump is unique, so
+    * records = `n`. */
   def run(spark: org.apache.spark.sql.SparkSession,
-      n: Int = defaultRecords): (Long, Double, Double) = {
-    val path = ensureDump(n)
-    val out = java.nio.file.Files.createTempDirectory("graft-ingest-bench").toFile
-    try {
-      val t0 = System.nanoTime()
-      DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(path), out = out.getPath), spark)
-      val sec = (System.nanoTime() - t0) / 1e9
-      (n.toLong, sec, n / sec)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(out)
+      n: Int = defaultRecords): (Long, Double, Double) = withScratch { dir =>
+    val path = writeDump(dir, n)
+    val t0 = System.nanoTime()
+    DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(path), out = new File(dir, "out").getPath), spark)
+    val sec = (System.nanoTime() - t0) / 1e9
+    (n.toLong, sec, n / sec)
   }
 
   /** Splittable re-stage throughput: one-time gz → parquet re-stage
@@ -92,11 +85,10 @@ object IngestBench {
     * the gz single-stream rate is the per-pass speedup every
     * downstream consumer gets once the re-stage cost is paid. */
   def runRestaged(spark: org.apache.spark.sql.SparkSession,
-      n: Int = defaultRecords): (Long, Double, Double, Double) = {
-    val path = ensureDump(n)
-    val outDir = s"/tmp/graft_restage_$n"
+      n: Int = defaultRecords): (Long, Double, Double, Double) = withScratch { dir =>
+    val path = writeDump(dir, n)
     val t0 = System.nanoTime()
-    val staged = sources.DiscogsXml.restage(spark, path, outDir)
+    val staged = sources.DiscogsXml.restage(spark, path, new File(dir, "staged").getPath)
     val stageSec = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
     val rows = release(

@@ -9,9 +9,10 @@ import org.apache.spark.sql.types._
   * Read schemas are explicit for two reasons: (1) schema inference
   * over a 10 GB gz XML dump would force a second full pass (the
   * reference does a two-pass open too, quirk Q11 — we don't); (2) the
-  * XML parser prunes to the declared fields at parse time, the
-  * column-pruning analogue of the reference FSM's catch-all skips
-  * (`release.rs:181`).
+  * dump reader (`sources.RecordParser`) walks each record driven by
+  * its entity's read schema and skips every undeclared element, the
+  * analogue of the reference FSM's catch-all skips (`release.rs:181`).
+  * The reader follows Spark's XML reader's conventions for them.
   *
   * Parity policy (FIXTURES §2): absent scalar → '' / 0 (the reference
   * writes `String::new()` / 0 defaults, `release.rs:74-88`), arrays →
@@ -30,12 +31,13 @@ object Discogs {
     * (reference FSM states `release.rs:90-108`).
     *
     * ATTRIBUTE leaves are declared STRING even when semantically
-    * numeric/boolean: the StAX parser's attribute conversion is not
-    * covered by PERMISSIVE mode, so one `id="oops"` in a 10 GB dump
-    * would hard-fail the whole file read (NumberFormatException →
-    * FAILED_READ_FILE). Element values convert leniently (bad value →
-    * null), so they keep their real types. The readers try_cast the
-    * string attributes and route null ids to the reject policy.
+    * numeric/boolean: attributes convert before the per-field error
+    * handling (in Spark's XML reader, whose rows the dump reader
+    * gives), so one `id="oops"` would reject its record with every
+    * field null, and rejects() would have no id to report. A bad
+    * element value rejects its record too, keeping the fields read
+    * before it. The readers try_cast the string attributes and route
+    * null ids to the reject policy.
     */
   val releaseXmlSchema: StructType = s(
     f("_id", StringType),
@@ -57,9 +59,9 @@ object Discogs {
   /** `<artist>` subtree (reference `artist.rs:55-70`); alias/member ids
     * are dropped (SURVEY §1.5), only text kept. */
   val artistXmlSchema: StructType = s(
-    // STRING like the attribute ids: element conversion nulls a bad
-    // value silently, which would leave rejects() with no raw text to
-    // report; the readers try_cast and reject nulls uniformly
+    // STRING like the attribute ids: an integer id that does not
+    // convert would reject the record without its raw id text; the
+    // readers try_cast and reject nulls uniformly
     f("id", StringType),
     f("name", StringType),
     f("realname", StringType),

@@ -117,21 +117,24 @@ object IndexStore {
     * per file, in path order, a directory standing for every visible
     * file under it (names starting with `_` or `.` are not data).
     * Keys [[corpusFingerprintMemo]] and [[graft.Tables.load]]'s schema
-    * memo. Throws when a path does not exist. */
+    * memo. Throws when a path does not exist. The walk uses
+    * `listStatus`: `listFiles` builds a `LocatedFileStatus` per file,
+    * which loads the file's permissions, and on a local file system
+    * without the native Hadoop library that forks `ls -ld` per file. */
   private[graft] def filesIdentity(spark: SparkSession, paths: Seq[String]): String = {
     val conf = spark.sparkContext.hadoopConfiguration
+    def walk(fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path)
+        : Seq[org.apache.hadoop.fs.FileStatus] =
+      fs.listStatus(dir).toSeq.flatMap(s => if (s.isDirectory) walk(fs, s.getPath) else Seq(s))
     val files = paths.flatMap { f =>
       val p = new org.apache.hadoop.fs.Path(f)
       val fs = p.getFileSystem(conf)
       val st = fs.getFileStatus(p)
       if (!st.isDirectory) Seq(f -> st)
-      else {
-        val it = fs.listFiles(p, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .filterNot(s => s.getPath.getName.startsWith("_") ||
-            s.getPath.getName.startsWith("."))
-          .map(s => s.getPath.toString -> s).toSeq
-      }
+      else walk(fs, p)
+        .filterNot(s => s.getPath.getName.startsWith("_") ||
+          s.getPath.getName.startsWith("."))
+        .map(s => s.getPath.toString -> s)
     }
     val sb = new StringBuilder
     files.sortBy(_._1).foreach { case (f, st) =>

@@ -1,10 +1,10 @@
 package graft
 
+import graft.DumpFixtures.bigReleases
 import graft.TestDirs.withTempDir
-import graft.sources.DiscogsXml
-import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import graft.sources.{DiscogsXml, DumpRange, DumpRangeRDD}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,49 +41,6 @@ class DiscogsLoadSpec extends AnyFunSuite {
         |    <labels><label name="Dropped" catno="D1" id="5"/></labels></release>
         |</releases>
         |""".stripMargin)
-    f.getPath
-  }
-
-  /** A gz releases dump above [[DiscogsXml.SplitMinGzBytes]], so the
-    * load splits it, holding every case the split's tag scan must read
-    * as the parser does: self-closing records, tag text inside
-    * comments, CDATA sections and quoted attribute values, processing
-    * instructions, and a `<release>` nested inside a record. Id 7 comes
-    * again at the very end with other content and children, so its two
-    * copies land in different chunks and only the first may survive. */
-  private def bigReleases(dir: File): String = {
-    val f = new File(dir, "releases-big.xml.gz")
-    val rnd = new scala.util.Random(8)
-    val out = new java.io.OutputStreamWriter(
-      new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f)), "UTF-8")
-    try {
-      out.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<releases>\n")
-      (1 to 4000).foreach { id =>
-        // random text, so the dump stays above the line in few records
-        val noise = Seq.fill(6)(rnd.nextLong().toHexString).mkString(" ")
-        if (id % 97 == 0) out.write(s"""  <release id="$id" status="Accepted"/>\n""")
-        else {
-          out.write(s"""  <release id="$id" status="${if (id % 89 == 0) "a>b" else "Accepted"}">""")
-          out.write(s"<title>Release $id $noise</title>")
-          out.write(s"""<labels><label name="L$id" catno="C$id" id="${id % 50}"/></labels>""")
-          if (id % 3 == 0)
-            out.write(s"<notes><![CDATA[$id < 2 </release> <release id=\"${300000 + id}\">]]></notes>")
-          if (id % 5 == 0)
-            out.write(s"""<videos><video src="http://v/$id" duration="$id" embed="true"><title>v$id</title></video></videos>""")
-          if (id % 7 == 0)
-            out.write(s"""<extra><release id="${200000 + id}" status="Inner"><title>inner</title></release></extra>""")
-          if (id % 11 == 0) out.write("<!-- </release> <release id=\"1\"> -->")
-          out.write("</release>\n")
-        }
-        if (id % 13 == 0)
-          out.write(s"""  <!-- <release id="${100000 + id}" status="Ghost"><title>ghost</title></release> -->\n""")
-        if (id % 17 == 0) out.write(s"  <?graft skip <release>?>\n")
-      }
-      out.write("""  <release id="7" status="Accepted"><title>Seven again</title>""" +
-        """<labels><label name="Late" catno="L7" id="3"/></labels></release>""" + "\n")
-      out.write("</releases>\n")
-    } finally out.close()
-    assert(f.length >= DiscogsXml.SplitMinGzBytes, s"${f.length} bytes: below the split line")
     f.getPath
   }
 
@@ -168,21 +125,13 @@ class DiscogsLoadSpec extends AnyFunSuite {
     out
   }
 
-  /** Every chunk directory anywhere under `dir`. */
-  private def chunkDirs(dir: String): Seq[String] =
-    if (!new File(dir).exists()) Nil
-    else {
-      val walk = Files.walk(new File(dir).toPath)
-      try walk.iterator().asScala.map(_.toString).filter(_.contains("/_chunks-")).toSeq
-      finally walk.close()
-    }
-
   test("a dump above the split line lands what the one-task parse lands, first-wins survivors included") {
+    // the one-task parse: the XML data source reads a gz dump in one task
     withTempDir("graft-load-split") { dir =>
       val files = Seq(bigReleases(dir))
-      assert(DiscogsXml.chunkCount(files.head, new File(files.head).length,
+      assert(DiscogsXml.rangeCount(files.head, new File(files.head).length,
         spark.sparkContext.defaultParallelism) > 1)
-      val want = DiscogsXml.loadAll(spark, files)
+      val want = XmlReferee.tables(spark, files.head)
       Seq(None, Some(new File(dir, "staged").getPath)).foreach { restage =>
         val out = new File(dir, s"out-${restage.isDefined}").getPath
         val printed = runCounted(DiscogsLoad.Opts(files = files, out = out, restageDir = restage))
@@ -198,32 +147,46 @@ class DiscogsLoadSpec extends AnyFunSuite {
         assert(release.filter("id = 7").collect().map(_.getAs[String]("title")).toSeq
           .map(_.startsWith("Release 7 ")) == Seq(true))
         assert(spark.read.parquet(s"$out/release_label").filter("label = 'Late'").isEmpty)
-        assert(chunkDirs(out).isEmpty && restage.forall(chunkDirs(_).isEmpty), "chunks left behind")
+        assert(new File(out).list().toSet == Set("release", "release_label", "release_video"),
+          s"left under --out: ${new File(out).list().mkString(", ")}")
+        restage.foreach(rd => assert(new File(rd).list().toSet == Set("d0"), new File(rd).list().mkString(", ")))
       }
     }
   }
 
-  test("a split dump's chunks are each scanned once, and none is left after a failed run") {
+  test("a dump's ranges are each scanned once; a failed run leaves only landed tables") {
     val sc = spark.sparkContext
     def persisted = sc.getPersistentRDDs.keySet
-    withTempDir("graft-load-chunks") { dir =>
+    withTempDir("graft-load-ranges") { dir =>
       val big = bigReleases(dir)
       val out = new File(dir, "out").getPath
-      val scans = fileScans(executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(big), out = out), spark)))
-      val chunks = scans.flatten.filter(_.contains("/_chunks-"))
-      assert(chunks.distinct.size == sc.defaultParallelism, chunks.distinct.mkString("\n"))
-      assert(chunks.size == chunks.distinct.size, s"a chunk was scanned twice:\n${chunks.mkString("\n")}")
-      assert(!scans.flatten.contains(big), "the dump itself was parsed beside its chunks")
-      assert(chunkDirs(out).isEmpty, "chunks left after a successful run")
+      val ranges = rangeScans(executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(big), out = out), spark)))
+      assert(ranges.map(_.path).distinct == Seq(big))
+      assert(ranges.size == sc.defaultParallelism, ranges.mkString("\n"))
+      assertScannedOnceAndCovered(ranges)
 
       val before = persisted
       val bad = badOut(dir)
       intercept[Exception](DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(big), out = bad.getPath), spark))
-      assert(chunkDirs(bad.getPath).isEmpty, "chunks left after a failed run")
       Seq("release", "release_video").foreach { t =>
         assert(new File(bad, s"$t/_SUCCESS").exists(), s"sibling $t did not land")
       }
+      // the dangling symlink is the run's input, not its output
+      assert(bad.list().toSet == Set("release", "release_video", "release_label"),
+        s"left under --out: ${bad.list().mkString(", ")}")
       assert(persisted == before)
+    }
+  }
+
+  /** Each range in `ranges` is scanned once, and the ranges of each
+    * file cover it from byte 0 to its end, with no gap or overlap. */
+  private def assertScannedOnceAndCovered(ranges: Seq[DumpRange]): Unit = {
+    assert(ranges.size == ranges.distinct.size, s"a range was scanned twice:\n${ranges.mkString("\n")}")
+    ranges.groupBy(_.path).foreach { case (f, rs) =>
+      val sorted = rs.sortBy(_.lo)
+      assert(sorted.head.lo == 0L, s"$f: bytes before ${sorted.head.lo} unread")
+      sorted.zip(sorted.tail).foreach { case (a, b) => assert(a.hi == b.lo, s"$f: $a then $b") }
+      assert(sorted.last.hi == Long.MaxValue, s"$f: the last range ends at ${sorted.last.hi}")
     }
   }
 
@@ -256,26 +219,27 @@ class DiscogsLoadSpec extends AnyFunSuite {
     case other => other +: other.children.flatMap(nodes)
   }
 
-  /** Scanned files of each file scan across `plans`, counting the plan
-    * behind a cached relation once however many queries read it. */
-  private def fileScans(plans: Seq[SparkPlan]): Seq[Seq[String]] = {
-    val all = plans.flatMap(nodes)
-    val cached = all.collect { case m: InMemoryTableScanExec => m.relation.cacheBuilder }
-      .distinct.flatMap(b => nodes(b.cachedPlan))
-    (all ++ cached).collect { case s: FileSourceScanExec =>
+  /** Scanned files of each file scan across `plans`. */
+  private def fileScans(plans: Seq[SparkPlan]): Seq[Seq[String]] =
+    plans.flatMap(nodes).collect { case s: FileSourceScanExec =>
       s.relation.location.inputFiles.toSeq.map(u => new File(new java.net.URI(u)).getPath)
     }
-  }
 
-  test("each dump file is scanned once per run and the output is never read back") {
+  /** The dump ranges the reader's scans across `plans` read, one entry
+    * per scan of a range. */
+  private def rangeScans(plans: Seq[SparkPlan]): Seq[DumpRange] =
+    plans.flatMap(nodes).collect { case s: RDDScanExec => s.rdd }
+      .collect { case d: DumpRangeRDD => d.ranges.toSeq }.flatten
+
+  test("each dump's ranges are scanned once and cover it; output is never read back") {
     withTempDir("graft-load-scans") { dir =>
       val files = fixtures :+ secondReleases(dir)
       val out = new File(dir, "out").getPath
-      val scans = fileScans(executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = files, out = out), spark)))
-      files.foreach { f =>
-        assert(scans.count(_.contains(f)) == 1, s"$f scanned ${scans.count(_.contains(f))} times")
-      }
-      assert(!scans.flatten.exists(_.startsWith(out)), "a query of the load read its output back")
+      val plans = executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = files, out = out), spark))
+      val ranges = rangeScans(plans)
+      assert(ranges.map(_.path).distinct.sorted == files.sorted, ranges.mkString("\n"))
+      assertScannedOnceAndCovered(ranges)
+      assert(!fileScans(plans).flatten.exists(_.startsWith(out)), "a query of the load read its output back")
     }
   }
 

@@ -2,11 +2,15 @@ package graft
 
 import graft.TestDirs.withTempDir
 import graft.sources.DiscogsXml
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 /** Parity tests on the reference's truncated real dump fixtures
   * (FIXTURES.md §3 golden expectations — declared semantics, with the
@@ -30,6 +34,128 @@ class DiscogsXmlSpec extends AnyFunSuite {
       Files.writeString(file.toPath, xml)
       f(file.getPath)
     }
+
+  /** `got` and `want` hold the same rows, duplicates counted. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val extra = got.exceptAll(want).collect()
+    val missing = want.exceptAll(got).collect()
+    assert(extra.isEmpty && missing.isEmpty,
+      s"$what:\n  not in the referee: ${extra.mkString("; ")}\n  missing: ${missing.mkString("; ")}")
+  }
+
+  /** The parsed rows and all tables of `path` against the referee's. */
+  private def assertRefereeAgrees(path: String): Unit = {
+    val name = new File(path).getName
+    val got = DiscogsXml.parsed(spark, path).drop("_graft_file", "_graft_offset")
+    assertSameRows(got, XmlReferee.rows(spark, path), s"$name parsed rows")
+    val tables = load(path)
+    XmlReferee.tables(spark, path).foreach { case (t, want) =>
+      assertSameRows(tables(t), want, s"$name $t")
+    }
+  }
+
+  test("rows and tables equal the XML data source's: fixture dumps, hard-case dump") {
+    withTempDir("graft-referee") { dir =>
+      val big = DumpFixtures.bigReleases(dir)
+      assert(DiscogsXml.rangeCount(big, new File(big).length,
+        spark.sparkContext.defaultParallelism) > 1, "the hard-case dump is read in one range")
+      XmlReferee.withParser(spark, legacy = false)((fixtures :+ big).foreach(assertRefereeAgrees))
+    }
+  }
+
+  test("rows and tables equal the per-record XML data source's on dirty dumps") {
+    // Spark's default XML parser turns the rest of a dump into one
+    // corrupt row at the first record that is not well-formed; its
+    // per-record parser, like this reader, rejects just that record
+    withTempDir("graft-referee-dirty") { dir =>
+      XmlReferee.withParser(spark, legacy = true)(DumpFixtures.dirtyDumps(dir).foreach(assertRefereeAgrees))
+    }
+  }
+
+  test("dirty records: broken ones and bad integers are corrupt rejects, bad ids null_id") {
+    withTempDir("graft-dirty-rejects") { dir =>
+      val releases = DumpFixtures.dirtyDumps(dir).head
+      val rej = DiscogsXml.rejects(spark, releases).collect()
+        .map(r => (r.getString(0), Option(r.getString(1)))).sorted.toSeq
+      // a mismatched tag keeps no field; a bad integer and an
+      // undeclared entity keep what was read before them, the id too
+      assert(rej == Seq(("corrupt", None), ("corrupt", Some("4")), ("corrupt", Some("9")),
+        ("null_id", None), ("null_id", Some("oops"))))
+      val release = load(releases)("release")
+      assert(release.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 5, 6, 7, 8, 10))
+      val byId = release.collect().map(r => r.getInt(0) -> r).toMap
+      assert(byId(1).getString(2) == "Padded title" && byId(1).getString(3) == "US")
+      assert(byId(6).getString(2) == "A & B <C> \u00e9" && byId(6).getString(5) == "x < y & z tail")
+      assert(byId(7).getString(2) == "middleend")
+      assert(byId(8).getString(2) == "second" && byId(8).getInt(8) == 77)
+      assert(byId(10).getInt(8) == -5)
+      assert(byId(5).getSeq[String](6) == Seq("", "Rock"))
+    }
+  }
+
+  test("each parsed record carries its file and its byte offset in the document") {
+    withTempDir("graft-order-key") { dir =>
+      val xml = (Seq("<releases>") ++ (1 to 50).map(i =>
+        s"""  <release id="$i" status="Accepted"><title>T\u00e9 $i</title></release>""") ++
+        Seq("</releases>")).mkString("\n")
+      val plain = new File(dir, "keyed.xml")
+      Files.writeString(plain.toPath, xml)
+      val bytes = xml.getBytes(UTF_8)
+      def offsetOf(i: Int): Long = {
+        val needle = s"""<release id="$i" """.getBytes(UTF_8)
+        bytes.indices.find(k => bytes.startsWith(needle, k)).get.toLong
+      }
+      val rows = DiscogsXml.parsed(spark, plain.getPath)
+        .select("_id", "_graft_file", "_graft_offset").collect()
+      assert(rows.map(r => r.getString(0).toInt -> r.getLong(2)).toMap ==
+        (1 to 50).map(i => i -> offsetOf(i)).toMap)
+      assert(rows.forall(_.getString(1) == plain.getPath))
+      // a gz dump read in several ranges: offsets follow document order
+      val big = DumpFixtures.bigReleases(dir)
+      val ids = DiscogsXml.parsed(spark, big).orderBy("_graft_offset")
+        .select("_id").collect().map(_.getString(0).toInt).toSeq
+      assert(ids == (1 to 4000) :+ 7)
+    }
+  }
+
+  test("each range's task reports the file bytes it read and its records as its input") {
+    withTempDir("graft-input-metrics") { dir =>
+      val big = DumpFixtures.bigReleases(dir)
+      val sc = spark.sparkContext
+      val stages = ConcurrentHashMap.newKeySet[Int]()
+      val tasks = new ConcurrentLinkedQueue[(Long, Long)]()
+      val marker = new CountDownLatch(1)
+      // the listener bus is asynchronous: a marker job after the parse
+      // is delivered after every task of it
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+            case Some("graft-input-parse") => e.stageIds.foreach(stages.add)
+            case Some("graft-input-marker") => marker.countDown()
+            case _ => ()
+          }
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (stages.contains(e.stageId)) {
+            val m = e.taskMetrics.inputMetrics
+            tasks.add(m.bytesRead -> m.recordsRead)
+          }
+      }
+      sc.addSparkListener(listener)
+      try {
+        sc.setJobGroup("graft-input-parse", "parse")
+        try DiscogsXml.parsed(spark, big).collect() finally sc.clearJobGroup()
+        sc.setJobGroup("graft-input-marker", "marker")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        assert(marker.await(60, TimeUnit.SECONDS), "listener bus stalled")
+      } finally sc.removeSparkListener(listener)
+      val got = tasks.asScala.toSeq
+      assert(got.size == sc.defaultParallelism, got.mkString(", "))
+      // each task reads the file from its start up to its range's end;
+      // the last one reads all of it
+      assert(got.forall(_._1 > 0) && got.map(_._1).max == new File(big).length, got.mkString(", "))
+      assert(got.map(_._2).sum == 4001, got.mkString(", "))
+    }
+  }
 
   test("detectEntity dispatches on root element, plain and gz") {
     assert(DiscogsXml.detectEntity(res("releases.xml")) == "releases")
@@ -220,7 +346,7 @@ class DiscogsXmlSpec extends AnyFunSuite {
   test("restage preserves rows, schema, and first-wins document order") {
     // duplicate-id fixture: the survivor must still be the FIRST
     // occurrence after the re-stage's repartition scrambles physical
-    // order (__ord column carries document order through)
+    // order (the reader's order key carries document order through)
     val xml =
       """<?xml version="1.0" encoding="UTF-8"?>
         |<releases>

@@ -62,6 +62,14 @@ class HarnessSpec extends AnyFunSuite {
     assert(sc.getPersistentRDDs.keySet == before)
   }
 
+  test("the session's codegen cache holds every class a roster pass generates") {
+    // static conf: it can only be set when the session is built
+    assert(spark.sparkContext.getConf.get("spark.sql.codegen.cache.maxEntries") ==
+      Harness.CodegenCacheEntries.toString)
+    // a graft.Bench run at sf0.01 compiles about 2,700 distinct classes
+    assert(Harness.CodegenCacheEntries > 2700)
+  }
+
   test("Harness.scala is the only source file that builds a SparkSession") {
     val builder = """SparkSession\s*\.\s*builder\b""".r
     val roots = Seq("src/main/scala", "src/test/scala").map(Paths.get(_))

@@ -386,4 +386,27 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
       s"diffuse corpus recommended $pd — recall will sit at the " +
         "static default's floor")
   }
+
+  test("filesIdentity: one line per visible file, nested ones included, in path order") {
+    TestDirs.withTempDir("graft-identity") { dir =>
+      def put(rel: String, body: String): java.io.File = {
+        val f = new java.io.File(dir, rel)
+        f.getParentFile.mkdirs()
+        java.nio.file.Files.writeString(f.toPath, body)
+        f
+      }
+      val visible = Seq(put("b.parquet", "bb"), put("a.parquet", "a"),
+        put("sub/c.parquet", "ccc"), put("_hidden/d.parquet", "dddd"))
+      put("_SUCCESS", "")
+      put(".a.parquet.crc", "x")
+      put("sub/_SUCCESS", "")
+      val want = visible.sortBy("file:" + _.getPath)
+        .map(f => s"file:${f.getPath}|${f.length}|${f.lastModified}\n").mkString
+      assert(IndexStore.filesIdentity(spark, Seq(dir.getPath)) == want)
+      // a file named on its own stands for itself, as given
+      val one = visible.head
+      assert(IndexStore.filesIdentity(spark, Seq(one.getPath)) ==
+        s"${one.getPath}|${one.length}|${one.lastModified}\n")
+    }
+  }
 }
