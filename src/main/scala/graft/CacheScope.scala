@@ -87,7 +87,7 @@ object CacheScope {
   def release(df: DataFrame): Unit =
     rddsOf(df).foreach(r => try r.unpersist(false) catch { case _: Throwable => () })
 
-  private def rddsOf(df: DataFrame) =
+  private[graft] def rddsOf(df: DataFrame) =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
 
   /** Unpersist every registered cache/checkpoint block. Call after the

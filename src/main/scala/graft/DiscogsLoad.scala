@@ -32,20 +32,17 @@ import scala.util.{Failure, Try}
   * one long task; every other dump parses as one task. No job runs
   * before the groups start and nothing is written but the tables. Each
   * dump is parsed and first-wins-deduped once (the reference writes all
-  * maps of a dump from one pass, `db.rs:55-97`). The dedup shuffle is
-  * the load's only shuffle: it hashes the rows by id, every table's key
-  * starts with that id, and each child row comes from one deduped
-  * parent row, so every table is already clustered and the sink only
-  * sorts. A single-table dump streams straight into the writer. A
-  * fan-out dump (releases, masters) cuts the lineage of its deduped raw
-  * rows once ([[CacheScope.cut]]), writes its 2-3 tables from the cut
-  * side by side, and releases the cut once every one of those writes
-  * has ended. A cut, not a persist: the cut runs eagerly under AQE,
-  * which sizes the dedup shuffle's partitions from the data, while a
-  * cached plan keeps `spark.sql.shuffle.partitions` partitions and
-  * would land every fan-out table in that many files. The writes start
-  * only after the cut has materialized, so they never compete with the
-  * parse.
+  * maps of a dump from one pass, `db.rs:55-97`), in the tasks that read
+  * its ranges, so the load plans no shuffle: every table's key starts
+  * with the dump's id and each child row comes from one deduped parent
+  * row, so the sink only sorts each file. A single-table dump read in
+  * one range streams straight into the writer. A fan-out dump
+  * (releases, masters) writes its 2-3 tables side by side from one cut
+  * of its deduped raw rows ([[DiscogsXml.DumpGroup.landed]]: the cut a
+  * dump read in several ranges needs for its dedup, or one made here)
+  * and releases that cut once every one of those writes has ended. The
+  * writes start only after the cut has materialized, so they never
+  * compete with the parse.
   *
   * --restage DIR re-stages each group's gz dumps to splittable parquet
   * under DIR first (one parse each, paid once; the restage reads a big
@@ -107,14 +104,13 @@ object DiscogsLoad {
 
     def load(k: Int): Seq[String] = {
       val g = open(k)
-      val cut = if (g.fanOut) Some(CacheScope.cut(g.raw)) else None
-      val landing = cut.fold(g)(c => g.copy(raw = c))
+      val landing = if (g.fanOut) g.landed else g
       try sideBySide(landing.tables.map { case (name, df) =>
         () => {
           val n = Sinks.writeParquet(df, name, opts.out)
           println(s"[discogs-load] $name: $n rows -> ${opts.out}/$name")
         }
-      }) finally cut.foreach(CacheScope.release)
+      }) finally landing.release()
       val names = landing.tables.map(_._1)
       jdbc.foreach { cfg =>
         names.foreach(name => Sinks.writeJdbc(spark.read.parquet(s"${opts.out}/$name"), name, cfg))

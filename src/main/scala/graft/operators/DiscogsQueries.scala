@@ -102,11 +102,6 @@ object DiscogsQueries {
 
   def diffDumps(a: DataFrame, b: DataFrame): DataFrame = a.except(b)
 
-  /** §2.3-9: global first-wins dedup is applied at ingest
-    * (DiscogsXml.firstWinsById); this re-checks idempotence. */
-  def dedupReleases(release: DataFrame): DataFrame =
-    release.dropDuplicates("id")
-
   /** §2.3-10a: case-insensitive title search. */
   def searchTitles(release: DataFrame, needle: String): DataFrame =
     release.filter(lower(col("title")).contains(needle.toLowerCase))

@@ -1,14 +1,21 @@
 package graft.sources
 
+import graft.CacheScope
 import graft.schemas.Discogs
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RowsBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
+import org.apache.spark.util.CollectionAccumulator
+import org.roaringbitmap.RoaringBitmap
 
 import java.io.{BufferedInputStream, File, FileInputStream}
 import java.util.zip.GZIPInputStream
+import scala.jdk.CollectionConverters._
 
 /** Discogs XML dump ingest — the Spark-native rebuild of the
   * reference's FSM parsers (reference operators O1-O12, SURVEY §2.1).
@@ -23,11 +30,12 @@ import java.util.zip.GZIPInputStream
   * into rows — the rows Spark's XML data source gives for the same
   * records, without its generic per-record path. gzip is not
   * splittable, so each range inflates the prefix before it; the parse,
-  * which costs far more, runs once per record. Then flat normalization
-  * — nested selects for array columns, `explode` for the one-to-many
-  * child tables, first-wins global dedup on the order key every row
-  * carries, (file path, offset in the file). Catalyst fuses the whole
-  * normalize stage into the scan.
+  * which costs far more, runs once per record. First wins per id with
+  * no shuffle: each range's task keeps the first good row of each id
+  * it reads, and a later range of the same dump drops the ids an
+  * earlier one kept ([[read]]). Then flat normalization — nested
+  * selects for array columns, `explode` for the one-to-many child
+  * tables — which Catalyst fuses into the scan.
   *
   * Quirk policy (SURVEY §2.4): declared semantics, not bug parity —
   * aliases/namevariations load correctly (vs Q2/Q3), absent scalars
@@ -38,15 +46,25 @@ import java.util.zip.GZIPInputStream
 object DiscogsXml {
 
   /** The dumps of one entity: their first-wins-deduped raw rows (each
-    * file deduped on its own, then UNION ALL — see [[loadAll]]) and the
-    * tables derived from `raw`, in write order. A fan-out entity
-    * (releases, masters) derives several tables from the same `raw`,
-    * so a caller that writes them all materializes `raw` once first
-    * and derives the tables from that copy (`copy(raw = ...)`). */
-  final case class DumpGroup(entity: String, raw: DataFrame) {
+    * path deduped on its own, then UNION ALL — see [[loadAll]]) and the
+    * tables derived from `raw`, in write order. `cut` is the lineage
+    * cut `raw` reads from, when there is one ([[CacheScope.cut]]); its
+    * owner frees it with [[release]] once every table is consumed. A
+    * fan-out entity (releases, masters) derives several tables from
+    * the same `raw`, so a caller that writes them all reads them from
+    * one cut ([[landed]]). */
+  final case class DumpGroup(entity: String, raw: DataFrame, cut: Option[DataFrame] = None) {
     /** Whether several tables derive from `raw`; known without building
       * them. */
     def fanOut: Boolean = entity == "releases" || entity == "masters"
+    /** This group with `raw` read from one cut: itself when it has one
+      * already (a path read in several ranges is cut as it is read),
+      * else `raw` cut now. */
+    def landed: DumpGroup =
+      if (cut.isDefined) this
+      else { val c = CacheScope.cut(raw); DumpGroup(entity, c, Some(c)) }
+    /** Unpersists the cut, if any. Idempotent. */
+    def release(): Unit = cut.foreach(CacheScope.release)
     lazy val tables: Seq[(String, DataFrame)] = entity match {
       case "releases" => normalizeReleases(raw)
       case "artists" => normalizeArtists(raw)
@@ -68,7 +86,8 @@ object DiscogsXml {
   private val CorruptCol = "_graft_corrupt"
 
   /** The order key every parsed row carries: its file's path and its
-    * byte offset in the (inflated) file. */
+    * byte offset in the (inflated) file, where [[parsed]] shows it.
+    * The dedup needs none: a range's rows come in document order. */
   private val FileCol = "_graft_file"
   private val OffsetCol = "_graft_offset"
 
@@ -91,8 +110,8 @@ object DiscogsXml {
   }
 
   /** Reject policy: a row is good iff it parsed clean AND carries a
-    * primary key. Null-id rows must never reach [[firstWinsById]] —
-    * they would all collapse into one surviving "record". */
+    * primary key. A reject never claims an id in the first-wins dedup;
+    * null-id rows would all collapse into one surviving "record". */
   private def dropRejects(df: DataFrame, idCol: String): DataFrame =
     df.filter(col(CorruptCol).isNull && col(idCol).isNotNull)
       .drop(CorruptCol)
@@ -131,29 +150,96 @@ object DiscogsXml {
   }
 
   /** Parse one dump to clean raw rows: explicit schema, corrupt and
-    * null-id records dropped, id cast to int, order key kept. The
-    * shared front of [[readGroups]] and [[restage]]. */
+    * null-id records dropped, id cast to int, order key dropped (the
+    * partitions are the ranges, in document order). The shared front
+    * of [[readGroups]] and [[restage]]. */
   private def parseGood(spark: SparkSession, ranges: Seq[DumpRange], entity: String)
       : DataFrame = {
     val idCol = entityMeta(entity)._3
     dropRejects(readRaw(spark, entity, ranges).withColumn(idCol, tryInt(col(idCol))), idCol)
+      .drop(FileCol, OffsetCol)
   }
 
-  /** First-wins global dedup by id — reference O12 semantics
-    * (`HashMap.entry(id).or_insert`, `release.rs:185-187`) made exact
-    * across the whole dump instead of per 10k batch. One shuffle on
-    * the key.
-    *
-    * Ordering: by the order key the reader puts on every row, (file
-    * path, byte offset in the file) — exact document order within a
-    * file however many ranges read it, file paths ascending across the
-    * files of a directory, whatever the partitioning.
-    */
-  private def firstWinsById(df: DataFrame, key: String): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col(FileCol), col(OffsetCol))
-    df.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop(FileCol, OffsetCol, "__rn")
+  /** One entity's dumps, `paths` the ranges of each path in document
+    * order (files of a directory in path order): first wins by id —
+    * reference O12 semantics (`HashMap.entry(id).or_insert`,
+    * `release.rs:185-187`), exact across each path instead of per 10k
+    * batch — and the paths' survivors unioned, with no shuffle. Each
+    * range's task keeps the first good row of each id it reads
+    * ([[firstPerRange]]), so a path read in one range is deduped as it
+    * streams. A path read in several ranges (a big file, or a directory
+    * of files) also needs the ids its earlier ranges kept: the group is
+    * then cut once, its tasks report what each range kept, and
+    * [[dropKeptBefore]] drops those ids from the later ranges. */
+  private def read(spark: SparkSession, entity: String, paths: Seq[Seq[DumpRange]])
+      : DumpGroup = {
+    val good = paths.map(parseGood(spark, _, entity))
+    val schema = good.head.schema
+    val id = schema.fieldIndex(entityMeta(entity)._3)
+    val split = paths.exists(_.size > 1)
+    val kept = if (split) Some(spark.sparkContext.collectionAccumulator[KeptIds]) else None
+    val firsts = spark.sparkContext.union(
+      good.map(_.queryExecution.toRdd.mapPartitions(firstPerRange(id, kept))))
+    val raw = RowsBridge.dataFrame(spark, firsts, schema)
+    if (!split) DumpGroup(entity, raw)
+    else {
+      val cut = CacheScope.cut(raw)
+      // a task that ran twice reported the same entry twice
+      try DumpGroup(entity,
+        dropKeptBefore(spark, cut, paths.map(_.size), id, kept.get.value.asScala.toMap), Some(cut))
+      catch { case e: Throwable => CacheScope.release(cut); throw e }
+    }
+  }
+
+  /** A range's partition, the ids it kept and the bytes of their rows. */
+  private type KeptIds = (Int, (RoaringBitmap, Long))
+
+  /** The first row of each id (an int at ordinal `id`) in `rows`. With
+    * `kept`, the task reports what it kept (a bitmap of ids, about 2
+    * bytes per dense id). */
+  private def firstPerRange(id: Int, kept: Option[CollectionAccumulator[KeptIds]])(
+      rows: Iterator[InternalRow]): Iterator[InternalRow] = {
+    val ids = new RoaringBitmap
+    var bytes = 0L
+    kept.foreach(k => TaskContext.get().addTaskCompletionListener[Unit] { tc =>
+      ids.runOptimize()
+      k.add(tc.partitionId -> (ids -> bytes))
+    })
+    rows.filter { r =>
+      val first = ids.checkedAdd(r.getInt(id))
+      if (first) bytes += r.asInstanceOf[UnsafeRow].getSizeInBytes
+      first
+    }
+  }
+
+  /** The rows of `cut` — one partition per range, paths in order, path
+    * p read in `sizes(p)` ranges, each range deduped on its own and
+    * `ranges` what it kept — less every row whose id an earlier range
+    * of the same path kept: the task of range k ORs the kept ids of
+    * the ranges before it. The result has ceil(bytes of the rows the
+    * ranges kept / the session's advisory partition size) partitions,
+    * at most one per range, as AQE sizes a shuffle's. */
+  private def dropKeptBefore(spark: SparkSession, cut: DataFrame, sizes: Seq[Int], id: Int,
+      ranges: Map[Int, (RoaringBitmap, Long)]): DataFrame = {
+    val rows = CacheScope.rddsOf(cut).head
+    val n = rows.getNumPartitions
+    require(ranges.keySet == (0 until n).toSet, s"kept ids of ${ranges.size} of $n ranges")
+    val kept = (0 until n).map(ranges(_)._1).toArray
+    // per partition: the first partition of its path, or -1 when its
+    // path is read in one range
+    val first = sizes.zip(sizes.scanLeft(0)(_ + _))
+      .flatMap { case (k, at) => Seq.fill(k)(if (k > 1) at else -1) }.toArray
+    val keptBytes = ranges.values.map(_._2).sum
+    val advisory = spark.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val parts = math.min(n, math.max(1L, (keptBytes + advisory - 1) / advisory).toInt)
+    val dropped = rows.mapPartitionsWithIndex { (i, it) =>
+      if (first(i) < 0 || first(i) == i) it
+      else {
+        val seen = RoaringBitmap.or(kept.slice(first(i), i): _*)
+        it.filter(r => !seen.contains(r.getInt(id)))
+      }
+    }
+    RowsBridge.dataFrame(spark, if (parts < n) dropped.coalesce(parts) else dropped, cut.schema)
   }
 
   /** O2: root-element dispatch — peek the first bytes of the (possibly
@@ -339,22 +425,17 @@ object DiscogsXml {
   def restage(spark: SparkSession, path: String, outDir: String,
       partitions: Int = 0): String = {
     val entity = detectEntity(path)
-    val idCol = entityMeta(entity)._3
     val n = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism
     val staged = s"$outDir/$entity"
-    // first-wins dedup runs HERE, once, on the reader's order key, so
-    // every staged read afterwards is pure map-side work — no shuffle
-    // at all. The staged files keep no order column: each staged dump
-    // is deduped already, so cross-dump precedence must go through
-    // DiscogsQueries.unionDumps, never a raw union + first-wins. One
-    // shuffle total: the explicit repartition on the id satisfies the
-    // window's required clustering, so the window sorts in place and
-    // the writer inherits the n-way partitioning with no second
-    // exchange.
-    firstWinsById(
-      parseGood(spark, alone(spark, entity, path), entity)
-        .repartition(n, col(idCol)), idCol)
-      .write.mode("overwrite").parquet(staged)
+    // the dump is read through the load's own first-wins ([[read]]),
+    // once, so every staged read afterwards is pure map-side work. The
+    // staged files keep no order column: each staged dump is deduped
+    // already, so cross-dump precedence must go through
+    // DiscogsQueries.unionDumps. The one shuffle lays the staged files
+    // out n ways by id.
+    val g = read(spark, entity, Seq(alone(spark, entity, path)))
+    try g.raw.repartition(n, col(entityMeta(entity)._3)).write.mode("overwrite").parquet(staged)
+    finally g.release()
     staged
   }
 
@@ -369,10 +450,12 @@ object DiscogsXml {
     * choice, not a default: route the result through
     * [[graft.operators.DiscogsQueries.unionDumps]], or pass a directory
     * holding all files of one logical dump to [[readGroup]], where
-    * (file, document-order) first-wins applies across its files.
+    * (file, document-order) first-wins applies across its files. A
+    * group's cut stays registered with [[CacheScope]] until
+    * [[CacheScope.releaseAll]].
     */
   def loadAll(spark: SparkSession, paths: Seq[String]): Map[String, DataFrame] =
-    readGroups(spark, groupByEntity(paths)).flatMap(_().tables).toMap
+    readGroups(spark, groupByEntity(paths)).flatMap(g => tracked(g()).tables).toMap
 
   /** Dump files grouped by [[detectEntity]], groups and files in order
     * of first appearance. */
@@ -384,21 +467,28 @@ object DiscogsXml {
   /** One entity's dumps, parsed directly: each path first-wins-deduped
     * on its own, the raw rows unioned, the entity's tables derived. A
     * path may be a directory, read as one logical dump (first wins in
-    * (file path, document order) across its files). */
+    * (file path, document order) across its files). Its cut, if it has
+    * one, stays registered with [[CacheScope]] until
+    * [[CacheScope.releaseAll]] or [[DumpGroup.release]]. */
   def readGroup(spark: SparkSession, entity: String, paths: Seq[String]): DumpGroup =
-    readGroups(spark, Seq(entity -> paths)).head()
+    tracked(readGroups(spark, Seq(entity -> paths)).head())
+
+  private def tracked(g: DumpGroup): DumpGroup = {
+    g.cut.foreach(CacheScope.trackRddsOf)
+    g
+  }
 
   /** [[readGroup]] for each of `groups` (entity, paths), with every
     * dump file's ranges cut for one load of all of them: each file gets
     * its share of the cores by size ([[rangeCount]]). A group's frames
     * are built when its function is called, so a caller that loads the
-    * groups side by side also plans them side by side. */
+    * groups side by side also plans them side by side; a group with a
+    * path read in several ranges is cut then, and the caller frees the
+    * cut with [[DumpGroup.release]]. */
   def readGroups(spark: SparkSession, groups: Seq[(String, Seq[String])])
       : Seq[() => DumpGroup] = {
     groups.foreach { case (e, _) => require(entityMeta.contains(e), s"unknown entity $e") }
-    groups.zip(plan(spark, groups)).map { case ((e, _), ranges) =>
-      () => group(e, ranges.map(r => firstWinsById(parseGood(spark, r, e), entityMeta(e)._3)))
-    }
+    groups.zip(plan(spark, groups)).map { case ((e, _), ranges) => () => read(spark, e, ranges) }
   }
 
   /** [[readGroup]] over [[restage]]d paths of one entity (each
@@ -410,9 +500,6 @@ object DiscogsXml {
     val foreign = stagedPaths.filterNot(new java.io.File(_).getName == entity)
     require(foreign.isEmpty,
       s"not re-staged $entity directories: ${foreign.mkString(", ")}")
-    group(entity, stagedPaths.map(spark.read.parquet(_)))
+    DumpGroup(entity, stagedPaths.map(spark.read.parquet(_)).reduce(_.unionByName(_)))
   }
-
-  private def group(entity: String, raws: Seq[DataFrame]): DumpGroup =
-    DumpGroup(entity, raws.reduce(_.unionByName(_)))
 }

@@ -446,11 +446,6 @@ object IndexStore {
     loadPqIndex(spark, dir)
   }
 
-  /** [[recommendedNProbe]] for the PQ artifact namespace. */
-  def recommendedPqNProbe(spark: SparkSession, corpusDir: String)
-      : Option[Int] =
-    nProbeOfMeta(readMeta(spark, pqIndexDir(corpusDir)))
-
   /** Load-or-build for a standing kNN graph (the s21 query path's and
     * s24 maintenance path's consumer seam): fingerprint-gated like
     * [[ensureCellIndex]], but the artifact is a catalog table BUCKETED

@@ -38,13 +38,11 @@ object Sinks {
 
   /** Engine-native sink: overwrite parquet, each file sorted by the
     * table's index key, so row-group min/max skipping serves later
-    * point lookups and merge joins. The sink adds no shuffle: the
-    * clustering comes from the frame's own partitioning — a Discogs
-    * table's key starts with its dump's id, and the dump's first-wins
-    * dedup shuffle has already hashed its rows by that id (see
-    * [[graft.DiscogsLoad]]) — so the file count is whatever AQE made of
-    * that shuffle. Returns the number of rows written, counted by the
-    * write itself (no read-back job). */
+    * point lookups and merge joins. The sink adds no shuffle: one file
+    * per partition of the frame, each sorted in place — the load hands
+    * it each Discogs table in as many partitions as its dump's rows
+    * need (see [[graft.DiscogsLoad]]). Returns the number of rows
+    * written, counted by the write itself (no read-back job). */
   def writeParquet(df: DataFrame, table: String, outDir: String): Long = {
     val keys = indexKeys.getOrElse(table, Nil).map(col)
     val rows = Observation()

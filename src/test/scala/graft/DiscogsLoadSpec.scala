@@ -3,6 +3,8 @@ package graft
 import graft.DumpFixtures.bigReleases
 import graft.TestDirs.withTempDir
 import graft.sources.{DiscogsXml, DumpRange, DumpRangeRDD}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, RDDScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -154,16 +156,83 @@ class DiscogsLoadSpec extends AnyFunSuite {
     }
   }
 
+  test("first wins across ranges as in one task: a reject claims no id, a repeat goes with its children") {
+    withTempDir("graft-load-repeats") { dir =>
+      val f = DumpFixtures.repeatedReleases(dir)
+      // the ranges each copy of ids 2, 3 and 1600 is read in: 0 and a
+      // later one but the next, 0 and a later one, and two adjacent ones
+      val ranges = DiscogsXml.parsed(spark, f).select("_id").rdd
+        .mapPartitionsWithIndex((i, rows) => rows.map(r => r.getString(0) -> i))
+        .filter(r => Set("2", "3", "1600")(r._1)).collect().toSeq
+        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      assert(ranges("2").head == 0 && ranges("2")(1) >= 2, ranges)
+      assert(ranges("3").head == 0 && ranges("3")(1) >= 1, ranges)
+      assert(ranges("1600")(1) == ranges("1600").head + 1 && ranges("1600").head > 0, ranges)
+      val want = XmlReferee.tables(spark, f)
+      val tables = Seq("release", "release_label", "release_video")
+      Seq(None, Some(new File(dir, "staged").getPath)).foreach { restage =>
+        val out = new File(dir, s"out-${restage.isDefined}").getPath
+        runCounted(DiscogsLoad.Opts(files = Seq(f), out = out, restageDir = restage))
+        val got = tables.map(t => t -> spark.read.parquet(s"$out/$t")).toMap
+        tables.foreach(t => assertSameRows(got(t), want(t), s"$t ($restage)"))
+        assert(got("release").filter("id in (2, 3, 1600)").orderBy("id").collect()
+          .map(_.getAs[String]("title").split(' ').take(2).mkString(" ")).toSeq ==
+          Seq("Good two", "Release 3", "Release 1600"))
+        Seq("release_label" -> "label", "release_video" -> "title").foreach { case (t, c) =>
+          val byRelease = got(t).filter("release_id in (2, 3, 1600)").collect()
+            .map(r => r.getAs[Int]("release_id") -> r.getAs[String](c)).toSet
+          assert(byRelease == Set(2 -> "Two", 3 -> "L3", 1600 -> "L1600"), s"$t: $byRelease")
+        }
+      }
+
+      // a directory is one dump: its second file repeats an id of the first
+      val parts = new File(dir, "parts")
+      parts.mkdirs()
+      def release(id: Int, tag: String) =
+        s"""<release id="$id" status="Accepted"><title>$tag</title>""" +
+          s"""<labels><label name="$tag" catno="C$id" id="$id"/></labels></release>"""
+      val first = Seq(release(1, "One"), release(2, "Two"))
+      val second = Seq(release(2, "Two again"), release(4, "Four"))
+      def write(file: File, records: Seq[String]): Unit =
+        Files.writeString(file.toPath, records.mkString("<releases>\n", "\n", "\n</releases>\n"))
+      write(new File(parts, "a.xml"), first)
+      write(new File(parts, "b.xml"), second)
+      val whole = new File(dir, "whole.xml")
+      write(whole, first ++ second)
+      val g = DiscogsXml.readGroup(spark, "releases", Seq(parts.getPath))
+      try {
+        val byFile = g.tables.toMap
+        XmlReferee.tables(spark, whole.getPath).foreach { case (t, w) =>
+          assertSameRows(byFile(t), w, s"directory $t")
+        }
+        assert(byFile("release_label").filter("label = 'Two again'").isEmpty)
+      } finally g.release()
+    }
+  }
+
+  /** `got` and `want` hold the same rows, duplicates counted. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val w = want.select(got.columns.map(org.apache.spark.sql.functions.col): _*)
+    val extra = got.exceptAll(w).collect()
+    val missing = w.exceptAll(got).collect()
+    assert(extra.isEmpty && missing.isEmpty,
+      s"$what:\n  not in the referee: ${extra.mkString("; ")}\n  missing: ${missing.mkString("; ")}")
+  }
+
   test("a dump's ranges are each scanned once; a failed run leaves only landed tables") {
     val sc = spark.sparkContext
     def persisted = sc.getPersistentRDDs.keySet
     withTempDir("graft-load-ranges") { dir =>
       val big = bigReleases(dir)
       val out = new File(dir, "out").getPath
-      val ranges = rangeScans(executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(big), out = out), spark)))
+      val plans = executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(big), out = out), spark))
+      val ranges = rangeScans(plans)
       assert(ranges.map(_.path).distinct == Seq(big))
       assert(ranges.size == sc.defaultParallelism, ranges.mkString("\n"))
       assertScannedOnceAndCovered(ranges)
+      // the ranges' survivors land without a shuffle, one file a table
+      assert(!plans.flatMap(nodes).exists(_.isInstanceOf[ShuffleExchangeExec]))
+      assertOneFileEach(out, Seq("release", "release_label", "release_video"))
 
       val before = persisted
       val bad = badOut(dir)
@@ -226,10 +295,25 @@ class DiscogsLoadSpec extends AnyFunSuite {
     }
 
   /** The dump ranges the reader's scans across `plans` read, one entry
-    * per scan of a range. */
-  private def rangeScans(plans: Seq[SparkPlan]): Seq[DumpRange] =
+    * per scan of a range: each scan's RDD is the reader's or is derived
+    * from it (the first-wins dedup runs in the scan's tasks). A cut's
+    * RDD depends on its stored blocks, not on what it was cut from. */
+  private def rangeScans(plans: Seq[SparkPlan]): Seq[DumpRange] = {
+    def readers(r: RDD[_]): Seq[DumpRangeRDD] = r match {
+      case d: DumpRangeRDD => Seq(d)
+      case other => other.dependencies.flatMap(d => readers(d.rdd))
+    }
     plans.flatMap(nodes).collect { case s: RDDScanExec => s.rdd }
-      .collect { case d: DumpRangeRDD => d.ranges.toSeq }.flatten
+      .flatMap(readers).flatMap(_.ranges.toSeq)
+  }
+
+  /** Asserts that every table of `tables` landed under `out` in one
+    * parquet file. */
+  private def assertOneFileEach(out: String, tables: Seq[String]): Unit =
+    tables.foreach { t =>
+      val parts = new File(out, t).list().filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+      assert(parts.length == 1, s"$t landed in ${parts.length} files")
+    }
 
   test("each dump's ranges are scanned once and cover it; output is never read back") {
     withTempDir("graft-load-scans") { dir =>
@@ -243,17 +327,13 @@ class DiscogsLoadSpec extends AnyFunSuite {
     }
   }
 
-  test("at fixture size each table lands in one file, and each dump's dedup is the load's only shuffle") {
+  test("at fixture size the load plans no shuffle and each table lands in one file") {
     withTempDir("graft-load-layout") { dir =>
       val out = new File(dir, "out").getPath
       val plans = executedPlans(DiscogsLoad.run(DiscogsLoad.Opts(files = fixtures, out = out), spark))
-      tableNames.foreach { t =>
-        val parts = new File(out, t).list().filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        assert(parts.length == 1, s"$t landed in ${parts.length} files")
-      }
+      assertOneFileEach(out, tableNames)
       val exchanges = plans.flatMap(nodes).collect { case e: ShuffleExchangeExec => e }
-      assert(exchanges.size == fixtures.size,
-        s"${exchanges.size} shuffles for ${fixtures.size} dumps:\n${exchanges.mkString("\n")}")
+      assert(exchanges.isEmpty, s"${exchanges.size} shuffles:\n${exchanges.mkString("\n")}")
     }
   }
 }

@@ -52,6 +52,42 @@ object DumpFixtures {
     f.getPath
   }
 
+  /** A gz releases dump of 4,000 records above
+    * [[DiscogsXml.SplitMinBytes]], so a load reads it in several
+    * ranges, whose ids repeat far apart: the first copy of id 2 is a
+    * reject that keeps its id (a bad integer) and its copy after record 2,800 is
+    * good, with a label and a video; ids 3 and 1,600 are kept where
+    * they first come and come again after record 2,800 with other
+    * content, a label and a video. */
+  def repeatedReleases(dir: File): String = {
+    val f = new File(dir, "releases-repeats.xml.gz")
+    val rnd = new scala.util.Random(11)
+    val out = new java.io.OutputStreamWriter(
+      new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f)), "UTF-8")
+    def release(id: Int, title: String, children: String = "") =
+      s"""  <release id="$id" status="Accepted"><title>$title</title>$children</release>\n"""
+    def children(id: Int, tag: String) =
+      s"""<labels><label name="$tag" catno="C$id" id="$id"/></labels>""" +
+        s"""<videos><video src="http://v/$tag" duration="$id" embed="true"><title>$tag</title></video></videos>"""
+    try {
+      out.write("<?xml version=\"1.0\" encoding=\"UTF-8\"?>\n<releases>\n")
+      out.write("""  <release id="2" status="Accepted"><title>Bad int</title>""" +
+        """<master_id is_main_release="true">12x</master_id>""" + children(2, "Rejected") + "</release>\n")
+      (3 to 4000).foreach { id =>
+        val noise = Seq.fill(6)(rnd.nextLong().toHexString).mkString(" ")
+        out.write(release(id, s"Release $id $noise", children(id, s"L$id")))
+        if (id == 2800) {
+          out.write(release(2, "Good two", children(2, "Two")))
+          out.write(release(3, "Three again", children(3, "Late")))
+          out.write(release(1600, "Again", children(1600, "Late")))
+        }
+      }
+      out.write("</releases>\n")
+    } finally out.close()
+    assert(f.length >= DiscogsXml.SplitMinBytes, s"${f.length} bytes: below the range line")
+    f.getPath
+  }
+
   /** One plain dump per entity holding what a real dump gets wrong or
     * writes oddly: a record that is not well-formed (a mismatched end
     * tag, an undeclared entity), a bad or missing id, a bad integer in

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestDirs.{atIndexRoot, withIndexRoot}
 import graft.sources.IndexStore
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +15,9 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
 
   lazy val spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
+  /** The index root the first tests share: the first builds, the later
+    * ones serve or rebuild what it saved. */
+  private lazy val specRoot = suiteTempDir("graft_index_spec")
 
   private def dropTable(name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
@@ -26,29 +30,28 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
     df.collect().map(_.mkString("|")).toSet
 
   test("saved cell index serves bit-identical results to the inline build") {
-    IndexStore.root = "/tmp/graft_index_spec"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(IndexStore.root))
-    val inline = rowSet(SparkEntry.queries("s23_cell_search")(spark, sfDir))
-    CacheScope.releaseAll()
-    // first call: fingerprint miss → build + save + read back
-    val first = rowSet(SparkEntry.queries("s25_standing_search")(spark, sfDir))
-    CacheScope.releaseAll()
-    assert(first == inline, "save/load/serve diverged from the inline build")
-    // second call: fingerprint hit → pure load; the plans must be
-    // parquet scans of the artifact, not a rebuild
-    val e = Tables.embeddings(spark, sfDir)
-    // same pinned sizing as the s25 entry — a different nCells is a
-    // different fingerprint and would rebuild instead of warm-serving
-    val (_, _, _, graph) = IndexStore.ensureCellIndex(spark, sfDir, e,
-      nCells = operators.Similarity.IvfNCells)
-    val p = graph.queryExecution.executedPlan.toString
-    assert(p.contains("FileScan parquet") &&
-      p.contains("graft_index_spec"),
-      s"warm ensure did not serve from the saved artifact:\n$p")
-    val second = rowSet(SparkEntry.queries("s25_standing_search")(spark, sfDir))
-    CacheScope.releaseAll()
-    assert(second == inline)
+    atIndexRoot(specRoot) {
+      val inline = rowSet(SparkEntry.queries("s23_cell_search")(spark, sfDir))
+      CacheScope.releaseAll()
+      // first call: fingerprint miss → build + save + read back
+      val first = rowSet(SparkEntry.queries("s25_standing_search")(spark, sfDir))
+      CacheScope.releaseAll()
+      assert(first == inline, "save/load/serve diverged from the inline build")
+      // second call: fingerprint hit → pure load; the plans must be
+      // parquet scans of the artifact, not a rebuild
+      val e = Tables.embeddings(spark, sfDir)
+      // same pinned sizing as the s25 entry — a different nCells is a
+      // different fingerprint and would rebuild instead of warm-serving
+      val (_, _, _, graph) = IndexStore.ensureCellIndex(spark, sfDir, e,
+        nCells = operators.Similarity.IvfNCells)
+      val p = graph.queryExecution.executedPlan.toString
+      assert(p.contains("FileScan parquet") &&
+        p.contains("graft_index_spec"),
+        s"warm ensure did not serve from the saved artifact:\n$p")
+      val second = rowSet(SparkEntry.queries("s25_standing_search")(spark, sfDir))
+      CacheScope.releaseAll()
+      assert(second == inline)
+    }
   }
 
   test("fingerprint sees content: swapping two embeddings changes it") {
@@ -94,34 +97,36 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
   }
 
   test("stale fingerprint forces a rebuild; fresh one is reused") {
-    IndexStore.root = "/tmp/graft_index_spec"
-    val e = Tables.embeddings(spark, sfDir)
-    val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val metaPath = java.nio.file.Paths.get(
-      s"${IndexStore.root}/$key/_graft_meta")
-    IndexStore.ensureCellIndex(spark, sfDir, e)
-    CacheScope.releaseAll()
-    val good = new String(java.nio.file.Files.readAllBytes(metaPath), "UTF-8")
-    // corrupt the fingerprint: the next ensure must rebuild and restore it
-    java.nio.file.Files.write(metaPath, "stale".getBytes("UTF-8"))
-    IndexStore.ensureCellIndex(spark, sfDir, e)
-    CacheScope.releaseAll()
-    val after = new String(java.nio.file.Files.readAllBytes(metaPath), "UTF-8")
-    assert(after == good, "stale index was not rebuilt")
+    atIndexRoot(specRoot) {
+      val e = Tables.embeddings(spark, sfDir)
+      val key = sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
+      val metaPath = java.nio.file.Paths.get(
+        s"${IndexStore.root}/$key/_graft_meta")
+      IndexStore.ensureCellIndex(spark, sfDir, e)
+      CacheScope.releaseAll()
+      val good = new String(java.nio.file.Files.readAllBytes(metaPath), "UTF-8")
+      // corrupt the fingerprint: the next ensure must rebuild and restore it
+      java.nio.file.Files.write(metaPath, "stale".getBytes("UTF-8"))
+      IndexStore.ensureCellIndex(spark, sfDir, e)
+      CacheScope.releaseAll()
+      val after = new String(java.nio.file.Files.readAllBytes(metaPath), "UTF-8")
+      assert(after == good, "stale index was not rebuilt")
+    }
   }
 
   test("cell-partitioned graph scan prunes to the probed cells") {
-    IndexStore.root = "/tmp/graft_index_spec"
-    val e = Tables.embeddings(spark, sfDir)
-    val (_, _, _, graph) = IndexStore.ensureCellIndex(spark, sfDir, e)
-    val pruned = graph.filter(col("cell") === 3)
-    val p = pruned.queryExecution.executedPlan.toString
-    // the cell filter must land in PartitionFilters (directory-level
-    // skip), not in the data filters of a full scan
-    assert(p.contains("PartitionFilters: [isnotnull(cell"),
-      s"cell filter not pushed to partition pruning:\n$p")
-    assert(pruned.count() > 0)
-    CacheScope.releaseAll()
+    atIndexRoot(specRoot) {
+      val e = Tables.embeddings(spark, sfDir)
+      val (_, _, _, graph) = IndexStore.ensureCellIndex(spark, sfDir, e)
+      val pruned = graph.filter(col("cell") === 3)
+      val p = pruned.queryExecution.executedPlan.toString
+      // the cell filter must land in PartitionFilters (directory-level
+      // skip), not in the data filters of a full scan
+      assert(p.contains("PartitionFilters: [isnotnull(cell"),
+        s"cell filter not pushed to partition pruning:\n$p")
+      assert(pruned.count() > 0)
+      CacheScope.releaseAll()
+    }
   }
 
   test("bucketed kNN graph aggregates and re-registers without exchanges") {
@@ -152,37 +157,38 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
 
   test("s21/s24 serve from the standing kNN graph: saved ≡ rebuilt, " +
       "warm plan reads the bucketed artifact") {
-    IndexStore.root = "/tmp/graft_index_spec"
-    val e = Tables.embeddings(spark, sfDir)
-    // inline library paths — the ground truth the artifact must equal
-    val s21Inline = rowSet(operators.Similarity.graphSearch(e))
-    CacheScope.releaseAll()
-    val s24Inline = rowSet(operators.Similarity.incrementalGraph(e))
-    CacheScope.releaseAll()
-    // wired suite paths: first call builds + saves, rows must match
-    val s21Wired = rowSet(SparkEntry.queries("s21_graph_search")(spark, sfDir))
-    CacheScope.releaseAll()
-    assert(s21Wired == s21Inline,
-      "s21 served from the saved graph diverged from the inline build")
-    val s24Wired = rowSet(
-      SparkEntry.queries("s24_incremental_graph")(spark, sfDir))
-    CacheScope.releaseAll()
-    assert(s24Wired == s24Inline,
-      "s24 maintaining the saved graph diverged from the inline build")
-    // warm ensure is a pure load: the graph frame must be a FileScan
-    // of the bucketed catalog table, with no NN-descent stages
-    val g = operators.Similarity.standingKnnGraph(spark, sfDir, "m5",
-      e.filter(col("vec_id") % 5 =!= 0))
-    val p = g.queryExecution.executedPlan.toString
-    assert(p.contains("FileScan parquet") && p.contains("graft_knn_"),
-      s"warm standing graph is not a read of the saved artifact:\n$p")
-    // the maintenance side's src-keyed work over the artifact is
-    // exchange-free — the bucketed layout doing its job
-    val agg = g.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val pa = agg.queryExecution.executedPlan.toString
-    assert(!pa.contains("Exchange hashpartitioning"),
-      s"src-keyed aggregation over the saved graph still shuffles:\n$pa")
-    CacheScope.releaseAll()
+    atIndexRoot(specRoot) {
+      val e = Tables.embeddings(spark, sfDir)
+      // inline library paths — the ground truth the artifact must equal
+      val s21Inline = rowSet(operators.Similarity.graphSearch(e))
+      CacheScope.releaseAll()
+      val s24Inline = rowSet(operators.Similarity.incrementalGraph(e))
+      CacheScope.releaseAll()
+      // wired suite paths: first call builds + saves, rows must match
+      val s21Wired = rowSet(SparkEntry.queries("s21_graph_search")(spark, sfDir))
+      CacheScope.releaseAll()
+      assert(s21Wired == s21Inline,
+        "s21 served from the saved graph diverged from the inline build")
+      val s24Wired = rowSet(
+        SparkEntry.queries("s24_incremental_graph")(spark, sfDir))
+      CacheScope.releaseAll()
+      assert(s24Wired == s24Inline,
+        "s24 maintaining the saved graph diverged from the inline build")
+      // warm ensure is a pure load: the graph frame must be a FileScan
+      // of the bucketed catalog table, with no NN-descent stages
+      val g = operators.Similarity.standingKnnGraph(spark, sfDir, "m5",
+        e.filter(col("vec_id") % 5 =!= 0))
+      val p = g.queryExecution.executedPlan.toString
+      assert(p.contains("FileScan parquet") && p.contains("graft_knn_"),
+        s"warm standing graph is not a read of the saved artifact:\n$p")
+      // the maintenance side's src-keyed work over the artifact is
+      // exchange-free — the bucketed layout doing its job
+      val agg = g.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val pa = agg.queryExecution.executedPlan.toString
+      assert(!pa.contains("Exchange hashpartitioning"),
+        s"src-keyed aggregation over the saved graph still shuffles:\n$pa")
+      CacheScope.releaseAll()
+    }
   }
 
   test("re-pointing the root cannot pair a meta with another root's " +
@@ -193,10 +199,8 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
     // root B for a DIFFERENT corpus state — a stale graph served with
     // no rebuild. The table name is tagged with its root, so each
     // root owns its tables.
-    val rootA = "/tmp/graft_index_rootiso_a"
-    val rootB = "/tmp/graft_index_rootiso_b"
-    for (r <- Seq(rootA, rootB))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(r))
+    val rootA = suiteTempDir("graft_index_rootiso_a").getPath
+    val rootB = suiteTempDir("graft_index_rootiso_b").getPath
     val e = Tables.embeddings(spark, sfDir)
     def corpus(m: Int) = e.filter(col("vec_id") % 3 === m)
     def build(c: org.apache.spark.sql.DataFrame) =
@@ -278,11 +282,7 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
     // case found it): its search graph has NO edges, and partitionBy of
     // an empty frame writes no parquet footers -- the load must return
     // an empty frame via its explicit schema, not fail inference
-    val prior = IndexStore.root
-    IndexStore.root = "/tmp/graft_index_tiny"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(IndexStore.root))
-    try {
+    withIndexRoot("graft_index_tiny") {
       import spark.implicits._
       val one = Seq((0L, Array.fill(64)(0.25f), 1)).toDF(
         "vec_id", "embedding", "label")
@@ -300,16 +300,12 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
         Tables.embeddings(spark, tdir), nCells = 16)
       assert(again._4.count() == 0)
       CacheScope.releaseAll()
-    } finally { IndexStore.root = prior }
+    }
   }
 
   test("√n-defaulted build records an adaptive nprobe recommendation; " +
       "pinned build does not; the gate survives the property line") {
-    val prior = IndexStore.root
-    IndexStore.root = "/tmp/graft_index_adaptive"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(IndexStore.root))
-    try {
+    withIndexRoot("graft_index_adaptive") {
       val e = Tables.embeddings(spark, sfDir)
       // √n-defaulted (nCells omitted): the build must measure and
       // record the recommendation on the meta's second line
@@ -350,7 +346,7 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
       finally spark.conf.unset("spark.graft.ann.nprobe")
       assert(operators.Similarity.nProbeOf(spark, -1, None) ==
         operators.Similarity.S23NProbe)
-    } finally { IndexStore.root = prior }
+    }
   }
 
   test("adaptiveNProbe reads corpus shape: clustered corpora keep the " +

@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestDirs.withIndexRoot
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -217,11 +218,7 @@ class RetrievalSpec extends AnyFunSuite {
     // it with no explicit knob
     import graft.functions.VectorFunctions.milli_l2
     import org.apache.spark.sql.expressions.Window
-    val prior = graft.sources.IndexStore.root
-    graft.sources.IndexStore.root = "/tmp/graft_index_shipped_gate"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(graft.sources.IndexStore.root))
-    try {
+    withIndexRoot("graft_index_shipped_gate") {
       val e = graft.Tables.embeddings(spark, sfDir)
       val idx = graft.sources.IndexStore.ensureCellIndex(spark, sfDir, e)
       val rec = graft.sources.IndexStore.recommendedNProbe(spark, sfDir)
@@ -255,6 +252,6 @@ class RetrievalSpec extends AnyFunSuite {
       assert(recall >= 0.6,
         s"shipped-default serving recall $recall below the raised 0.6 " +
           s"floor (adaptive nprobe=${rec.get})")
-    } finally { graft.sources.IndexStore.root = prior }
+    }
   }
 }

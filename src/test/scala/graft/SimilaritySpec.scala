@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestDirs.withIndexRoot
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Index-quality GATES for the approximate-nearest-neighbor methods:
@@ -878,109 +879,107 @@ class SimilaritySpec extends AnyFunSuite {
   test("s27 refresh gate: quiet delivery keeps the artifact, drifted " +
       "delivery swaps it and restores fresh-build recall") {
     import org.apache.spark.sql.functions._
-    sources.IndexStore.root = "/tmp/graft_index_s27spec"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val e = Tables.embeddings(spark, sfDir)
-    val standing = e.filter(col("vec_id") % 5 =!= 0)
-    val key = s"${sfDir}_s27spec"
-    val dir = sources.IndexStore.cellIndexDir(key)
-    def meta(): Option[String] = sources.IndexStore.currentMeta(spark, dir)
-    // undisturbed delivery: the audit must NOT fire and the standing
-    // artifact must survive byte-identical (same fingerprint)
-    val quietDelivery = e.filter(col("vec_id") % 5 === 0)
-    val (r1, _) = operators.Similarity.refreshIfNeeded(
-      spark, key, standing, quietDelivery,
-      nCells = operators.Similarity.IvfNCells)
-    CacheScope.releaseAll()
-    val standingFp = meta()
-    assert(!r1, "an undisturbed delivery tripped the refresh")
-    assert(standingFp.isDefined, "standing artifact has no fingerprint")
-    assert(meta() == standingFp)
-    // drifted delivery: the audit fires, the refresh re-trains on
-    // standing ∪ delivery and SWAPS the artifact in place
-    val drifted = quietDelivery.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double") + lit(0.5))
-        .as("embedding"))
-    val (r2, (cents, asg, entries, graph)) =
-      operators.Similarity.refreshIfNeeded(spark, key, standing, drifted,
+    withIndexRoot("graft_index_s27spec") {
+      val e = Tables.embeddings(spark, sfDir)
+      val standing = e.filter(col("vec_id") % 5 =!= 0)
+      val key = s"${sfDir}_s27spec"
+      val dir = sources.IndexStore.cellIndexDir(key)
+      def meta(): Option[String] = sources.IndexStore.currentMeta(spark, dir)
+      // undisturbed delivery: the audit must NOT fire and the standing
+      // artifact must survive byte-identical (same fingerprint)
+      val quietDelivery = e.filter(col("vec_id") % 5 === 0)
+      val (r1, _) = operators.Similarity.refreshIfNeeded(
+        spark, key, standing, quietDelivery,
         nCells = operators.Similarity.IvfNCells)
-    assert(r2, "the drifted delivery did not trip the refresh")
-    val refreshedFp = meta()
-    assert(refreshedFp.isDefined && refreshedFp != standingFp,
-      "refresh did not swap the artifact fingerprint")
-    // post-refresh serve ≡ a fresh build over the absorbed corpus —
-    // the refresh must restore exactly fresh-build recall, because
-    // the refreshed artifact IS a fresh build (spec-pinned, so a
-    // future 'cheaper' refresh path cannot silently degrade it)
-    val served = operators.Similarity
-      .cellProbeSearchOn(cents, asg, entries, graph)
-      .collect().map(_.mkString("|")).toSet
-    CacheScope.releaseAll()
-    def wide(f: org.apache.spark.sql.DataFrame) = f.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("embedding"))
-    val fresh = operators.Similarity
-      .cellProbeSearch(wide(standing).unionByName(wide(drifted)),
-        nCells = operators.Similarity.IvfNCells)
-      .collect().map(_.mkString("|")).toSet
-    CacheScope.releaseAll()
-    assert(served.nonEmpty, "post-refresh serve returned nothing — vacuous")
-    assert(served == fresh,
-      "post-refresh serve diverged from a fresh build on the absorbed corpus")
+      CacheScope.releaseAll()
+      val standingFp = meta()
+      assert(!r1, "an undisturbed delivery tripped the refresh")
+      assert(standingFp.isDefined, "standing artifact has no fingerprint")
+      assert(meta() == standingFp)
+      // drifted delivery: the audit fires, the refresh re-trains on
+      // standing ∪ delivery and SWAPS the artifact in place
+      val drifted = quietDelivery.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double") + lit(0.5))
+          .as("embedding"))
+      val (r2, (cents, asg, entries, graph)) =
+        operators.Similarity.refreshIfNeeded(spark, key, standing, drifted,
+          nCells = operators.Similarity.IvfNCells)
+      assert(r2, "the drifted delivery did not trip the refresh")
+      val refreshedFp = meta()
+      assert(refreshedFp.isDefined && refreshedFp != standingFp,
+        "refresh did not swap the artifact fingerprint")
+      // post-refresh serve ≡ a fresh build over the absorbed corpus —
+      // the refresh must restore exactly fresh-build recall, because
+      // the refreshed artifact IS a fresh build (spec-pinned, so a
+      // future 'cheaper' refresh path cannot silently degrade it)
+      val served = operators.Similarity
+        .cellProbeSearchOn(cents, asg, entries, graph)
+        .collect().map(_.mkString("|")).toSet
+      CacheScope.releaseAll()
+      def wide(f: org.apache.spark.sql.DataFrame) = f.select(col("vec_id"),
+        transform(col("embedding"), x => x.cast("double")).as("embedding"))
+      val fresh = operators.Similarity
+        .cellProbeSearch(wide(standing).unionByName(wide(drifted)),
+          nCells = operators.Similarity.IvfNCells)
+        .collect().map(_.mkString("|")).toSet
+      CacheScope.releaseAll()
+      assert(served.nonEmpty, "post-refresh serve returned nothing — vacuous")
+      assert(served == fresh,
+        "post-refresh serve diverged from a fresh build on the absorbed corpus")
+    }
   }
 
   test("s29 tombstones: ghosts leave results, stay traversable, never rebuild") {
     import org.apache.spark.sql.functions._
-    sources.IndexStore.root = "/tmp/graft_index_s29spec"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val e = Tables.embeddings(spark, sfDir)
-    val (cents, asg, entries, graph) = sources.IndexStore
-      .ensureCellIndex(spark, s"${sfDir}_s29spec", e,
-        nCells = operators.Similarity.IvfNCells)
-    val fpBefore = sources.IndexStore.currentMeta(spark,
-      sources.IndexStore.cellIndexDir(s"${sfDir}_s29spec"))
-    val q = asg.filter(col("vec_id") % 97 === 0 &&
-        col("vec_id") < operators.Similarity.QueryIdBound)
-      .select(col("vec_id").as("q_id"), col("mv").as("q_mv"))
-    val deletes = e.filter(col("vec_id") %
-        operators.Similarity.S29DeleteMod === 0)
-      .select(col("vec_id").as("del_id"))
-    val plain = operators.Similarity
-      .cellProbeSearchFor(q, cents, asg, entries, graph)
-      .collect()
-    CacheScope.releaseAll()
-    val tomb = operators.Similarity
-      .cellProbeSearchFor(q, cents, asg, entries, graph,
-        tombstones = deletes)
-      .collect()
-    CacheScope.releaseAll()
-    val delSet = deletes.collect().map(_.getLong(0)).toSet
-    assert(tomb.nonEmpty && delSet.nonEmpty, "vacuous fixture")
-    // 1. no ghost is ever served
-    assert(tomb.forall(r => !delSet.contains(r.getLong(2))),
-      "a tombstoned id appeared in the served top-K")
-    // 2. ghosts stay traversable: the beams are IDENTICAL (the filter
-    // sits at the fuse), so every live candidate the plain serve
-    // found must survive the tombstoned serve — deletion can only
-    // PROMOTE live candidates, never lose one
-    val tombSet = tomb.map(r => (r.getLong(0), r.getLong(2))).toSet
-    val lostLive = plain
-      .filter(r => !delSet.contains(r.getLong(2)))
-      .map(r => (r.getLong(0), r.getLong(2)))
-      .filterNot(tombSet.contains)
-    assert(lostLive.isEmpty,
-      s"live results lost under tombstoning (beam was disturbed): " +
-        lostLive.take(5).mkString(", "))
-    // 3. backfill: ranks stay a prefix per query
-    tomb.groupBy(_.getLong(0)).foreach { case (qid, ns) =>
-      assert(ns.map(_.getInt(1)).sorted.toSeq == (1 to ns.length),
-        s"query $qid ranks not a prefix after tombstoning")
+    withIndexRoot("graft_index_s29spec") {
+      val e = Tables.embeddings(spark, sfDir)
+      val (cents, asg, entries, graph) = sources.IndexStore
+        .ensureCellIndex(spark, s"${sfDir}_s29spec", e,
+          nCells = operators.Similarity.IvfNCells)
+      val fpBefore = sources.IndexStore.currentMeta(spark,
+        sources.IndexStore.cellIndexDir(s"${sfDir}_s29spec"))
+      val q = asg.filter(col("vec_id") % 97 === 0 &&
+          col("vec_id") < operators.Similarity.QueryIdBound)
+        .select(col("vec_id").as("q_id"), col("mv").as("q_mv"))
+      val deletes = e.filter(col("vec_id") %
+          operators.Similarity.S29DeleteMod === 0)
+        .select(col("vec_id").as("del_id"))
+      val plain = operators.Similarity
+        .cellProbeSearchFor(q, cents, asg, entries, graph)
+        .collect()
+      CacheScope.releaseAll()
+      val tomb = operators.Similarity
+        .cellProbeSearchFor(q, cents, asg, entries, graph,
+          tombstones = deletes)
+        .collect()
+      CacheScope.releaseAll()
+      val delSet = deletes.collect().map(_.getLong(0)).toSet
+      assert(tomb.nonEmpty && delSet.nonEmpty, "vacuous fixture")
+      // 1. no ghost is ever served
+      assert(tomb.forall(r => !delSet.contains(r.getLong(2))),
+        "a tombstoned id appeared in the served top-K")
+      // 2. ghosts stay traversable: the beams are IDENTICAL (the filter
+      // sits at the fuse), so every live candidate the plain serve
+      // found must survive the tombstoned serve — deletion can only
+      // PROMOTE live candidates, never lose one
+      val tombSet = tomb.map(r => (r.getLong(0), r.getLong(2))).toSet
+      val lostLive = plain
+        .filter(r => !delSet.contains(r.getLong(2)))
+        .map(r => (r.getLong(0), r.getLong(2)))
+        .filterNot(tombSet.contains)
+      assert(lostLive.isEmpty,
+        s"live results lost under tombstoning (beam was disturbed): " +
+          lostLive.take(5).mkString(", "))
+      // 3. backfill: ranks stay a prefix per query
+      tomb.groupBy(_.getLong(0)).foreach { case (qid, ns) =>
+        assert(ns.map(_.getInt(1)).sorted.toSeq == (1 to ns.length),
+          s"query $qid ranks not a prefix after tombstoning")
+      }
+      // 4. the standing artifact was never touched
+      assert(sources.IndexStore.currentMeta(spark,
+        sources.IndexStore.cellIndexDir(s"${sfDir}_s29spec")) == fpBefore,
+        "tombstoned serving modified the standing artifact")
     }
-    // 4. the standing artifact was never touched
-    assert(sources.IndexStore.currentMeta(spark,
-      sources.IndexStore.cellIndexDir(s"${sfDir}_s29spec")) == fpBefore,
-      "tombstoned serving modified the standing artifact")
   }
 
   test("s30 deletion audit arithmetic + compact gate: quiet keeps the " +
@@ -1000,86 +999,84 @@ class SimilaritySpec extends AnyFunSuite {
     assert(audit(1).getLong(1) == 4 && audit(1).getLong(2) == 0)
     assert(audit(1).getLong(3) == 0 && !audit(1).getBoolean(4))
     // the composed gate on the fixture corpus
-    sources.IndexStore.root = "/tmp/graft_index_s30spec"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val e = Tables.embeddings(spark, sfDir)
-    val key = s"${sfDir}_s30spec"
-    def meta(): Option[String] = sources.IndexStore.currentMeta(spark,
-      sources.IndexStore.cellIndexDir(key))
-    // quiet: an empty delete set must not trip or swap
-    val none = e.filter(lit(false)).select(col("vec_id").as("del_id"))
-    val (c1, _) = operators.Similarity.compactIfNeeded(spark, key, e, none,
-      nCells = operators.Similarity.IvfNCells)
-    CacheScope.releaseAll()
-    val fpFull = meta()
-    assert(!c1, "an empty delete set tripped compaction")
-    assert(fpFull.isDefined)
-    // tripped: the %7 set (~143 permille/cell) must swap the artifact
-    val deletes = e.filter(col("vec_id") %
-        operators.Similarity.S29DeleteMod === 0)
-      .select(col("vec_id").as("del_id"))
-    val (c2, (cents, asg2, entries, graph)) =
-      operators.Similarity.compactIfNeeded(spark, key, e, deletes,
+    withIndexRoot("graft_index_s30spec") {
+      val e = Tables.embeddings(spark, sfDir)
+      val key = s"${sfDir}_s30spec"
+      def meta(): Option[String] = sources.IndexStore.currentMeta(spark,
+        sources.IndexStore.cellIndexDir(key))
+      // quiet: an empty delete set must not trip or swap
+      val none = e.filter(lit(false)).select(col("vec_id").as("del_id"))
+      val (c1, _) = operators.Similarity.compactIfNeeded(spark, key, e, none,
         nCells = operators.Similarity.IvfNCells)
-    assert(c2, "the %7 delete set did not trip compaction")
-    assert(meta().isDefined && meta() != fpFull,
-      "compaction did not swap the artifact fingerprint")
-    // the compacted lists carry no ghost
-    val delSet = deletes.collect().map(_.getLong(0)).toSet
-    val ghost = asg2.select(col("vec_id")).collect().map(_.getLong(0))
-      .filter(delSet.contains)
-    assert(ghost.isEmpty, s"ghosts survived compaction: ${ghost.take(5)}")
-    // post-compaction serve ≡ a fresh inline build on the retained
-    // corpus — the swap must not be a cheaper degraded path
-    val served = operators.Similarity
-      .cellProbeSearchOn(cents, asg2, entries, graph)
-      .collect().map(_.mkString("|")).toSet
-    CacheScope.releaseAll()
-    val fresh = operators.Similarity
-      .cellProbeSearch(e.join(deletes, e("vec_id") === col("del_id"),
-          "left_anti"),
-        nCells = operators.Similarity.IvfNCells)
-      .collect().map(_.mkString("|")).toSet
-    CacheScope.releaseAll()
-    assert(served.nonEmpty, "post-compaction serve returned nothing")
-    assert(served == fresh,
-      "post-compaction serve diverged from a fresh retained build")
+      CacheScope.releaseAll()
+      val fpFull = meta()
+      assert(!c1, "an empty delete set tripped compaction")
+      assert(fpFull.isDefined)
+      // tripped: the %7 set (~143 permille/cell) must swap the artifact
+      val deletes = e.filter(col("vec_id") %
+          operators.Similarity.S29DeleteMod === 0)
+        .select(col("vec_id").as("del_id"))
+      val (c2, (cents, asg2, entries, graph)) =
+        operators.Similarity.compactIfNeeded(spark, key, e, deletes,
+          nCells = operators.Similarity.IvfNCells)
+      assert(c2, "the %7 delete set did not trip compaction")
+      assert(meta().isDefined && meta() != fpFull,
+        "compaction did not swap the artifact fingerprint")
+      // the compacted lists carry no ghost
+      val delSet = deletes.collect().map(_.getLong(0)).toSet
+      val ghost = asg2.select(col("vec_id")).collect().map(_.getLong(0))
+        .filter(delSet.contains)
+      assert(ghost.isEmpty, s"ghosts survived compaction: ${ghost.take(5)}")
+      // post-compaction serve ≡ a fresh inline build on the retained
+      // corpus — the swap must not be a cheaper degraded path
+      val served = operators.Similarity
+        .cellProbeSearchOn(cents, asg2, entries, graph)
+        .collect().map(_.mkString("|")).toSet
+      CacheScope.releaseAll()
+      val fresh = operators.Similarity
+        .cellProbeSearch(e.join(deletes, e("vec_id") === col("del_id"),
+            "left_anti"),
+          nCells = operators.Similarity.IvfNCells)
+        .collect().map(_.mkString("|")).toSet
+      CacheScope.releaseAll()
+      assert(served.nonEmpty, "post-compaction serve returned nothing")
+      assert(served == fresh,
+        "post-compaction serve diverged from a fresh retained build")
+    }
   }
 
   test("s31 standing PQ index: saved serve ≡ inline build, warm hit keeps " +
       "the fingerprint") {
     import org.apache.spark.sql.functions._
-    sources.IndexStore.root = "/tmp/graft_index_s31spec"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val e = Tables.embeddings(spark, sfDir)
-    val key = s"${sfDir}_s31spec"
-    def meta(): Option[String] = sources.IndexStore.currentMeta(spark,
-      sources.IndexStore.pqIndexDir(key))
-    val (c1, a1, cb1, cd1) = sources.IndexStore.ensurePqIndex(spark, key, e,
-      nCells = operators.Similarity.IvfNCells)
-    val fp1 = meta()
-    assert(fp1.isDefined, "cold build left no fingerprint")
-    val served = operators.Similarity.pqServeOn(c1, a1, cb1, cd1)
-      .collect().map(_.mkString("|")).toSet
-    CacheScope.releaseAll()
-    val inline = operators.Similarity.pqServing(e,
-      nCells = operators.Similarity.IvfNCells)
-      .collect().map(_.mkString("|")).toSet
-    CacheScope.releaseAll()
-    assert(served.nonEmpty, "standing PQ serve returned nothing — vacuous")
-    assert(served == inline,
-      "the saved PQ artifact serves differently from the inline build")
-    // warm: a second ensure must be a pure load — same fingerprint
-    val (c2, a2, _, _) = sources.IndexStore.ensurePqIndex(spark, key, e,
-      nCells = operators.Similarity.IvfNCells)
-    assert(meta() == fp1, "a warm hit rewrote the artifact")
-    // the artifact's corpus-sized frames come back off parquet with
-    // the cell key the layout partitions by
-    assert(a2.columns.toSeq == Seq("vec_id", "cell", "mv"))
-    assert(c2.columns.toSeq == Seq("j", "c_mv"))
-    CacheScope.releaseAll()
+    withIndexRoot("graft_index_s31spec") {
+      val e = Tables.embeddings(spark, sfDir)
+      val key = s"${sfDir}_s31spec"
+      def meta(): Option[String] = sources.IndexStore.currentMeta(spark,
+        sources.IndexStore.pqIndexDir(key))
+      val (c1, a1, cb1, cd1) = sources.IndexStore.ensurePqIndex(spark, key, e,
+        nCells = operators.Similarity.IvfNCells)
+      val fp1 = meta()
+      assert(fp1.isDefined, "cold build left no fingerprint")
+      val served = operators.Similarity.pqServeOn(c1, a1, cb1, cd1)
+        .collect().map(_.mkString("|")).toSet
+      CacheScope.releaseAll()
+      val inline = operators.Similarity.pqServing(e,
+        nCells = operators.Similarity.IvfNCells)
+        .collect().map(_.mkString("|")).toSet
+      CacheScope.releaseAll()
+      assert(served.nonEmpty, "standing PQ serve returned nothing — vacuous")
+      assert(served == inline,
+        "the saved PQ artifact serves differently from the inline build")
+      // warm: a second ensure must be a pure load — same fingerprint
+      val (c2, a2, _, _) = sources.IndexStore.ensurePqIndex(spark, key, e,
+        nCells = operators.Similarity.IvfNCells)
+      assert(meta() == fp1, "a warm hit rewrote the artifact")
+      // the artifact's corpus-sized frames come back off parquet with
+      // the cell key the layout partitions by
+      assert(a2.columns.toSeq == Seq("vec_id", "cell", "mv"))
+      assert(c2.columns.toSeq == Seq("j", "c_mv"))
+      CacheScope.releaseAll()
+    }
   }
 
   test("servingNCells: sqrt-scaled, IvfNCells-floored, rounded, capped") {

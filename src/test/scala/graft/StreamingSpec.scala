@@ -1,5 +1,6 @@
 package graft
 
+import graft.TestDirs.withIndexRoot
 import graft.streaming.EventStreams
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -491,273 +492,263 @@ class StreamingSpec extends AnyFunSuite with SuiteTempDir {
   }
 
   test("streaming ANN serve answers exactly batch s25, zero state") {
-    sources.IndexStore.root = "/tmp/graft_index_annserve"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val all = Tables.embeddings(spark, sfDir)
-    // the query stream: s23/s25's own query set (%97 convention),
-    // arriving as a delivery — answers must equal the batch path's
-    val dir = suiteTempDir("graft-annserve").toString
-    all.filter(col("vec_id") % 97 === 0 &&
-        col("vec_id") < operators.Similarity.QueryIdBound)
-      .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
-      .select(col("vec_id"), col("embedding").cast("array<double>"),
-        col("arrival"))
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val reports = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Array[org.apache.spark.sql.Row])]
-    val q = EventStreams.annServeStream(
-        EventStreams.readEmbStream(spark, dir), sfDir, all,
-        nCells = operators.Similarity.IvfNCells) {
-        (id, rep) => reports += ((id, rep.collect())); ()
-      }.start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty,
-        "ANN serve grew streaming state")
-      assert(reports.nonEmpty, "no micro-batch answer emitted")
-      val streamed = reports.flatMap(_._2).map(_.mkString("|")).toSet
-      val want = SparkEntry.queries("s25_standing_search")(spark, sfDir)
-        .collect().map(_.mkString("|")).toSet
-      CacheScope.releaseAll()
-      assert(want.nonEmpty, "batch s25 empty — vacuous")
-      assert(streamed == want)
-    } finally {
-      q.stop()
-      CacheScope.releaseAll()
-      spark.catalog.clearCache()
-      sources.IndexStore.root = "/tmp/graft_index"
+    withIndexRoot("graft_index_annserve") {
+      val all = Tables.embeddings(spark, sfDir)
+      // the query stream: s23/s25's own query set (%97 convention),
+      // arriving as a delivery — answers must equal the batch path's
+      val dir = suiteTempDir("graft-annserve").toString
+      all.filter(col("vec_id") % 97 === 0 &&
+          col("vec_id") < operators.Similarity.QueryIdBound)
+        .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
+        .select(col("vec_id"), col("embedding").cast("array<double>"),
+          col("arrival"))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      val reports = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Array[org.apache.spark.sql.Row])]
+      val q = EventStreams.annServeStream(
+          EventStreams.readEmbStream(spark, dir), sfDir, all,
+          nCells = operators.Similarity.IvfNCells) {
+          (id, rep) => reports += ((id, rep.collect())); ()
+        }.start()
+      try {
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.isEmpty,
+          "ANN serve grew streaming state")
+        assert(reports.nonEmpty, "no micro-batch answer emitted")
+        val streamed = reports.flatMap(_._2).map(_.mkString("|")).toSet
+        val want = SparkEntry.queries("s25_standing_search")(spark, sfDir)
+          .collect().map(_.mkString("|")).toSet
+        CacheScope.releaseAll()
+        assert(want.nonEmpty, "batch s25 empty — vacuous")
+        assert(streamed == want)
+      } finally {
+        q.stop()
+        CacheScope.releaseAll()
+        spark.catalog.clearCache()
+      }
     }
   }
 
   test("streaming ANN serve picks up a refreshed index mid-stream, " +
       "zero state") {
-    sources.IndexStore.root = "/tmp/graft_index_annrefresh"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val nc = operators.Similarity.IvfNCells
-    val e = Tables.embeddings(spark, sfDir)
-    val standing = e.filter(col("vec_id") % 5 =!= 0)
-    val drifted = e.filter(col("vec_id") % 5 === 0)
-      .select(col("vec_id"), transform(col("embedding"),
-        x => x.cast("double") + lit(0.5)).as("embedding"))
-    val key = s"${sfDir}_annrefresh"
-    val dir = sources.IndexStore.cellIndexDir(key)
-    // the query batch: standing members of the %97 convention
-    val queries = standing
-      .filter(col("vec_id") % 97 === 0 &&
-        col("vec_id") < operators.Similarity.QueryIdBound)
-      .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
-      .select(col("vec_id"), col("embedding").cast("array<double>"),
-        col("arrival"))
-    val qdir = suiteTempDir("graft-annrefresh").toString
-    queries.coalesce(1).write.mode("overwrite").parquet(qdir)
-    def expectedFromArtifact(): Set[String] = {
-      val (cents, asg, entries, graph) =
-        sources.IndexStore.loadCellIndex(spark, dir)
-      val qm = queries.select(col("vec_id").as("q_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000).cast("long")).as("q_mv"))
-      val got = operators.Similarity
-        .cellProbeSearchFor(qm, cents, asg, entries, graph)
-        .collect().map(_.mkString("|")).toSet
-      CacheScope.releaseAll()
-      got
-    }
-    val reports = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Array[org.apache.spark.sql.Row])]
-    val q = EventStreams.annServeStream(
-        EventStreams.readEmbStream(spark, qdir), key, standing,
-        nCells = nc) {
-        (id, rep) => reports += ((id, rep.collect())); ()
-      }.start()
-    try {
-      q.processAllAvailable()
-      val before = reports.flatMap(_._2).map(_.mkString("|")).toSet
-      val expectedBefore = expectedFromArtifact()
-      assert(before.nonEmpty && before == expectedBefore,
-        "pre-refresh batch did not serve the standing artifact")
-      reports.clear()
-      // swap the artifact MID-STREAM: the drifted delivery trips the
-      // audit and the refresh re-trains on standing ∪ delivery
-      val (refreshed, _) = operators.Similarity.refreshIfNeeded(
-        spark, key, standing, drifted, nCells = nc)
-      CacheScope.releaseAll()
-      assert(refreshed, "fixture did not trip the refresh — vacuous")
-      val expectedAfter = expectedFromArtifact()
-      assert(expectedAfter != before,
-        "refresh did not change the served answers — fixture carries " +
-          "no signal")
-      // the SAME queries as a second micro-batch: answers must come
-      // from the refreshed index, with no restart and no state
-      queries.coalesce(1).write.mode("append").parquet(qdir)
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty,
-        "ANN serve grew streaming state")
-      val after = reports.flatMap(_._2).map(_.mkString("|")).toSet
-      assert(after == expectedAfter,
-        "post-refresh batch did not serve the refreshed artifact")
-    } finally {
-      q.stop()
-      CacheScope.releaseAll()
-      spark.catalog.clearCache()
-      sources.IndexStore.root = "/tmp/graft_index"
+    withIndexRoot("graft_index_annrefresh") {
+      val nc = operators.Similarity.IvfNCells
+      val e = Tables.embeddings(spark, sfDir)
+      val standing = e.filter(col("vec_id") % 5 =!= 0)
+      val drifted = e.filter(col("vec_id") % 5 === 0)
+        .select(col("vec_id"), transform(col("embedding"),
+          x => x.cast("double") + lit(0.5)).as("embedding"))
+      val key = s"${sfDir}_annrefresh"
+      val dir = sources.IndexStore.cellIndexDir(key)
+      // the query batch: standing members of the %97 convention
+      val queries = standing
+        .filter(col("vec_id") % 97 === 0 &&
+          col("vec_id") < operators.Similarity.QueryIdBound)
+        .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
+        .select(col("vec_id"), col("embedding").cast("array<double>"),
+          col("arrival"))
+      val qdir = suiteTempDir("graft-annrefresh").toString
+      queries.coalesce(1).write.mode("overwrite").parquet(qdir)
+      def expectedFromArtifact(): Set[String] = {
+        val (cents, asg, entries, graph) =
+          sources.IndexStore.loadCellIndex(spark, dir)
+        val qm = queries.select(col("vec_id").as("q_id"),
+          transform(col("embedding"),
+            x => floor(x.cast("double") * 1000).cast("long")).as("q_mv"))
+        val got = operators.Similarity
+          .cellProbeSearchFor(qm, cents, asg, entries, graph)
+          .collect().map(_.mkString("|")).toSet
+        CacheScope.releaseAll()
+        got
+      }
+      val reports = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Array[org.apache.spark.sql.Row])]
+      val q = EventStreams.annServeStream(
+          EventStreams.readEmbStream(spark, qdir), key, standing,
+          nCells = nc) {
+          (id, rep) => reports += ((id, rep.collect())); ()
+        }.start()
+      try {
+        q.processAllAvailable()
+        val before = reports.flatMap(_._2).map(_.mkString("|")).toSet
+        val expectedBefore = expectedFromArtifact()
+        assert(before.nonEmpty && before == expectedBefore,
+          "pre-refresh batch did not serve the standing artifact")
+        reports.clear()
+        // swap the artifact MID-STREAM: the drifted delivery trips the
+        // audit and the refresh re-trains on standing ∪ delivery
+        val (refreshed, _) = operators.Similarity.refreshIfNeeded(
+          spark, key, standing, drifted, nCells = nc)
+        CacheScope.releaseAll()
+        assert(refreshed, "fixture did not trip the refresh — vacuous")
+        val expectedAfter = expectedFromArtifact()
+        assert(expectedAfter != before,
+          "refresh did not change the served answers — fixture carries " +
+            "no signal")
+        // the SAME queries as a second micro-batch: answers must come
+        // from the refreshed index, with no restart and no state
+        queries.coalesce(1).write.mode("append").parquet(qdir)
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.isEmpty,
+          "ANN serve grew streaming state")
+        val after = reports.flatMap(_._2).map(_.mkString("|")).toSet
+        assert(after == expectedAfter,
+          "post-refresh batch did not serve the refreshed artifact")
+      } finally {
+        q.stop()
+        CacheScope.releaseAll()
+        spark.catalog.clearCache()
+      }
     }
   }
 
   test("streaming ANN serve picks up tombstones published mid-stream, " +
       "zero state") {
     import spark.implicits._
-    sources.IndexStore.root = "/tmp/graft_index_anntomb"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val nc = operators.Similarity.IvfNCells
-    val e = Tables.embeddings(spark, sfDir)
-    val key = s"${sfDir}_anntomb"
-    val queries = e
-      .filter(col("vec_id") % 97 === 0 &&
-        col("vec_id") < operators.Similarity.QueryIdBound)
-      .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
-      .select(col("vec_id"), col("embedding").cast("array<double>"),
-        col("arrival"))
-    val qdir = suiteTempDir("graft-anntomb").toString
-    queries.coalesce(1).write.mode("overwrite").parquet(qdir)
-    // the delete-set location does NOT exist yet: batch 1 must treat
-    // the unreadable dir as "no deletes", not fail
-    val tdir = suiteTempDir("graft-anntomb-meta").toString +
-      "/deletes"
-    val reports = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Array[org.apache.spark.sql.Row])]
-    val q = EventStreams.annServeStream(
-        EventStreams.readEmbStream(spark, qdir), key, e,
-        nCells = nc, tombstonesDir = tdir) {
-        (id, rep) => reports += ((id, rep.collect())); ()
-      }.start()
-    try {
-      q.processAllAvailable()
-      val before = reports.flatMap(_._2)
-      assert(before.nonEmpty,
-        "pre-delete batch served nothing (or the absent delete dir " +
-          "failed the batch)")
-      // delete a vector the stream just SERVED — the next batch must
-      // not return it, and deeper candidates must backfill
-      val victim = before.head.getLong(2)
-      Seq(victim).toDF("del_id")
-        .coalesce(1).write.mode("overwrite").parquet(tdir)
-      reports.clear()
-      queries.coalesce(1).write.mode("append").parquet(qdir)
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty,
-        "ANN serve grew streaming state")
-      val after = reports.flatMap(_._2)
-      assert(after.nonEmpty, "post-delete batch served nothing")
-      assert(!after.exists(_.getLong(2) == victim),
-        s"deleted id $victim was served after its tombstone published")
-      // parity: the post-delete batch equals the batch tombstoned
-      // serve over the same artifact and delete set
-      val (cents, asg, entries, graph) = sources.IndexStore
-        .loadCellIndex(spark, sources.IndexStore.cellIndexDir(key))
-      val qm = queries.select(col("vec_id").as("q_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000).cast("long")).as("q_mv"))
-      val want = operators.Similarity.cellProbeSearchFor(
-          qm, cents, asg, entries, graph,
-          tombstones = Seq(victim).toDF("del_id"))
-        .collect().map(_.mkString("|")).toSet
-      CacheScope.releaseAll()
-      assert(after.map(_.mkString("|")).toSet == want,
-        "streamed tombstoned serve diverged from the batch twin")
-    } finally {
-      q.stop()
-      CacheScope.releaseAll()
-      spark.catalog.clearCache()
-      sources.IndexStore.root = "/tmp/graft_index"
+    withIndexRoot("graft_index_anntomb") {
+      val nc = operators.Similarity.IvfNCells
+      val e = Tables.embeddings(spark, sfDir)
+      val key = s"${sfDir}_anntomb"
+      val queries = e
+        .filter(col("vec_id") % 97 === 0 &&
+          col("vec_id") < operators.Similarity.QueryIdBound)
+        .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
+        .select(col("vec_id"), col("embedding").cast("array<double>"),
+          col("arrival"))
+      val qdir = suiteTempDir("graft-anntomb").toString
+      queries.coalesce(1).write.mode("overwrite").parquet(qdir)
+      // the delete-set location does NOT exist yet: batch 1 must treat
+      // the unreadable dir as "no deletes", not fail
+      val tdir = suiteTempDir("graft-anntomb-meta").toString +
+        "/deletes"
+      val reports = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Array[org.apache.spark.sql.Row])]
+      val q = EventStreams.annServeStream(
+          EventStreams.readEmbStream(spark, qdir), key, e,
+          nCells = nc, tombstonesDir = tdir) {
+          (id, rep) => reports += ((id, rep.collect())); ()
+        }.start()
+      try {
+        q.processAllAvailable()
+        val before = reports.flatMap(_._2)
+        assert(before.nonEmpty,
+          "pre-delete batch served nothing (or the absent delete dir " +
+            "failed the batch)")
+        // delete a vector the stream just SERVED — the next batch must
+        // not return it, and deeper candidates must backfill
+        val victim = before.head.getLong(2)
+        Seq(victim).toDF("del_id")
+          .coalesce(1).write.mode("overwrite").parquet(tdir)
+        reports.clear()
+        queries.coalesce(1).write.mode("append").parquet(qdir)
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.isEmpty,
+          "ANN serve grew streaming state")
+        val after = reports.flatMap(_._2)
+        assert(after.nonEmpty, "post-delete batch served nothing")
+        assert(!after.exists(_.getLong(2) == victim),
+          s"deleted id $victim was served after its tombstone published")
+        // parity: the post-delete batch equals the batch tombstoned
+        // serve over the same artifact and delete set
+        val (cents, asg, entries, graph) = sources.IndexStore
+          .loadCellIndex(spark, sources.IndexStore.cellIndexDir(key))
+        val qm = queries.select(col("vec_id").as("q_id"),
+          transform(col("embedding"),
+            x => floor(x.cast("double") * 1000).cast("long")).as("q_mv"))
+        val want = operators.Similarity.cellProbeSearchFor(
+            qm, cents, asg, entries, graph,
+            tombstones = Seq(victim).toDF("del_id"))
+          .collect().map(_.mkString("|")).toSet
+        CacheScope.releaseAll()
+        assert(after.map(_.mkString("|")).toSet == want,
+          "streamed tombstoned serve diverged from the batch twin")
+      } finally {
+        q.stop()
+        CacheScope.releaseAll()
+        spark.catalog.clearCache()
+      }
     }
   }
 
   test("streaming ANN serve honors an attribute fuse filter, " +
       "exactly batch s32, zero state") {
-    sources.IndexStore.root = "/tmp/graft_index_annfilter"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val e = Tables.embeddings(spark, sfDir)
-    // the query stream: s32's own query set (%97 convention)
-    val qIds = e.filter(col("vec_id") % 97 === 0 &&
-        col("vec_id") < operators.Similarity.QueryIdBound)
-      .select(col("vec_id").as("q_id"))
-    val qdir = suiteTempDir("graft-annfilter").toString
-    e.filter(col("vec_id") % 97 === 0 &&
-        col("vec_id") < operators.Similarity.QueryIdBound)
-      .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
-      .select(col("vec_id"), col("embedding").cast("array<double>"),
-        col("arrival"))
-      .coalesce(1).write.mode("overwrite").parquet(qdir)
-    val reports = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Array[org.apache.spark.sql.Row])]
-    val q = EventStreams.annServeStream(
-        EventStreams.readEmbStream(spark, qdir), sfDir, e,
-        nCells = operators.Similarity.IvfNCells,
-        fuseKeep = operators.Retrieval.labelFuseKeep(e, qIds)) {
-        (id, rep) => reports += ((id, rep.collect())); ()
-      }.start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty,
-        "filtered ANN serve grew streaming state")
-      assert(reports.nonEmpty, "no micro-batch answer emitted")
-      val streamed = reports.flatMap(_._2).map(_.mkString("|")).toSet
-      val want = SparkEntry.queries("s32_filtered_search")(spark, sfDir)
-        .collect().map(_.mkString("|")).toSet
-      CacheScope.releaseAll()
-      assert(want.nonEmpty, "batch s32 empty -- vacuous")
-      assert(streamed == want,
-        "streamed filtered serve diverged from batch s32")
-    } finally {
-      q.stop()
-      CacheScope.releaseAll()
-      spark.catalog.clearCache()
-      sources.IndexStore.root = "/tmp/graft_index"
+    withIndexRoot("graft_index_annfilter") {
+      val e = Tables.embeddings(spark, sfDir)
+      // the query stream: s32's own query set (%97 convention)
+      val qIds = e.filter(col("vec_id") % 97 === 0 &&
+          col("vec_id") < operators.Similarity.QueryIdBound)
+        .select(col("vec_id").as("q_id"))
+      val qdir = suiteTempDir("graft-annfilter").toString
+      e.filter(col("vec_id") % 97 === 0 &&
+          col("vec_id") < operators.Similarity.QueryIdBound)
+        .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
+        .select(col("vec_id"), col("embedding").cast("array<double>"),
+          col("arrival"))
+        .coalesce(1).write.mode("overwrite").parquet(qdir)
+      val reports = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Array[org.apache.spark.sql.Row])]
+      val q = EventStreams.annServeStream(
+          EventStreams.readEmbStream(spark, qdir), sfDir, e,
+          nCells = operators.Similarity.IvfNCells,
+          fuseKeep = operators.Retrieval.labelFuseKeep(e, qIds)) {
+          (id, rep) => reports += ((id, rep.collect())); ()
+        }.start()
+      try {
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.isEmpty,
+          "filtered ANN serve grew streaming state")
+        assert(reports.nonEmpty, "no micro-batch answer emitted")
+        val streamed = reports.flatMap(_._2).map(_.mkString("|")).toSet
+        val want = SparkEntry.queries("s32_filtered_search")(spark, sfDir)
+          .collect().map(_.mkString("|")).toSet
+        CacheScope.releaseAll()
+        assert(want.nonEmpty, "batch s32 empty -- vacuous")
+        assert(streamed == want,
+          "streamed filtered serve diverged from batch s32")
+      } finally {
+        q.stop()
+        CacheScope.releaseAll()
+        spark.catalog.clearCache()
+      }
     }
   }
 
   test("streaming hybrid serve answers exactly batch s33, zero state") {
-    sources.IndexStore.root = "/tmp/graft_index_hybserve"
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(sources.IndexStore.root))
-    val e = Tables.embeddings(spark, sfDir)
-    val docs = Tables.documents(spark, sfDir)
-    // the query stream: s33's own query set (%97 convention)
-    val qdir = suiteTempDir("graft-hybserve").toString
-    e.filter(col("vec_id") % 97 === 0 &&
-        col("vec_id") < operators.Similarity.QueryIdBound)
-      .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
-      .select(col("vec_id"), col("embedding").cast("array<double>"),
-        col("arrival"))
-      .coalesce(1).write.mode("overwrite").parquet(qdir)
-    val reports = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Array[org.apache.spark.sql.Row])]
-    val q = EventStreams.hybridServeStream(
-        EventStreams.readEmbStream(spark, qdir), sfDir, e, docs,
-        nCells = operators.Similarity.IvfNCells) {
-        (id, rep) => reports += ((id, rep.collect())); ()
-      }.start()
-    try {
-      q.processAllAvailable()
-      assert(q.lastProgress.stateOperators.isEmpty,
-        "hybrid serve grew streaming state")
-      assert(reports.nonEmpty, "no micro-batch answer emitted")
-      val streamed = reports.flatMap(_._2).map(_.mkString("|")).toSet
-      val want = SparkEntry.queries("s33_hybrid_rrf")(spark, sfDir)
-        .collect().map(_.mkString("|")).toSet
-      CacheScope.releaseAll()
-      assert(want.nonEmpty, "batch s33 empty -- vacuous")
-      assert(streamed == want,
-        "streamed hybrid serve diverged from batch s33")
-    } finally {
-      q.stop()
-      CacheScope.releaseAll()
-      spark.catalog.clearCache()
-      sources.IndexStore.root = "/tmp/graft_index"
+    withIndexRoot("graft_index_hybserve") {
+      val e = Tables.embeddings(spark, sfDir)
+      val docs = Tables.documents(spark, sfDir)
+      // the query stream: s33's own query set (%97 convention)
+      val qdir = suiteTempDir("graft-hybserve").toString
+      e.filter(col("vec_id") % 97 === 0 &&
+          col("vec_id") < operators.Similarity.QueryIdBound)
+        .withColumn("arrival", to_timestamp(lit("2026-01-01 00:00:00")))
+        .select(col("vec_id"), col("embedding").cast("array<double>"),
+          col("arrival"))
+        .coalesce(1).write.mode("overwrite").parquet(qdir)
+      val reports = scala.collection.mutable.ArrayBuffer
+        .empty[(Long, Array[org.apache.spark.sql.Row])]
+      val q = EventStreams.hybridServeStream(
+          EventStreams.readEmbStream(spark, qdir), sfDir, e, docs,
+          nCells = operators.Similarity.IvfNCells) {
+          (id, rep) => reports += ((id, rep.collect())); ()
+        }.start()
+      try {
+        q.processAllAvailable()
+        assert(q.lastProgress.stateOperators.isEmpty,
+          "hybrid serve grew streaming state")
+        assert(reports.nonEmpty, "no micro-batch answer emitted")
+        val streamed = reports.flatMap(_._2).map(_.mkString("|")).toSet
+        val want = SparkEntry.queries("s33_hybrid_rrf")(spark, sfDir)
+          .collect().map(_.mkString("|")).toSet
+        CacheScope.releaseAll()
+        assert(want.nonEmpty, "batch s33 empty -- vacuous")
+        assert(streamed == want,
+          "streamed hybrid serve diverged from batch s33")
+      } finally {
+        q.stop()
+        CacheScope.releaseAll()
+        spark.catalog.clearCache()
+      }
     }
   }
 }

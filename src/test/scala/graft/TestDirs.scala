@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.IndexStore
 import org.apache.commons.io.FileUtils
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -14,6 +15,18 @@ object TestDirs {
     val dir = Files.createTempDirectory(prefix).toFile
     try f(dir) finally FileUtils.deleteDirectory(dir)
   }
+
+  /** `body` with [[IndexStore.root]] at `dir`; the prior root is
+    * restored when `body` returns or throws. */
+  def atIndexRoot[A](dir: File)(body: => A): A = {
+    val prior = IndexStore.root
+    IndexStore.root = dir.getPath
+    try body finally IndexStore.root = prior
+  }
+
+  /** [[atIndexRoot]] at a new scratch directory, deleted after `body`. */
+  def withIndexRoot[A](prefix: String)(body: => A): A =
+    withTempDir(prefix)(atIndexRoot(_)(body))
 }
 
 /** [[TestDirs.withTempDir]] for a directory that every test of a suite
