@@ -454,16 +454,43 @@ object TextHashFunctions {
   def winnow_fingerprints(text: Column, k: Int = 8, w: Int = 4): Column =
     column(WinnowFingerprints(expression(text), k, w))
 
+  /** SQL registration. Integer arguments must be literals; one a call
+    * omits takes the Column API's default. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash64", es => SimHash64(es.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", es => WordShingles(es.head, 3), "built-in")
+      "word_shingles", es => WordShingles(es.head,
+        intArg("word_shingles", es, 1, Some(3))), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature", es => MinHashSignature(es.head, 64), "built-in")
+      "minhash_signature", es => MinHashSignature(es.head,
+        intArg("minhash_signature", es, 1, Some(64))), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands", es => MinHashBands(es.head, 16, 4), "built-in")
+      "minhash_bands", es => MinHashBands(es.head,
+        intArg("minhash_bands", es, 1, Some(16)),
+        intArg("minhash_bands", es, 2, Some(4))), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "array_jaccard", es => ArrayJaccard(es.head, es(1)), "built-in")
+  }
+
+  /** Argument `i` of a SQL call to `fn` as an integer literal:
+    * `default` when the call omits it (required when None). */
+  private[functions] def intArg(fn: String, es: Seq[Expression], i: Int,
+      default: Option[Int] = None): Int =
+    Math.toIntExact(longArg(fn, es, i, default.map(_.toLong)))
+
+  private[functions] def longArg(fn: String, es: Seq[Expression], i: Int,
+      default: Option[Long] = None): Long = {
+    def bad(why: String) =
+      throw new IllegalArgumentException(s"$fn: argument ${i + 1} $why")
+    if (es.length <= i) default.getOrElse(bad("is required"))
+    else if (!es(i).foldable) bad(s"must be an integer literal, got ${es(i).sql}")
+    else es(i).eval() match {
+      case n: Int => n.toLong
+      case n: Long => n
+      case n: Short => n.toLong
+      case n: Byte => n.toLong
+      case other => bad(s"must be an integer literal, got $other")
+    }
   }
 }

@@ -92,8 +92,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 /** normalized_dot(a, b) = dot_{min(len)}(a, b) / (‖a‖ · ‖b‖), 0.0 when
   * either full-length norm is 0 — the ONE-PASS equivalent of
-  * `dot_product(l2_normalize(a), l2_normalize(b))`, which
-  * [[graft.plans.CosineFusionRule]] rewrites to. NOT the same as
+  * `dot_product(l2_normalize(a), l2_normalize(b))`. NOT the same as
   * [[CosineSimilarity]] for unequal-length inputs: cosine truncates
   * the norms to min(length) too, while the unfused form (and this)
   * normalizes each side by its FULL norm — fusing to cosine would
@@ -506,10 +505,10 @@ object VectorFunctions {
       "normalized_dot", es => NormalizedDot(es.head, es(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "hyperplane_sigs", es => HyperplaneSigs(es.head,
-        es(1).eval().asInstanceOf[Number].intValue(),
-        es(2).eval().asInstanceOf[Number].intValue(),
-        es(3).eval().asInstanceOf[Number].intValue(),
-        es(4).eval().asInstanceOf[Number].longValue()), "built-in")
+        TextHashFunctions.intArg("hyperplane_sigs", es, 1),
+        TextHashFunctions.intArg("hyperplane_sigs", es, 2),
+        TextHashFunctions.intArg("hyperplane_sigs", es, 3),
+        TextHashFunctions.longArg("hyperplane_sigs", es, 4)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "int8_quantize", es => Int8Quantize(es.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -80,11 +80,8 @@ object Dedup {
     * md5(g||'#'||i) per slot) because that form made d02 the suite's
     * 3rd most expensive entry at 64 md5s/shingle; KM derivation is
     * 1 md5 + 64 fused multiply-adds per shingle (~60× less hashing)
-    * with the same family guarantees. The xxhash variant survives as
-    * [[minhashLshSketched]], the d16/d32 screens' native band
-    * expression, with DedupSpec's brute-truth subset gate as referee.
-    * All signature work is one map-only projection (no shuffle before
-    * the band join).
+    * with the same family guarantees. All signature work is one
+    * map-only projection (no shuffle before the band join).
     */
   def d02_minhash_lsh: Q = (s, d) => {
     import graft.functions.TextHashFunctions.array_jaccard
@@ -119,42 +116,6 @@ object Dedup {
           coalesce(col("sh"), array().cast("array<string>")),
           D02Bands, D02Rows)).as("bh"))
     require(nSlots == 64) // the documented signature width
-    val a = banded.select(col("bh"), col("doc_id").as("id_a"))
-    val b = banded.select(col("bh"), col("doc_id").as("id_b"))
-    val candidates = a.join(b, Seq("bh"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    candidates
-      .join(docs.select(col("doc_id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("doc_id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        graft.Tables.rhalfup(array_jaccard(col("sh_a"), col("sh_b")), 4))
-      .filter(col("jaccard") >= 0.5)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** The seeded-xxhash native-expression variant of [[d02_minhash_lsh]]
-    * (the pre-round-13 suite entry): same shingle → 16×4 band →
-    * candidate → exact-verify pipeline, signatures from the one-pass
-    * [[graft.functions.TextHashFunctions.minhash_bands]] codegen
-    * expression — the same band family the d16/d32 incremental screens
-    * and the streaming near-dup gate run on. Kept as the library's
-    * throughput variant (one native pass vs 64 md5s per shingle) with
-    * DedupSpec's brute-truth subset gate as its referee; the suite
-    * entry uses the md5-keyed twin, whose sketch the DuckDB oracle
-    * recomputes hash for hash. */
-  private[graft] def minhashLshSketched(documents: DataFrame): DataFrame = {
-    import graft.functions.TextHashFunctions.{minhash_bands, array_jaccard}
-    val s = documents.sparkSession
-    val docs = graft.CacheScope.persisted(
-      documents
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), shingles(tokens(col("text"))).as("sh")))
-    val banded = docs
-      .select(col("doc_id"),
-        explode(array_distinct(minhash_bands(col("sh"), D02Bands, D02Rows)))
-          .as("bh"))
     val a = banded.select(col("bh"), col("doc_id").as("id_a"))
     val b = banded.select(col("bh"), col("doc_id").as("id_b"))
     val candidates = a.join(b, Seq("bh"))

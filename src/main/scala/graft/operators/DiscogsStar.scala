@@ -12,12 +12,10 @@ import org.apache.spark.sql.functions._
   * (deterministic clone × [[GrowFactor]] with id-offsets,
   * FK-consistent).
   *
-  * Until round 13 the §2.3 declared queries were oracle-checked only
-  * in their TESTDATA re-expressions, with the discogs twins
-  * ([[DiscogsQueries]]) spec-checked on fixtures; these entries put
-  * the actual loaded star — fan-out joins, array explodes, per-label
-  * top-k, duplicate-artist clustering, the master⋈master_artist
-  * snowflake — under the same hash check as everything else.
+  * These entries put the §2.3 declared queries over the actual loaded
+  * star — fan-out joins, array explodes, per-label top-k,
+  * duplicate-artist clustering, the master⋈master_artist snowflake —
+  * under the same hash check as everything else.
   *
   * Staging contract: [[ensureStaged]] copies the four fixture
   * resources into a directory under [[StageDir]] (Spark cannot read a

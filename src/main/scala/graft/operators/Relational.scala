@@ -302,9 +302,8 @@ object Relational {
       .orderBy(col("c_custkey"))
   }
 
-  /** Tumbling time-window aggregate over events (batch form of the
-    * streaming query in graft.streaming). date_trunc on both engines
-    * truncates identically at hour granularity. */
+  /** Tumbling time-window aggregate over events. date_trunc on both
+    * engines truncates identically at hour granularity. */
   def q18_time_window: Q = (s, d) =>
     Tables.events(s, d)
       .groupBy(date_trunc("hour", col("ts")).as("hour"), col("event_type"))
@@ -335,10 +334,9 @@ object Relational {
       .orderBy(col("o_custkey"))
   }
 
-  /** Gap-based sessionization as pure relational algebra (the batch
-    * twin of streaming.EventStreams.sessionize): a session break is a
-    * >30 min gap; session ids are a running sum of breaks. Two window
-    * passes over one user-partitioned shuffle.
+  /** Gap-based sessionization as pure relational algebra: a session
+    * break is a >30 min gap; session ids are a running sum of breaks.
+    * Two window passes over one user-partitioned shuffle.
     */
   def q21_sessionize: Q = (s, d) => {
     val byUser = Window.partitionBy(col("user_id")).orderBy(col("ts_ns"), col("event_id"))

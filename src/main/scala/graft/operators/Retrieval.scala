@@ -91,29 +91,22 @@ object Retrieval {
 
   /** The same-label fuse predicate as a reusable
     * [[graft.operators.Similarity.cellProbeSearchFor]] `fuseKeep`
-    * hook — also the streaming serve's filtered mode
-    * ([[graft.streaming.EventStreams.annServeStream]]). `qIds` is the
-    * (small) query-id frame; each query's label resolves through one
-    * broadcast join, the candidate side through one pruned 2-column
-    * corpus scan the beam-sized fuse frame broadcasts into.
+    * hook. `qIds` is the (small) query-id frame; each query's label
+    * resolves through one broadcast join, the candidate side through
+    * one pruned 2-column corpus scan the beam-sized fuse frame
+    * broadcasts into.
     *
     * REQUIREMENT: each q_id must be a corpus vec_id (the label is an
     * INNER join against the corpus) — a query from an external id
     * namespace resolves no label and every one of its candidates is
-    * silently dropped, the exact zero-rows-instead-of-loud failure an
-    * `annServeStream(selfIsInCorpus = false)` caller would hit.
-    * External-query callers pass `qLabels` — an explicit (q_id,
-    * q_lbl) frame that REPLACES the corpus lookup, so out-of-corpus
-    * queries carry their own predicate value. */
+    * silently dropped. */
   private[graft] def labelFuseKeep(e: DataFrame,
-      qIds: DataFrame, qLabels: DataFrame = null): DataFrame => DataFrame = {
+      qIds: DataFrame): DataFrame => DataFrame = {
     val candLbl = e.select(col("vec_id").as("cand"),
       col("label").as("cand_lbl"))
-    val qLbl =
-      if (qLabels != null) qLabels.select(col("q_id"), col("q_lbl"))
-      else qIds.select(col("q_id"))
-        .join(e.select(col("vec_id").as("q_id"), col("label").as("q_lbl")),
-          Seq("q_id"))
+    val qLbl = qIds.select(col("q_id"))
+      .join(e.select(col("vec_id").as("q_id"), col("label").as("q_lbl")),
+        Seq("q_id"))
     live =>
       candLbl.join(broadcast(live), Seq("cand"))
         .join(broadcast(qLbl), Seq("q_id"))
@@ -207,16 +200,14 @@ object Retrieval {
 
   /** The standing half of the lexical index: persisted per-doc
     * shingle sets plus the df-capped rare postings — resolved once
-    * and probed by any number of query sets (the streaming hybrid
-    * serve resolves it at stream construction). */
+    * and probed by any number of query sets. */
   private[graft] case class LexIndex(base: DataFrame, rare: DataFrame)
 
   private[graft] def lexIndex(docs: DataFrame): LexIndex = {
     val base = graft.CacheScope.persisted(shingleSets(docs))
     val sh = base.select(col("doc_id"), explode(col("gs")).as("g"))
     // rare is persisted too: every probe references it TWICE (query
-    // side + candidate side), and the streaming hybrid serve probes
-    // it once per micro-batch — unpersisted, the df-cap join ran
+    // side + candidate side) — unpersisted, the df-cap join ran
     // twice per probe (r14 §2.4). base alone doesn't cover it: the
     // explode + df aggregate + join sit ABOVE the cache.
     val rare = graft.CacheScope.persisted(sh.join(
@@ -239,9 +230,8 @@ object Retrieval {
   }
 
   /** [[lexicalTopK]] for an explicit query-id frame over a standing
-    * [[LexIndex]] — the per-micro-batch seam of the streaming hybrid
-    * serve. Identical arithmetic; the suite path is the special case
-    * where the queries are the %97 convention. */
+    * [[LexIndex]]. Identical arithmetic; the suite path is the special
+    * case where the queries are the %97 convention. */
   private[graft] def lexicalTopKFor(qIds: DataFrame,
       ix: LexIndex): DataFrame = {
     val cand = ix.rare

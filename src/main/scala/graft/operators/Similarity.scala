@@ -434,10 +434,10 @@ object Similarity {
 
   /** Trained IVF centroids as (j, c_mv) rows — [[pqTrain]] at full
     * vector width (flat exact-integer k-means) reshaped to one long
-    * array per cell; shared by the batch index build and the
-    * streaming ingest path. The single-block requirement (see
-    * [[S19BlockDim]]) is asserted INSIDE the plan — no extra job, and
-    * a wider corpus throws instead of silently diverging. */
+    * array per cell, for the index build. The single-block
+    * requirement (see [[S19BlockDim]]) is asserted INSIDE the plan —
+    * no extra job, and a wider corpus throws instead of silently
+    * diverging. */
   private[graft] def ivfCentroids(e: DataFrame,
       nCells: Int = IvfNCells): DataFrame = {
     val (_, c) = pqTrain(e, nCells, S19BlockDim, S19Rounds)
@@ -1139,10 +1139,9 @@ object Similarity {
       nProbeMeta = nProbeMeta, asgRows = asgRows)
 
   /** [[cellProbeSearchOn]] for an EXTERNAL query set — (q_id, q_mv)
-    * milli vectors that need not live in the corpus (the streaming
-    * serve path hands each micro-batch here). Identical arithmetic;
-    * the in-corpus suite path is the special case where the queries
-    * are read off the assignment table.
+    * milli vectors that need not live in the corpus. Identical
+    * arithmetic; the in-corpus suite path is the special case where
+    * the queries are read off the assignment table.
     *
     * `selfIsInCorpus` controls the final self-exclusion: when the
     * q_ids ARE corpus vec_ids (the suite/batch convention), the
@@ -1180,10 +1179,10 @@ object Similarity {
     * to broadcast, every beam round explicitly broadcasts the beam —
     * |q|·nprobe·beam·(k+1) rows of (q_id, cell, cand, d2) ≈ 40 bytes
     * each. With the shipped knobs (nprobe 6, beam 4, k 5) that is
-    * ~1.2 KB per query and round: external/streaming callers should
-    * keep a micro-batch under ~1M queries (≈ 1.2 GB per broadcast,
-    * inside the 8 GB relation cap with headroom) and CHUNK bigger
-    * batches before the beam loop — the hint deliberately removes the
+    * ~1.2 KB per query and round: external callers should keep a
+    * query set under ~1M queries (≈ 1.2 GB per broadcast, inside the
+    * 8 GB relation cap with headroom) and CHUNK bigger sets before
+    * the beam loop — the hint deliberately removes the
     * planner's shuffle fallback, so an unbounded batch would fail on
     * driver memory, not degrade. */
   private[graft] def cellProbeSearchFor(q0: DataFrame, cents: DataFrame,
@@ -1197,7 +1196,7 @@ object Similarity {
     import graft.functions.VectorFunctions.milli_l2
     // -1 = session-resolved (`spark.graft.ann.beamWidth` /
     // `spark.graft.ann.nprobe`, else the shipped defaults) so every
-    // serving consumer — s23/s25/p07/the streaming serve — honors the
+    // serving consumer — s23/s25/p07 — honors the
     // query-time knobs without a signature change; `nProbeMeta` is
     // the artifact's build-time recommendation (adaptiveNProbe),
     // ranked between the conf and the static default
@@ -1493,7 +1492,7 @@ object Similarity {
     // source if a caller can ever re-deliver (ADVICE r13).
     //
     // deliveries routed to the nearest SAVED centroid — stale by
-    // design, the exact arithmetic of the batch/streaming ingest;
+    // design, the exact arithmetic of the batch ingest;
     // map-only argmin against the broadcast nested centroids (§2.4)
     val routed = delivery
       .select(transform(col("embedding"),
@@ -1552,10 +1551,8 @@ object Similarity {
     * SWAPS the artifact at the same key — inheriting
     * [[graft.sources.IndexStore.saveCellIndex]]'s delete-first/
     * write-last crash discipline, so a crash mid-swap reads as a
-    * fingerprint miss, never a mixed serve. A live
-    * [[graft.streaming.EventStreams.annServeStream]] watching the
-    * same key picks the refreshed index up on its next micro-batch
-    * (one meta read). Returns (refreshed?, the index to serve).
+    * fingerprint miss, never a mixed serve. Returns (refreshed?, the
+    * index to serve).
     *
     * `postKey` (default: `key`) is where the REBUILT artifact lands.
     * The default is the production in-place swap — one generation

@@ -727,8 +727,6 @@ object TextAnalysis {
     * binary BECAUSE md5 is the hash both engines evaluate
     * bit-identically, which puts the sketch itself under the DuckDB
     * hash gate: counters, probes and the ε bound all mirror exactly.
-    * The built-in-sketch variant survives as [[heavyHittersSketched]]
-    * with the same spec properties as referee.
     *
     * Scale: the sketch is a partial+final (i, bucket) count aggregate
     * with CONSTANT state (4 × 2719 counter rows) regardless of corpus
@@ -773,38 +771,6 @@ object TextAnalysis {
         col("est_cnt") >= col("exact_cnt") &&
           col("est_cnt") - col("exact_cnt") <=
             expr("(n_stream + 999) div 1000"))
-      .select(col("tok"), col("exact_cnt"), col("est_cnt"), col("within_bound"))
-      .orderBy(col("exact_cnt").desc, col("tok"))
-  }
-
-  /** The Spark-built-in-sketch variant of [[heavyHitters]] (the
-    * pre-round-13 suite entry): `count_min_sketch` partial+final
-    * aggregate probed by the [[graft.functions.SketchFunctions
-    * .cms_estimate]] expression. Kept as the library's streaming-
-    * friendly form (ONE binary sketch value travels, merge-able
-    * across micro-batches) with the same ε-bound spec properties as
-    * referee; the suite entry uses the md5-keyed twin the oracle
-    * recomputes counter for counter. */
-  private[graft] def heavyHittersSketched(docs: DataFrame,
-      topK: Int = 20): DataFrame = {
-    import graft.functions.SketchFunctions.cms_estimate
-    val eps = 0.001
-    val tokens = docs.select(
-      explode(array_remove(split(lower(col("text")), "\\s+"), "")).as("tok"))
-    val sketch = tokens.agg(
-      count_min_sketch(col("tok"), lit(eps), lit(0.99), lit(42)).as("cms"),
-      count(lit(1)).as("n_stream"))
-    val top = tokens.groupBy(col("tok")).agg(count(lit(1)).as("exact_cnt"))
-      .orderBy(col("exact_cnt").desc, col("tok"))
-      .limit(topK)
-    top.crossJoin(broadcast(sketch))
-      .select(col("tok"), col("exact_cnt"),
-        cms_estimate(col("cms"), col("tok")).as("est_cnt"),
-        col("n_stream"))
-      .withColumn("within_bound",
-        col("est_cnt") >= col("exact_cnt") &&
-          col("est_cnt") - col("exact_cnt") <=
-            ceil(col("n_stream") * lit(eps)))
       .select(col("tok"), col("exact_cnt"), col("est_cnt"), col("within_bound"))
       .orderBy(col("exact_cnt").desc, col("tok"))
   }
@@ -1048,10 +1014,8 @@ object TextAnalysis {
     tokenDriftAgainst(docs.filter(col("doc_id") % 17 =!= 0),
       docs.filter(col("doc_id") % 17 === 0))
 
-  /** The t28 core over an explicit (standing corpus, delivery) pair —
-    * shared by the batch query (doc_id % 17 split) and the streaming
-    * per-micro-batch gate
-    * ([[graft.streaming.EventStreams.tokenDriftReports]]). */
+  /** The t28 core over an explicit (standing corpus, delivery) pair;
+    * the query splits one corpus by doc_id % 17. */
   private[graft] def tokenDriftAgainst(corpus: DataFrame,
       delivery: DataFrame): DataFrame = {
     def toksOf(df: DataFrame) = df.select(

@@ -6,6 +6,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RowsBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -430,9 +431,8 @@ object DiscogsXml {
     // the dump is read through the load's own first-wins ([[read]]),
     // once, so every staged read afterwards is pure map-side work. The
     // staged files keep no order column: each staged dump is deduped
-    // already, so cross-dump precedence must go through
-    // DiscogsQueries.unionDumps. The one shuffle lays the staged files
-    // out n ways by id.
+    // already, so cross-dump precedence must go through [[unionDumps]].
+    // The one shuffle lays the staged files out n ways by id.
     val g = read(spark, entity, Seq(alone(spark, entity, path)))
     try g.raw.repartition(n, col(entityMeta(entity)._3)).write.mode("overwrite").parquet(staged)
     finally g.release()
@@ -447,9 +447,9 @@ object DiscogsXml {
     * NOTE: the union is a plain UNION ALL — dedup is per FILE, so an id
     * present in two dumps keeps both rows, as two monthly snapshots of
     * the same record. Cross-dump first-wins semantics are a policy
-    * choice, not a default: route the result through
-    * [[graft.operators.DiscogsQueries.unionDumps]], or pass a directory
-    * holding all files of one logical dump to [[readGroup]], where
+    * choice, not a default: route the result through [[unionDumps]],
+    * or pass a directory holding all files of one logical dump to
+    * [[readGroup]], where
     * (file, document-order) first-wins applies across its files. A
     * group's cut stays registered with [[CacheScope]] until
     * [[CacheScope.releaseAll]].
@@ -501,5 +501,17 @@ object DiscogsXml {
     require(foreign.isEmpty,
       s"not re-staged $entity directories: ${foreign.mkString(", ")}")
     DumpGroup(entity, stagedPaths.map(spark.read.parquet(_)).reduce(_.unionByName(_)))
+  }
+
+  /** Cross-dump first-wins on `id` (SURVEY §2.3-8, monthly-dump set
+    * ops): every row of `a`, plus the rows of `b` whose id `a` lacks.
+    * [[loadAll]] and [[readStagedGroup]] union dumps plainly; this is
+    * the policy for two separately deduped (e.g. [[restage]]d) dumps
+    * of one table. */
+  def unionDumps(a: DataFrame, b: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("id")).orderBy(col("__src"))
+    a.withColumn("__src", lit(0)).unionByName(b.withColumn("__src", lit(1)))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__src", "__rn")
   }
 }

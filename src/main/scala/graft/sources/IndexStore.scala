@@ -173,18 +173,9 @@ object IndexStore {
     try out.write(fingerprint.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The artifact directory [[ensureCellIndex]] keys `corpusDir` to —
-    * exposed so long-lived consumers (the streaming serve path) can
-    * watch the SAME location for a refreshed artifact. */
+  /** The artifact directory [[ensureCellIndex]] keys `corpusDir` to. */
   def cellIndexDir(corpusDir: String): String =
     s"$root/${corpusDir.replaceAll("[^A-Za-z0-9._-]", "_")}"
-
-  /** The fingerprint the artifact at `dir` currently serves (None when
-    * absent/unreadable). One tiny file read — cheap enough to poll
-    * per micro-batch; a changed value means a refresh swapped the
-    * index and the consumer should [[loadCellIndex]] again. */
-  def currentMeta(spark: SparkSession, dir: String): Option[String] =
-    readMeta(spark, dir)
 
   /** The meta file's line 1 — the fingerprint the freshness gate
     * compares. Line 2+ carry build-time properties (the adaptive
@@ -194,10 +185,8 @@ object IndexStore {
     meta.map(_.linesIterator.next())
 
   /** Parse the [[graft.operators.Similarity.adaptiveNProbe]]
-    * recommendation off a meta string ([[currentMeta]]'s value) —
-    * exposed so a streaming consumer that already polls the meta per
-    * batch derives the recommendation from the SAME read. */
-  def nProbeOfMeta(meta: Option[String]): Option[Int] =
+    * recommendation off a meta string ([[readMeta]]'s value). */
+  private def nProbeOfMeta(meta: Option[String]): Option[Int] =
     meta.flatMap(_.linesIterator.drop(1).collectFirst {
       case l if l.startsWith("nprobe=") =>
         scala.util.Try(l.stripPrefix("nprobe=").trim.toInt).toOption
@@ -218,7 +207,7 @@ object IndexStore {
     * see [[graft.operators.Similarity.cellProbeSearchFor]]. None when
     * the artifact is absent/unreadable (callers fall back to the
     * scale-safe beam-broadcast shape). */
-  def corpusRowsOfMeta(meta: Option[String]): Option[Long] =
+  private def corpusRowsOfMeta(meta: Option[String]): Option[Long] =
     metaFp(meta).flatMap(fp =>
       scala.util.Try(fp.takeWhile(_ != '_').toLong).toOption)
 
@@ -226,7 +215,9 @@ object IndexStore {
   def corpusRows(spark: SparkSession, corpusDir: String): Option[Long] =
     corpusRowsOfMeta(readMeta(spark, cellIndexDir(corpusDir)))
 
-  private def readMeta(spark: SparkSession, dir: String): Option[String] =
+  /** The meta of the artifact at `dir`: the fingerprint it serves,
+    * then its build-time properties (None when absent/unreadable). */
+  private[graft] def readMeta(spark: SparkSession, dir: String): Option[String] =
     // ANY unreadable meta (absent, truncated, checksum-corrupt) is a
     // fingerprint miss: the caller rebuilds and rewrites — a damaged
     // artifact must force a rebuild, never an error or a stale serve

@@ -52,89 +52,6 @@ object Sinks {
     rows.get("rows").asInstanceOf[Long]
   }
 
-  /** Small-file compaction — the maintenance op every long-running
-    * ingest needs: micro-batches and per-task writers leave thousands
-    * of KB-sized parquet files, and at 100 TB the NameNode/listing and
-    * per-file task overhead dominate scans long before the bytes do.
-    * Rewrites `dir` into ceil(bytes / targetMB) files (one read, one
-    * shuffle, one write), then swaps via write-to-sibling + delete +
-    * rename. The swap is NOT atomic: readers racing it can observe a
-    * missing directory for the delete→rename window, and a crash in
-    * that window leaves the new data at `<dir>._compact_tmp` — run it
-    * in the table's maintenance window. FLAT dirs only: a Hive-
-    * partitioned layout is refused (rewriting it here would flatten
-    * the partition columns into data and break pruning).
-    *
-    * `clusterBy` lays the files out by key: repartition on the keys +
-    * sort within partitions (the sort [[writeParquet]] leaves in each
-    * file), so row-group min/max skipping survives compaction; the
-    * repartition is needed here because compaction picks its own file
-    * count. The default round-robin spread
-    * maximizes write parallelism but scatters any pre-existing
-    * clustering — pass the table's index keys when it has them.
-    * Returns (filesBefore, filesAfter).
-    */
-  def compactParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
-      targetMB: Int = 128, clusterBy: Seq[String] = Nil): (Int, Int) = {
-    require(targetMB > 0, s"targetMB must be positive, got $targetMB")
-    val raw = new org.apache.hadoop.fs.Path(dir)
-    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // normalize BEFORE deriving the sibling: string-concat on a
-    // trailing-slash dir would nest tmp INSIDE the target, and the
-    // swap's recursive delete would then destroy both copies
-    val hPath = fs.makeQualified(raw)
-    val tmp = new org.apache.hadoop.fs.Path(
-      hPath.getParent, hPath.getName + "._compact_tmp")
-    val entries = fs.listStatus(hPath).toSeq
-    val dataFiles = entries
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    require(dataFiles.nonEmpty,
-      s"compactParquet: no top-level *.parquet in $hPath — " +
-        "partitioned/nested layouts must be compacted per leaf directory")
-    val bytes = dataFiles.map(_.getLen).sum
-    val n = math.max(1L,
-      (bytes + targetMB * (1L << 20) - 1) / (targetMB * (1L << 20))).toInt
-    fs.delete(tmp, true)
-    val df = spark.read.parquet(hPath.toString)
-    val shaped =
-      if (clusterBy.isEmpty) df.repartition(n)
-      else df.repartition(n, clusterBy.map(org.apache.spark.sql.functions.col): _*)
-        .sortWithinPartitions(clusterBy.map(org.apache.spark.sql.functions.col): _*)
-    shaped.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(hPath, true)
-    if (!fs.rename(tmp, hPath))
-      throw new java.io.IOException(
-        s"compactParquet: rename $tmp -> $hPath failed; data is intact at $tmp")
-    (dataFiles.size, n)
-  }
-
-  /** Hive-style partitioned parquet layout: one directory per value of
-    * the partition column(s). Queries filtering on those columns prune
-    * whole directories at planning time (`PartitionFilters` in the
-    * scan) — the coarse-grained skip that makes time-scoped queries on
-    * a 100 TB event table read only their slice.
-    */
-  def writePartitioned(df: DataFrame, outDir: String, table: String,
-      partitionCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(s"$outDir/$table")
-
-  /** Bucketed catalog table: pre-shuffles once at write time so every
-    * later equi-join/aggregation on `keys` is exchange-free (both
-    * sides scan matching buckets). The write-time analogue of the
-    * reference's deferred indexes for JOIN workloads — at 100 TB,
-    * bucketing the fact tables on their join key turns the dominant
-    * shuffle into a metadata no-op.
-    */
-  def writeBucketed(df: DataFrame, table: String, keys: Seq[String],
-      numBuckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
   final case class JdbcConfig(url: String, user: String, password: String,
       batchSize: Int = 10000)
 
@@ -222,21 +139,6 @@ object Sinks {
         val s = e.toString
         "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     }.mkString("{", ",", "}")
-
-  /** Streaming → relational bridge: land each micro-batch through the
-    * same partition-streamed [[writeJdbc]] path. foreachBatch is the
-    * idiomatic seam from Structured Streaming to a batch sink — the
-    * batch DataFrame reuses all of the COPY/INSERT logic, and
-    * exactly-once reduces to the sink table's idempotency (key the
-    * table or dedup downstream; the reference's truncate-reload model
-    * has no streaming equivalent).
-    */
-  def jdbcStreamWriter(df: DataFrame, table: String,
-      cfg: JdbcConfig): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch {
-      (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        writeJdbc(batch.toDF(), table, cfg)
-    }
 
   /** O16: truncate-and-reload DDL before a JDBC load (the reference
     * runs DROP TABLE IF EXISTS + CREATE, `db.rs:40-45`). */

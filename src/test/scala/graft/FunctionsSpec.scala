@@ -35,9 +35,40 @@ class FunctionsSpec extends AnyFunSuite {
 
     val s2 = spark.newSession()
     graft.functions.VectorFunctions.register(s2)
+    graft.functions.TextHashFunctions.register(s2)
     import s2.implicits._
     Seq((Array(3f, 4f), Array(3f, 4f))).toDF("a", "b").createOrReplaceTempView("v")
     assert(s2.sql("SELECT cosine_similarity(a, b) FROM v").first().getDouble(0) === 1.0)
+    // integer literals reach the expression; an omitted one takes the
+    // Column API's default
+    val r = s2.sql(
+      """SELECT simhash64(array('a','b')) AS h,
+        |  array_jaccard(array('a','b'), array('b','c')) AS j,
+        |  cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
+        |  minhash_bands(word_shingles(array('a','b','c','d'))) AS mb,
+        |  hyperplane_sigs(array(1.0D, 2.0D), 3, 5, 8, 42) AS hs,
+        |  size(word_shingles(array('a','b','c','d'))) AS sh_default,
+        |  size(word_shingles(array('a','b','c','d'), 2)) AS sh_2,
+        |  size(minhash_signature(array('a','b'))) AS sig_default,
+        |  size(minhash_signature(array('a','b'), 8)) AS sig_8,
+        |  size(minhash_bands(array('a','b'), 4, 2)) AS bands_4
+        |""".stripMargin).first()
+    assert(!r.isNullAt(0))
+    assert(math.abs(r.getAs[Double]("j") - 1.0 / 3.0) < 1e-9)
+    assert(r.getAs[Double]("c") === 1.0)
+    assert(r.getAs[scala.collection.Seq[Long]]("mb").length == 16)
+    assert(r.getAs[Int]("sh_default") == 2 && r.getAs[Int]("sh_2") == 3)
+    assert(r.getAs[Int]("sig_default") == 64 && r.getAs[Int]("sig_8") == 8)
+    assert(r.getAs[Int]("bands_4") == 4)
+    val byColumn = spark.range(1)
+      .select(hyperplane_sigs(array(lit(1.0), lit(2.0)), 3, 5, 8, 42L)).first()
+    assert(r.getAs[scala.collection.Seq[Int]]("hs") == byColumn.getSeq[Int](0))
+    // a column where an integer literal belongs is rejected, not ignored
+    val err = intercept[Exception](s2.sql(
+      "SELECT word_shingles(toks, n) FROM VALUES (array('a','b','c'), 2) AS t(toks, n)")
+      .collect())
+    assert(err.getMessage.contains("word_shingles: argument 2 must be an integer literal"),
+      err.getMessage)
   }
 
   test("dot_product mixed float/double arrays") {
@@ -248,24 +279,7 @@ class FunctionsSpec extends AnyFunSuite {
     }
   }
 
-  test("GraftExtensions function builders work via SQL") {
-    val s2 = spark.newSession()
-    GraftExtensions.registerAll(s2)
-    val r = s2.sql(
-      """SELECT simhash64(array('a','b')) AS h,
-        |  array_jaccard(array('a','b'), array('b','c')) AS j,
-        |  cosine_similarity(array(1.0D, 0.0D), array(1.0D, 0.0D)) AS c,
-        |  minhash_bands(word_shingles(array('a','b','c','d'))) AS mb,
-        |  hyperplane_sigs(array(1.0D, 2.0D), 3, 5, 8, 42) AS hs
-        |""".stripMargin).first()
-    assert(!r.isNullAt(0))
-    assert(math.abs(r.getDouble(1) - 1.0 / 3.0) < 1e-9)
-    assert(r.getDouble(2) === 1.0)
-    assert(r.getAs[scala.collection.Seq[Long]](3).length == 16)
-    assert(r.getAs[scala.collection.Seq[Int]](4).length == 3)
-  }
-
-  test("CosineFusionRule fuses dot(l2,l2) into one-pass NormalizedDot") {
+  test("normalized_dot == dot_product(l2_normalize, l2_normalize), full-length norms") {
     val df = Seq(
       (Array(1f, 2f, 2f), Array(2f, 1f, 2f)),
       (Array(0f, 0f, 0f), Array(1f, 0f, 0f)), // zero vector: both forms 0.0
@@ -274,35 +288,14 @@ class FunctionsSpec extends AnyFunSuite {
       .select(
         dot_product(l2_normalize($"a"), l2_normalize($"b")).as("unfused"),
         graft.functions.VectorFunctions.normalized_dot($"a", $"b").as("fused"))
-    // the rewrite itself, applied to the analyzed plan
-    val rewritten = graft.plans.CosineFusionRule(df.queryExecution.analyzed)
-    val flat = rewritten.expressions.flatMap(_.collect { case e => e })
-    assert(flat.exists(_.isInstanceOf[graft.functions.NormalizedDot]))
-    assert(!flat.exists(_.isInstanceOf[graft.functions.DotProduct]),
-      "dot_product(l2_normalize, l2_normalize) survived the rewrite")
-    // value equivalence: exact for zero vectors, ulp-level otherwise —
-    // including UNEQUAL lengths, where CosineSimilarity (min-length
-    // norms) would give 1.0 but the unfused form gives 0.6
+    // exact for zero vectors, ulp-level otherwise — including UNEQUAL
+    // lengths, where CosineSimilarity (min-length norms) would give 1.0
+    // but the unfused form gives 0.6
     df.as[(Double, Double)].collect().foreach { case (u, f) =>
       assert(math.abs(u - f) < 1e-12, s"unfused $u vs fused $f")
     }
     val mixed = df.as[(Double, Double)].collect().last
     assert(math.abs(mixed._1 - 0.6) < 1e-9)
-    // end-to-end through an optimizer-rule extension point (over a
-    // parquet-backed table: ConvertToLocalRelation would constant-fold
-    // the whole projection away on an in-memory Seq relation)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.CosineFusionRule
-    try {
-      val opt = Tables.embeddings(spark, "/root/testdata/sf0.001")
-        .select(dot_product(l2_normalize(col("embedding")),
-          l2_normalize(col("embedding"))))
-        .queryExecution.optimizedPlan
-      val oflat = opt.expressions.flatMap(_.collect { case e => e })
-      assert(oflat.exists(_.isInstanceOf[graft.functions.NormalizedDot]))
-    } finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations
-        .filterNot(_ == graft.plans.CosineFusionRule)
   }
 
   test("int8_quantize/int8_dot match the HOF-lambda formulation bit for bit") {

@@ -13,7 +13,7 @@ import java.sql.DriverManager
   * Derby has no SQL ARRAY type, which also exercises the documented
   * degradation: array columns land as postgres-array-literal text.
   */
-class JdbcSinkSpec extends AnyFunSuite with SuiteTempDir {
+class JdbcSinkSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   private val cfg = Sinks.JdbcConfig(
@@ -58,24 +58,6 @@ class JdbcSinkSpec extends AnyFunSuite with SuiteTempDir {
     Sinks.initTable(cfg,
       "DROP TABLE reload_t; CREATE TABLE reload_t (x INT)")
     assert(query("SELECT COUNT(*) FROM reload_t")(_.getLong(1)) == Vector(0L))
-  }
-
-  test("streaming events land in Derby via the foreachBatch bridge") {
-    Sinks.initTable(cfg,
-      "CREATE TABLE stream_sink (event_id BIGINT, user_id BIGINT, value DOUBLE)")
-    val dir = suiteTempDir("graft-stream-jdbc").toString
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    val events = graft.streaming.EventStreams.readEventStream(spark, dir)
-      .select(org.apache.spark.sql.functions.col("event_id"),
-        org.apache.spark.sql.functions.col("user_id"),
-        org.apache.spark.sql.functions.col("value"))
-    val q = Sinks.jdbcStreamWriter(events, "stream_sink", cfg).start()
-    try q.processAllAvailable() finally q.stop()
-    val n = query("SELECT COUNT(*) FROM stream_sink")(_.getLong(1))
-    val want = Tables.events(spark, "/root/testdata/sf0.001").count()
-    assert(n == Vector(want))
   }
 
   test("array fields render as quoted postgres array literals") {

@@ -884,7 +884,7 @@ class SimilaritySpec extends AnyFunSuite {
       val standing = e.filter(col("vec_id") % 5 =!= 0)
       val key = s"${sfDir}_s27spec"
       val dir = sources.IndexStore.cellIndexDir(key)
-      def meta(): Option[String] = sources.IndexStore.currentMeta(spark, dir)
+      def meta(): Option[String] = sources.IndexStore.readMeta(spark, dir)
       // undisturbed delivery: the audit must NOT fire and the standing
       // artifact must survive byte-identical (same fingerprint)
       val quietDelivery = e.filter(col("vec_id") % 5 === 0)
@@ -936,7 +936,7 @@ class SimilaritySpec extends AnyFunSuite {
       val (cents, asg, entries, graph) = sources.IndexStore
         .ensureCellIndex(spark, s"${sfDir}_s29spec", e,
           nCells = operators.Similarity.IvfNCells)
-      val fpBefore = sources.IndexStore.currentMeta(spark,
+      val fpBefore = sources.IndexStore.readMeta(spark,
         sources.IndexStore.cellIndexDir(s"${sfDir}_s29spec"))
       val q = asg.filter(col("vec_id") % 97 === 0 &&
           col("vec_id") < operators.Similarity.QueryIdBound)
@@ -976,7 +976,7 @@ class SimilaritySpec extends AnyFunSuite {
           s"query $qid ranks not a prefix after tombstoning")
       }
       // 4. the standing artifact was never touched
-      assert(sources.IndexStore.currentMeta(spark,
+      assert(sources.IndexStore.readMeta(spark,
         sources.IndexStore.cellIndexDir(s"${sfDir}_s29spec")) == fpBefore,
         "tombstoned serving modified the standing artifact")
     }
@@ -1002,7 +1002,7 @@ class SimilaritySpec extends AnyFunSuite {
     withIndexRoot("graft_index_s30spec") {
       val e = Tables.embeddings(spark, sfDir)
       val key = s"${sfDir}_s30spec"
-      def meta(): Option[String] = sources.IndexStore.currentMeta(spark,
+      def meta(): Option[String] = sources.IndexStore.readMeta(spark,
         sources.IndexStore.cellIndexDir(key))
       // quiet: an empty delete set must not trip or swap
       val none = e.filter(lit(false)).select(col("vec_id").as("del_id"))
@@ -1051,7 +1051,7 @@ class SimilaritySpec extends AnyFunSuite {
     withIndexRoot("graft_index_s31spec") {
       val e = Tables.embeddings(spark, sfDir)
       val key = s"${sfDir}_s31spec"
-      def meta(): Option[String] = sources.IndexStore.currentMeta(spark,
+      def meta(): Option[String] = sources.IndexStore.readMeta(spark,
         sources.IndexStore.pqIndexDir(key))
       val (c1, a1, cb1, cd1) = sources.IndexStore.ensurePqIndex(spark, key, e,
         nCells = operators.Similarity.IvfNCells)

@@ -358,28 +358,6 @@ class TextAnalysisSpec extends AnyFunSuite {
     assert(rows.head.getAs[String]("tok") == "hot")
   }
 
-  test("t20 sketched referee: the built-in count_min_sketch variant " +
-      "holds the same ε-bound properties") {
-    // the library's streaming-friendly form (one merge-able binary
-    // sketch) — kept beside the suite's md5-keyed twin; both must
-    // satisfy the count-min contract on the same skewed stream
-    val texts = Seq(
-      1L -> (Seq.fill(60)("hot") ++ Seq.fill(20)("warm") ++
-        Seq.fill(10)("mild")).mkString(" "),
-      2L -> (1 to 50).map(i => s"tail$i").mkString(" "),
-    )
-    val rows = operators.TextAnalysis
-      .heavyHittersSketched(corpus(texts: _*), topK = 10).collect()
-    CacheScope.releaseAll()
-    assert(rows.length == 10)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("est_cnt") >= r.getAs[Long]("exact_cnt"))
-      assert(r.getAs[Boolean]("within_bound"),
-        s"${r.getAs[String]("tok")} exceeded the ε bound (sketched)")
-    }
-    assert(rows.head.getAs[String]("tok") == "hot")
-  }
-
   test("t28 drift: delivery-heavy tokens rank first with positive contribution") {
     import spark.implicits._
     // corpus (ids 1-8): 'aaa bbb' heavy, 'zzz' rare; delivery (0, 17):
