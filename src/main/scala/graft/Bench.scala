@@ -90,9 +90,9 @@ object Bench {
     val total = results.map(_._2).sum
     val failed = results.filter(_._3 < 0).map(_._1)
     if (failed.nonEmpty) System.err.println(s"[bench] FAILED: ${failed.mkString(",")}")
-    // warm the ingest path (parse, codegen, gzip codec, window
-    // shuffle, parquet writer) on a small dump so neither timed ingest
-    // run eats cold-JVM cost
+    // warm the ingest path (parse, codegen, gzip codec, parquet
+    // writer) on a small dump so the timed ingest run eats no cold-JVM
+    // cost
     try { IngestBench.run(spark, n = 5000); () } catch { case _: Throwable => () }
     // XML-ingest throughput, comparable to BASELINE.md's ~16,600
     // records/s: DiscogsLoad.run over one releases dump, the release
@@ -102,17 +102,8 @@ object Bench {
       catch { case e: Throwable =>
         System.err.println(s"[bench] ingest failed: ${e.getMessage}"); (0L, 0.0, 0.0)
       }
-    // splittable re-stage: pay the gz parse once, every later pass
-    // scans parquet splits in parallel
-    val (_, stageSec, _, stagedRate) =
-      // 4× the single-stream dump: the staged scan is sub-second at
-      // 100k rows, so fixed job costs would swamp the measured rate
-      try IngestBench.runRestaged(spark, n = 4 * IngestBench.defaultRecords)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] restage failed: ${e.getMessage}"); (0L, 0.0, 0.0, 0.0)
-      }
     val loadEnd = osBean.getSystemLoadAverage
-    val json = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","protocol":"cold-stores,best-of-$repeats","load_avg_start":${d3(loadStart)},"load_avg_end":${d3(loadEnd)},"cores":${Harness.cores},"ingest_records":$inRows,"ingest_sec":${d3(inSec)},"ingest_records_per_sec":${d0(inRate)},"restage_sec":${d3(stageSec)},"restaged_scan_records_per_sec":${d0(stagedRate)}}"""
+    val json = s"""{"metric":"total","value":${d3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","protocol":"cold-stores,best-of-$repeats","load_avg_start":${d3(loadStart)},"load_avg_end":${d3(loadEnd)},"cores":${Harness.cores},"ingest_records":$inRows,"ingest_sec":${d3(inSec)},"ingest_records_per_sec":${d0(inRate)}}"""
     // stdout under sbt gets [info]-decorated and interleaved with Spark
     // log noise; a well-known file is the machine-readable channel
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench_out.json")
@@ -150,7 +141,7 @@ object Bench {
     val sfShort = "(?:^|/)sf([0-9]+(?:\\.[0-9]+)?)(?:/|$)".r.findFirstMatchIn(sfDir)
       .map(_.group(1))
       .getOrElse("\"" + sfDir.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-    val compact = s"""{"metric":"total","value":${d2(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"queries_in":"$outFile","sf":$sfShort,"proto":"c$repeats","load":${d1(loadStart)},"ingest_rps":${d0(inRate)},"restage_sec":${d2(stageSec)},"staged_rps":${d0(stagedRate)}}"""
+    val compact = s"""{"metric":"total","value":${d2(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"queries_in":"$outFile","sf":$sfShort,"proto":"c$repeats","load":${d1(loadStart)},"ingest_rps":${d0(inRate)}}"""
     if (compact.length > 1500)
       System.err.println(s"[bench] compact line ${compact.length} chars — may overflow the driver's 2000-char tail window")
     Console.err.flush()

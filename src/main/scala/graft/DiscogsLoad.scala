@@ -11,11 +11,10 @@ import scala.util.{Failure, Try}
   *
   * Usage:
   *   discogs-load [--out DIR] [--batch-size N] [--db-url JDBC_URL]
-  *     [--db-user U] [--db-password P] [--create-indexes]
-  *     [--restage DIR] FILE...
+  *     [--db-user U] [--db-password P] [--create-indexes] FILE...
   *
-  * Each FILE is a discogs dump (`.xml` or `.xml.gz`); entity type is
-  * auto-detected from the root element (O2). Tables always land as
+  * Each FILE is a discogs dump file (`.xml` or `.xml.gz`); entity type
+  * is auto-detected from the root element (O2). Tables always land as
   * key-sorted parquet under --out (engine-native sink); with --db-url
   * each is then loaded over JDBC from its landed parquet with
   * --batch-size-row batches, and --create-indexes runs the deferred
@@ -43,19 +42,13 @@ import scala.util.{Failure, Try}
   * and releases that cut once every one of those writes has ended. The
   * writes start only after the cut has materialized, so they never
   * compete with the parse.
-  *
-  * --restage DIR re-stages each group's gz dumps to splittable parquet
-  * under DIR first (one parse each, paid once; the restage reads a big
-  * dump in ranges the same way, on every core), then loads the group
-  * from the staged copies — the layout every later pass over a big dump
-  * should read.
   */
 object DiscogsLoad {
 
   final case class Opts(files: Seq[String] = Nil, out: String = "out",
       batchSize: Int = 10000, dbUrl: Option[String] = None,
       dbUser: String = "dev", dbPassword: String = "dev_pass",
-      createIndexes: Boolean = false, restageDir: Option[String] = None)
+      createIndexes: Boolean = false)
 
   def parseArgs(args: List[String], o: Opts = Opts()): Opts = args match {
     case Nil => o
@@ -65,7 +58,6 @@ object DiscogsLoad {
     case "--db-user" :: v :: rest => parseArgs(rest, o.copy(dbUser = v))
     case "--db-password" :: v :: rest => parseArgs(rest, o.copy(dbPassword = v))
     case "--create-indexes" :: rest => parseArgs(rest, o.copy(createIndexes = true))
-    case "--restage" :: v :: rest => parseArgs(rest, o.copy(restageDir = Some(v)))
     case f :: rest if !f.startsWith("--") => parseArgs(rest, o.copy(files = o.files :+ f))
     case bad :: _ => throw new IllegalArgumentException(s"unknown flag $bad")
   }
@@ -88,22 +80,8 @@ object DiscogsLoad {
     val jdbc = opts.dbUrl.map(url => Sinks.JdbcConfig(url, opts.dbUser,
       opts.dbPassword, opts.batchSize))
 
-    val groups = DiscogsXml.groupByEntity(opts.files)
-    // direct: every dump's ranges cut for the whole load up front; each
-    // group's frames are built in its own thread
-    val direct = if (opts.restageDir.isDefined) Nil else DiscogsXml.readGroups(spark, groups)
-
-    def open(k: Int): DiscogsXml.DumpGroup = opts.restageDir match {
-      case Some(rd) =>
-        val (entity, files) = groups(k)
-        DiscogsXml.readStagedGroup(spark, entity, files.map { f =>
-          DiscogsXml.restage(spark, f, s"$rd/d${opts.files.indexOf(f)}")
-        })
-      case None => direct(k)()
-    }
-
-    def load(k: Int): Seq[String] = {
-      val g = open(k)
+    def load(open: () => DiscogsXml.DumpGroup): Seq[String] = {
+      val g = open()
       val landing = if (g.fanOut) g.landed else g
       try sideBySide(landing.tables.map { case (name, df) =>
         () => {
@@ -118,7 +96,9 @@ object DiscogsLoad {
       names
     }
 
-    val loaded = sideBySide(groups.indices.map(k => () => load(k)))
+    // every dump's ranges cut for the whole load up front; each group's
+    // frames are built in its own thread
+    val loaded = sideBySide(DiscogsXml.readGroups(spark, opts.files).map(open => () => load(open)))
     jdbc.filter(_ => opts.createIndexes).foreach(Sinks.createIndexes(_, loaded.flatten))
   }
 

@@ -84,13 +84,13 @@ object Harness {
     (wall, n)
   }
 
-  /** Deletes every standing-index artifact root, so index-building
-    * entries pay (and report) their build. */
+  /** Deletes the standing-index artifact root
+    * ([[graft.sources.IndexStore.root]]), so index-building entries pay
+    * (and report) their build. */
   def coldStores(): Unit =
-    for (root <- Seq(graft.sources.IndexStore.root, "/tmp/graft_index").distinct) {
-      try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-      catch { case _: Throwable => () }
-    }
+    try org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(graft.sources.IndexStore.root))
+    catch { case _: Throwable => () }
 
   /** One untimed pass of `names` at [[WarmDir]], so JVM/JIT/codegen/
     * parquet-footer warm-up cost lands on no timed entry. Its index

@@ -17,10 +17,6 @@ object IngestBench {
 
   val defaultRecords = 100000
 
-  /** The release table of a releases dump group. The entity is named
-    * by the caller, so no root-element peek runs inside a timed region. */
-  private def release(g: sources.DiscogsXml.DumpGroup) = g.tables.toMap.apply("release")
-
   /** `body` on a scratch directory created for it and removed, with
     * everything in it, when it returns or throws. */
   private def withScratch[A](body: File => A): A = {
@@ -77,23 +73,5 @@ object IngestBench {
     DiscogsLoad.run(DiscogsLoad.Opts(files = Seq(path), out = new File(dir, "out").getPath), spark)
     val sec = (System.nanoTime() - t0) / 1e9
     (n.toLong, sec, n / sec)
-  }
-
-  /** Splittable re-stage throughput: one-time gz → parquet re-stage
-    * (timed as `stageSec`), then the SAME normalize+dedup pipeline
-    * over the staged parquet (timed as `scanSec`). The scan rate ÷
-    * the gz single-stream rate is the per-pass speedup every
-    * downstream consumer gets once the re-stage cost is paid. */
-  def runRestaged(spark: org.apache.spark.sql.SparkSession,
-      n: Int = defaultRecords): (Long, Double, Double, Double) = withScratch { dir =>
-    val path = writeDump(dir, n)
-    val t0 = System.nanoTime()
-    val staged = sources.DiscogsXml.restage(spark, path, new File(dir, "staged").getPath)
-    val stageSec = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val rows = release(
-      sources.DiscogsXml.readStagedGroup(spark, "releases", Seq(staged))).count()
-    val scanSec = (System.nanoTime() - t1) / 1e9
-    (rows, stageSec, scanSec, rows / scanSec)
   }
 }

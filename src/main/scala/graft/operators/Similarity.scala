@@ -1138,19 +1138,12 @@ object Similarity {
       cents, asg, entries, graph, nProbe, rounds, fuseKeep = fuseKeep,
       nProbeMeta = nProbeMeta, asgRows = asgRows)
 
-  /** [[cellProbeSearchOn]] for an EXTERNAL query set — (q_id, q_mv)
-    * milli vectors that need not live in the corpus. Identical
-    * arithmetic; the in-corpus suite path is the special case where
-    * the queries are read off the assignment table.
-    *
-    * `selfIsInCorpus` controls the final self-exclusion: when the
-    * q_ids ARE corpus vec_ids (the suite/batch convention), the
-    * query's own node is dropped from the results (it would always
-    * win at d2 = 0). When the queries come from an EXTERNAL id
-    * namespace, a q_id can NUMERICALLY collide with an unrelated
-    * corpus vec_id — both are dense longs from 0 — and the same
-    * filter would silently erase that vector from the query's top-K;
-    * external callers pass false and keep every corpus candidate.
+  /** [[cellProbeSearchOn]] for any query set — (q_id, q_mv) milli
+    * vectors that need not live in the corpus. Identical arithmetic;
+    * the in-corpus suite path is the special case where the queries are
+    * read off the assignment table. q_ids are corpus vec_ids: a query's
+    * own id is dropped from its results (it would always win at
+    * d2 = 0).
     *
     * `tombstones` (optional, one `del_id` column) marks DELETED
     * corpus vectors: they are dropped from the results at the fuse
@@ -1188,7 +1181,7 @@ object Similarity {
   private[graft] def cellProbeSearchFor(q0: DataFrame, cents: DataFrame,
       asg: DataFrame, entries: DataFrame, graph: DataFrame,
       nProbe: Int = -1, rounds: Int = GsRounds,
-      beamWidth: Int = -1, selfIsInCorpus: Boolean = true,
+      beamWidth: Int = -1,
       tombstones: DataFrame = null,
       fuseKeep: DataFrame => DataFrame = null,
       nProbeMeta: Option[Int] = None,
@@ -1290,11 +1283,9 @@ object Similarity {
     }
     // fuse: per-cell beams → one exact per-query top-K (cells are
     // disjoint member sets, so no cross-cell duplicates exist); the
-    // query's own node leaves the running here — but ONLY when the
-    // query ids live in the corpus namespace (see the doc comment)
+    // query's own node leaves the running here
     val wf = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("cand"))
-    val base =
-      if (selfIsInCorpus) beam.filter(col("cand") =!= col("q_id")) else beam
+    val base = beam.filter(col("cand") =!= col("q_id"))
     // tombstoned ids leave the running HERE — after the beams (ghosts
     // stay traversable), before the top-K (deeper beam members back-
     // fill the freed ranks). The delete set broadcasts; a delete set

@@ -6,7 +6,6 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.RowsBridge
 import org.apache.spark.sql.internal.SQLConf
@@ -47,7 +46,7 @@ import scala.jdk.CollectionConverters._
 object DiscogsXml {
 
   /** The dumps of one entity: their first-wins-deduped raw rows (each
-    * path deduped on its own, then UNION ALL — see [[loadAll]]) and the
+    * file deduped on its own, then UNION ALL — see [[loadAll]]) and the
     * tables derived from `raw`, in write order. `cut` is the lineage
     * cut `raw` reads from, when there is one ([[CacheScope.cut]]); its
     * owner frees it with [[release]] once every table is consumed. A
@@ -59,7 +58,7 @@ object DiscogsXml {
       * them. */
     def fanOut: Boolean = entity == "releases" || entity == "masters"
     /** This group with `raw` read from one cut: itself when it has one
-      * already (a path read in several ranges is cut as it is read),
+      * already (a file read in several ranges is cut as it is read),
       * else `raw` cut now. */
     def landed: DumpGroup =
       if (cut.isDefined) this
@@ -141,42 +140,33 @@ object DiscogsXml {
         col(CorruptCol).as("corrupt_record"))
   }
 
-  /** Every record of the dump at `path` as parsed, before any reject
-    * or dedup: the entity's read-schema fields, the corrupt column
-    * (`_graft_corrupt`) and the order key (`_graft_file`,
+  /** Every record of the dump at `path` as parsed, read on every core,
+    * before any reject or dedup: the entity's read-schema fields, the
+    * corrupt column (`_graft_corrupt`) and the order key (`_graft_file`,
     * `_graft_offset`). */
-  private[graft] def parsed(spark: SparkSession, path: String): DataFrame = {
-    val entity = detectEntity(path)
-    readRaw(spark, entity, alone(spark, entity, path))
-  }
+  private[graft] def parsed(spark: SparkSession, path: String): DataFrame =
+    readRaw(spark, detectEntity(path), plan(spark, Seq(Seq(path))).head.head)
 
-  /** Parse one dump to clean raw rows: explicit schema, corrupt and
-    * null-id records dropped, id cast to int, order key dropped (the
-    * partitions are the ranges, in document order). The shared front
-    * of [[readGroups]] and [[restage]]. */
-  private def parseGood(spark: SparkSession, ranges: Seq[DumpRange], entity: String)
-      : DataFrame = {
-    val idCol = entityMeta(entity)._3
-    dropRejects(readRaw(spark, entity, ranges).withColumn(idCol, tryInt(col(idCol))), idCol)
-      .drop(FileCol, OffsetCol)
-  }
-
-  /** One entity's dumps, `paths` the ranges of each path in document
-    * order (files of a directory in path order): first wins by id —
-    * reference O12 semantics (`HashMap.entry(id).or_insert`,
-    * `release.rs:185-187`), exact across each path instead of per 10k
-    * batch — and the paths' survivors unioned, with no shuffle. Each
-    * range's task keeps the first good row of each id it reads
-    * ([[firstPerRange]]), so a path read in one range is deduped as it
-    * streams. A path read in several ranges (a big file, or a directory
-    * of files) also needs the ids its earlier ranges kept: the group is
-    * then cut once, its tasks report what each range kept, and
-    * [[dropKeptBefore]] drops those ids from the later ranges. */
+  /** One entity's dumps, `paths` the ranges of each dump file in
+    * document order: first wins by id — reference O12 semantics
+    * (`HashMap.entry(id).or_insert`, `release.rs:185-187`), exact across
+    * each file instead of per 10k batch — and the files' survivors
+    * unioned, with no shuffle. Corrupt and null-id records are dropped
+    * and the id cast to int first. Each range's task keeps the first
+    * good row of each id it reads ([[firstPerRange]]), so a file read in
+    * one range is deduped as it streams. A file read in several ranges
+    * also needs the ids its earlier ranges kept: the group is then cut
+    * once, its tasks report what each range kept, and [[dropKeptBefore]]
+    * drops those ids from the later ranges. */
   private def read(spark: SparkSession, entity: String, paths: Seq[Seq[DumpRange]])
       : DumpGroup = {
-    val good = paths.map(parseGood(spark, _, entity))
+    val idCol = entityMeta(entity)._3
+    // the partitions are the ranges, in document order: no order key
+    val good = paths.map(ranges =>
+      dropRejects(readRaw(spark, entity, ranges).withColumn(idCol, tryInt(col(idCol))), idCol)
+        .drop(FileCol, OffsetCol))
     val schema = good.head.schema
-    val id = schema.fieldIndex(entityMeta(entity)._3)
+    val id = schema.fieldIndex(idCol)
     val split = paths.exists(_.size > 1)
     val kept = if (split) Some(spark.sparkContext.collectionAccumulator[KeptIds]) else None
     val firsts = spark.sparkContext.union(
@@ -245,8 +235,10 @@ object DiscogsXml {
 
   /** O2: root-element dispatch — peek the first bytes of the (possibly
     * gzip'd) file on the driver; no full reopen of the stream (fixes
-    * quirk Q11). */
+    * quirk Q11). A path that is not a file (missing, or a directory) is
+    * refused with its name. */
   def detectEntity(path: String): String = {
+    require(new File(path).isFile, s"$path: not a dump file (missing, or a directory)")
     val fin = new FileInputStream(path)
     try {
       val in = new BufferedInputStream(
@@ -271,10 +263,10 @@ object DiscogsXml {
   }
 
   /** O4: releases → release + release_label + release_video, over
-    * clean first-wins-deduped raw rows (direct parse or re-staged
-    * parquet). The dedup runs BEFORE the fan-out extraction, so
-    * children of dropped duplicate parents are dropped with them —
-    * child tables always reference exactly the surviving parent rows.
+    * clean first-wins-deduped raw rows. The dedup runs BEFORE the
+    * fan-out extraction, so children of dropped duplicate parents are
+    * dropped with them — child tables always reference exactly the
+    * surviving parent rows.
     */
   private def normalizeReleases(raw: DataFrame): Seq[(String, DataFrame)] = {
     val release = (
@@ -379,64 +371,19 @@ object DiscogsXml {
     else math.max(1, math.round(cores.toDouble * bytes / math.max(loadBytes, bytes)).toInt)
   }
 
-  /** The files of the dump at `path`: the file itself, or a directory's
-    * visible files (names not starting with `_` or `.`) in path order. */
-  private def dumpFiles(path: String): Seq[String] = {
-    val f = new File(path)
-    require(f.exists, s"$path: no such dump")
-    if (!f.isDirectory) Seq(path)
-    else f.listFiles().toSeq
-      .filter(c => c.isFile && !c.getName.startsWith("_") && !c.getName.startsWith("."))
-      .map(_.getPath).sorted
-  }
-
-  /** The ranges of every dump path of `groups` (entity, paths), cut for
-    * one load of all of them: per group, per path, the ranges of its
-    * files in order. A range is a local file read on an executor, as
-    * [[detectEntity]] reads it on the driver. */
-  private def plan(spark: SparkSession, groups: Seq[(String, Seq[String])])
-      : Seq[Seq[Seq[DumpRange]]] = {
+  /** The ranges of every dump file of `groups`, cut for one load of
+    * all of them: per group, per file, its ranges in order. A range is a
+    * local file read on an executor, as [[detectEntity]] reads it on the
+    * driver. */
+  private def plan(spark: SparkSession, groups: Seq[Seq[String]]): Seq[Seq[Seq[DumpRange]]] = {
     val cores = spark.sparkContext.defaultParallelism
-    val files = groups.flatMap(_._2).distinct.map(p => p -> dumpFiles(p)).toMap
-    val loadBytes = files.values.flatten.toSeq.distinct.map(new File(_).length).sum
-    groups.map(_._2.map(p => files(p).flatMap { f =>
+    val loadBytes = groups.flatten.distinct.map(new File(_).length).sum
+    groups.map(_.map { f =>
       val n = rangeCount(f, loadBytes, cores)
       val bytes = new File(f).length
       (0 until n).map(i =>
         DumpRange(f, bytes * i / n, if (i == n - 1) Long.MaxValue else bytes * (i + 1) / n))
-    }))
-  }
-
-  /** The ranges of the dump at `path` read on its own: every core. */
-  private def alone(spark: SparkSession, entity: String, path: String): Seq[DumpRange] =
-    plan(spark, Seq(entity -> Seq(path))).head.head
-
-  /** Splittable re-stage (SURVEY §7.4): one pass through the
-    * non-splittable gz XML dump, out as `partitions`-way parquet of
-    * the clean, first-wins-deduped raw rows.
-    *
-    * Every pass over a gz dump pays the inflate and the XML parse
-    * again. Paying the parse exactly once and
-    * re-staging to parquet makes every later pass splittable (one task
-    * per row-group split), column-pruned, and ~an order of magnitude
-    * cheaper to decode.
-    * This is the first thing a 100 TB load should do with its input.
-    * Returns the staged path, `outDir/<entity>`.
-    */
-  def restage(spark: SparkSession, path: String, outDir: String,
-      partitions: Int = 0): String = {
-    val entity = detectEntity(path)
-    val n = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism
-    val staged = s"$outDir/$entity"
-    // the dump is read through the load's own first-wins ([[read]]),
-    // once, so every staged read afterwards is pure map-side work. The
-    // staged files keep no order column: each staged dump is deduped
-    // already, so cross-dump precedence must go through [[unionDumps]].
-    // The one shuffle lays the staged files out n ways by id.
-    val g = read(spark, entity, Seq(alone(spark, entity, path)))
-    try g.raw.repartition(n, col(entityMeta(entity)._3)).write.mode("overwrite").parquet(staged)
-    finally g.release()
-    staged
+    })
   }
 
   /** O2+O20: dispatch-and-load a set of dump files (the reference's
@@ -446,72 +393,29 @@ object DiscogsXml {
     *
     * NOTE: the union is a plain UNION ALL — dedup is per FILE, so an id
     * present in two dumps keeps both rows, as two monthly snapshots of
-    * the same record. Cross-dump first-wins semantics are a policy
-    * choice, not a default: route the result through [[unionDumps]],
-    * or pass a directory holding all files of one logical dump to
-    * [[readGroup]], where
-    * (file, document-order) first-wins applies across its files. A
-    * group's cut stays registered with [[CacheScope]] until
-    * [[CacheScope.releaseAll]].
+    * the same record. A group's cut stays registered with [[CacheScope]]
+    * until [[CacheScope.releaseAll]].
     */
   def loadAll(spark: SparkSession, paths: Seq[String]): Map[String, DataFrame] =
-    readGroups(spark, groupByEntity(paths)).flatMap(g => tracked(g()).tables).toMap
+    readGroups(spark, paths).flatMap { open =>
+      val g = open()
+      g.cut.foreach(CacheScope.trackRddsOf)
+      g.tables
+    }.toMap
 
-  /** Dump files grouped by [[detectEntity]], groups and files in order
-    * of first appearance. */
-  def groupByEntity(paths: Seq[String]): Seq[(String, Seq[String])] = {
+  /** The dump files `paths` grouped by [[detectEntity]] (groups and
+    * files in order of first appearance), every file's ranges cut for
+    * one load of all of them: each file gets its share of the cores by
+    * size ([[rangeCount]]). Each group is its files parsed directly,
+    * each first-wins-deduped on its own, the raw rows unioned
+    * ([[read]]). A group's frames are built when its function is
+    * called, so a caller that loads the groups side by side also plans
+    * them side by side; a group with a file read in several ranges is
+    * cut then, and the caller frees the cut with [[DumpGroup.release]]. */
+  def readGroups(spark: SparkSession, paths: Seq[String]): Seq[() => DumpGroup] = {
     val tagged = paths.map(p => detectEntity(p) -> p)
-    tagged.map(_._1).distinct.map(e => e -> tagged.collect { case (`e`, p) => p })
-  }
-
-  /** One entity's dumps, parsed directly: each path first-wins-deduped
-    * on its own, the raw rows unioned, the entity's tables derived. A
-    * path may be a directory, read as one logical dump (first wins in
-    * (file path, document order) across its files). Its cut, if it has
-    * one, stays registered with [[CacheScope]] until
-    * [[CacheScope.releaseAll]] or [[DumpGroup.release]]. */
-  def readGroup(spark: SparkSession, entity: String, paths: Seq[String]): DumpGroup =
-    tracked(readGroups(spark, Seq(entity -> paths)).head())
-
-  private def tracked(g: DumpGroup): DumpGroup = {
-    g.cut.foreach(CacheScope.trackRddsOf)
-    g
-  }
-
-  /** [[readGroup]] for each of `groups` (entity, paths), with every
-    * dump file's ranges cut for one load of all of them: each file gets
-    * its share of the cores by size ([[rangeCount]]). A group's frames
-    * are built when its function is called, so a caller that loads the
-    * groups side by side also plans them side by side; a group with a
-    * path read in several ranges is cut then, and the caller frees the
-    * cut with [[DumpGroup.release]]. */
-  def readGroups(spark: SparkSession, groups: Seq[(String, Seq[String])])
-      : Seq[() => DumpGroup] = {
-    groups.foreach { case (e, _) => require(entityMeta.contains(e), s"unknown entity $e") }
-    groups.zip(plan(spark, groups)).map { case ((e, _), ranges) => () => read(spark, e, ranges) }
-  }
-
-  /** [[readGroup]] over [[restage]]d paths of one entity (each
-    * `.../[entity]`): shuffle-free projections over a splittable,
-    * column-pruned parquet scan — the dedup ran at stage time. */
-  def readStagedGroup(spark: SparkSession, entity: String,
-      stagedPaths: Seq[String]): DumpGroup = {
-    require(entityMeta.contains(entity), s"unknown entity $entity")
-    val foreign = stagedPaths.filterNot(new java.io.File(_).getName == entity)
-    require(foreign.isEmpty,
-      s"not re-staged $entity directories: ${foreign.mkString(", ")}")
-    DumpGroup(entity, stagedPaths.map(spark.read.parquet(_)).reduce(_.unionByName(_)))
-  }
-
-  /** Cross-dump first-wins on `id` (SURVEY §2.3-8, monthly-dump set
-    * ops): every row of `a`, plus the rows of `b` whose id `a` lacks.
-    * [[loadAll]] and [[readStagedGroup]] union dumps plainly; this is
-    * the policy for two separately deduped (e.g. [[restage]]d) dumps
-    * of one table. */
-  def unionDumps(a: DataFrame, b: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("id")).orderBy(col("__src"))
-    a.withColumn("__src", lit(0)).unionByName(b.withColumn("__src", lit(1)))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__src", "__rn")
+    val entities = tagged.map(_._1).distinct
+    val files = entities.map(e => tagged.collect { case (`e`, p) => p })
+    entities.zip(plan(spark, files)).map { case (e, ranges) => () => read(spark, e, ranges) }
   }
 }

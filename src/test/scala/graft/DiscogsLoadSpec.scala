@@ -60,25 +60,22 @@ class DiscogsLoadSpec extends AnyFunSuite {
       val files = fixtures :+ secondReleases(dir)
       val want = DiscogsXml.loadAll(spark, files)
       assert(want.keySet == tableNames.toSet)
-      // direct parse, then the same dumps restaged first
-      Seq(None, Some(new File(dir, "staged").getPath)).foreach { restage =>
-        val out = new File(dir, s"out-${restage.isDefined}").getPath
-        val printed = runCounted(DiscogsLoad.Opts(files = files, out = out, restageDir = restage))
-        tableNames.foreach { t =>
-          val got = spark.read.parquet(s"$out/$t")
-          val exp = want(t).select(got.columns.map(org.apache.spark.sql.functions.col): _*)
-          assert(got.exceptAll(exp).isEmpty, s"$t ($restage): rows loadAll does not have")
-          assert(exp.exceptAll(got).isEmpty, s"$t ($restage): loadAll rows missing")
-          assert(printed.get(t).contains(got.count()), s"$t ($restage): printed ${printed.get(t)}")
-        }
-        val release = spark.read.parquet(s"$out/release")
-        assert(release.filter("id = 500").collect().map(_.getAs[String]("title")).toSeq ==
-          Seq("First 500"))
-        assert(release.filter("id = 8").count() == 2)
-        val labels = spark.read.parquet(s"$out/release_label")
-        assert(labels.filter("label = 'Dropped'").isEmpty)
-        assert(labels.filter("release_id = 8").count() == 2)
+      val out = new File(dir, "out").getPath
+      val printed = runCounted(DiscogsLoad.Opts(files = files, out = out))
+      tableNames.foreach { t =>
+        val got = spark.read.parquet(s"$out/$t")
+        val exp = want(t).select(got.columns.map(org.apache.spark.sql.functions.col): _*)
+        assert(got.exceptAll(exp).isEmpty, s"$t: rows loadAll does not have")
+        assert(exp.exceptAll(got).isEmpty, s"$t: loadAll rows missing")
+        assert(printed.get(t).contains(got.count()), s"$t: printed ${printed.get(t)}")
       }
+      val release = spark.read.parquet(s"$out/release")
+      assert(release.filter("id = 500").collect().map(_.getAs[String]("title")).toSeq ==
+        Seq("First 500"))
+      assert(release.filter("id = 8").count() == 2)
+      val labels = spark.read.parquet(s"$out/release_label")
+      assert(labels.filter("label = 'Dropped'").isEmpty)
+      assert(labels.filter("release_id = 8").count() == 2)
     }
   }
 
@@ -134,25 +131,22 @@ class DiscogsLoadSpec extends AnyFunSuite {
       assert(DiscogsXml.rangeCount(files.head, new File(files.head).length,
         spark.sparkContext.defaultParallelism) > 1)
       val want = XmlReferee.tables(spark, files.head)
-      Seq(None, Some(new File(dir, "staged").getPath)).foreach { restage =>
-        val out = new File(dir, s"out-${restage.isDefined}").getPath
-        val printed = runCounted(DiscogsLoad.Opts(files = files, out = out, restageDir = restage))
-        Seq("release", "release_label", "release_video").foreach { t =>
-          val got = spark.read.parquet(s"$out/$t")
-          val exp = want(t).select(got.columns.map(org.apache.spark.sql.functions.col): _*)
-          assert(got.exceptAll(exp).isEmpty, s"$t ($restage): rows the one-task parse does not have")
-          assert(exp.exceptAll(got).isEmpty, s"$t ($restage): one-task parse rows missing")
-          assert(printed.get(t).contains(got.count()), s"$t ($restage): printed ${printed.get(t)}")
-        }
-        val release = spark.read.parquet(s"$out/release")
-        assert(release.count() == 4000)
-        assert(release.filter("id = 7").collect().map(_.getAs[String]("title")).toSeq
-          .map(_.startsWith("Release 7 ")) == Seq(true))
-        assert(spark.read.parquet(s"$out/release_label").filter("label = 'Late'").isEmpty)
-        assert(new File(out).list().toSet == Set("release", "release_label", "release_video"),
-          s"left under --out: ${new File(out).list().mkString(", ")}")
-        restage.foreach(rd => assert(new File(rd).list().toSet == Set("d0"), new File(rd).list().mkString(", ")))
+      val out = new File(dir, "out").getPath
+      val printed = runCounted(DiscogsLoad.Opts(files = files, out = out))
+      Seq("release", "release_label", "release_video").foreach { t =>
+        val got = spark.read.parquet(s"$out/$t")
+        val exp = want(t).select(got.columns.map(org.apache.spark.sql.functions.col): _*)
+        assert(got.exceptAll(exp).isEmpty, s"$t: rows the one-task parse does not have")
+        assert(exp.exceptAll(got).isEmpty, s"$t: one-task parse rows missing")
+        assert(printed.get(t).contains(got.count()), s"$t: printed ${printed.get(t)}")
       }
+      val release = spark.read.parquet(s"$out/release")
+      assert(release.count() == 4000)
+      assert(release.filter("id = 7").collect().map(_.getAs[String]("title")).toSeq
+        .map(_.startsWith("Release 7 ")) == Seq(true))
+      assert(spark.read.parquet(s"$out/release_label").filter("label = 'Late'").isEmpty)
+      assert(new File(out).list().toSet == Set("release", "release_label", "release_video"),
+        s"left under --out: ${new File(out).list().mkString(", ")}")
     }
   }
 
@@ -170,43 +164,18 @@ class DiscogsLoadSpec extends AnyFunSuite {
       assert(ranges("1600")(1) == ranges("1600").head + 1 && ranges("1600").head > 0, ranges)
       val want = XmlReferee.tables(spark, f)
       val tables = Seq("release", "release_label", "release_video")
-      Seq(None, Some(new File(dir, "staged").getPath)).foreach { restage =>
-        val out = new File(dir, s"out-${restage.isDefined}").getPath
-        runCounted(DiscogsLoad.Opts(files = Seq(f), out = out, restageDir = restage))
-        val got = tables.map(t => t -> spark.read.parquet(s"$out/$t")).toMap
-        tables.foreach(t => assertSameRows(got(t), want(t), s"$t ($restage)"))
-        assert(got("release").filter("id in (2, 3, 1600)").orderBy("id").collect()
-          .map(_.getAs[String]("title").split(' ').take(2).mkString(" ")).toSeq ==
-          Seq("Good two", "Release 3", "Release 1600"))
-        Seq("release_label" -> "label", "release_video" -> "title").foreach { case (t, c) =>
-          val byRelease = got(t).filter("release_id in (2, 3, 1600)").collect()
-            .map(r => r.getAs[Int]("release_id") -> r.getAs[String](c)).toSet
-          assert(byRelease == Set(2 -> "Two", 3 -> "L3", 1600 -> "L1600"), s"$t: $byRelease")
-        }
+      val out = new File(dir, "out").getPath
+      runCounted(DiscogsLoad.Opts(files = Seq(f), out = out))
+      val got = tables.map(t => t -> spark.read.parquet(s"$out/$t")).toMap
+      tables.foreach(t => assertSameRows(got(t), want(t), t))
+      assert(got("release").filter("id in (2, 3, 1600)").orderBy("id").collect()
+        .map(_.getAs[String]("title").split(' ').take(2).mkString(" ")).toSeq ==
+        Seq("Good two", "Release 3", "Release 1600"))
+      Seq("release_label" -> "label", "release_video" -> "title").foreach { case (t, c) =>
+        val byRelease = got(t).filter("release_id in (2, 3, 1600)").collect()
+          .map(r => r.getAs[Int]("release_id") -> r.getAs[String](c)).toSet
+        assert(byRelease == Set(2 -> "Two", 3 -> "L3", 1600 -> "L1600"), s"$t: $byRelease")
       }
-
-      // a directory is one dump: its second file repeats an id of the first
-      val parts = new File(dir, "parts")
-      parts.mkdirs()
-      def release(id: Int, tag: String) =
-        s"""<release id="$id" status="Accepted"><title>$tag</title>""" +
-          s"""<labels><label name="$tag" catno="C$id" id="$id"/></labels></release>"""
-      val first = Seq(release(1, "One"), release(2, "Two"))
-      val second = Seq(release(2, "Two again"), release(4, "Four"))
-      def write(file: File, records: Seq[String]): Unit =
-        Files.writeString(file.toPath, records.mkString("<releases>\n", "\n", "\n</releases>\n"))
-      write(new File(parts, "a.xml"), first)
-      write(new File(parts, "b.xml"), second)
-      val whole = new File(dir, "whole.xml")
-      write(whole, first ++ second)
-      val g = DiscogsXml.readGroup(spark, "releases", Seq(parts.getPath))
-      try {
-        val byFile = g.tables.toMap
-        XmlReferee.tables(spark, whole.getPath).foreach { case (t, w) =>
-          assertSameRows(byFile(t), w, s"directory $t")
-        }
-        assert(byFile("release_label").filter("label = 'Two again'").isEmpty)
-      } finally g.release()
     }
   }
 
@@ -334,6 +303,34 @@ class DiscogsLoadSpec extends AnyFunSuite {
       assertOneFileEach(out, tableNames)
       val exchanges = plans.flatMap(nodes).collect { case e: ShuffleExchangeExec => e }
       assert(exchanges.isEmpty, s"${exchanges.size} shuffles:\n${exchanges.mkString("\n")}")
+    }
+  }
+
+  test("parseArgs: every flag lands in Opts, files in order; an unknown flag is refused") {
+    val o = DiscogsLoad.parseArgs(List("b.xml.gz", "--out", "o", "--batch-size", "7",
+      "--db-url", "jdbc:x", "--db-user", "u", "--db-password", "p", "a.xml",
+      "--create-indexes", "c.xml"))
+    assert(o == DiscogsLoad.Opts(files = Seq("b.xml.gz", "a.xml", "c.xml"), out = "o",
+      batchSize = 7, dbUrl = Some("jdbc:x"), dbUser = "u", dbPassword = "p",
+      createIndexes = true))
+    // --create-indexes takes no value: the word after it is a file
+    assert(DiscogsLoad.parseArgs(List("--create-indexes", "a.xml")) ==
+      DiscogsLoad.Opts(files = Seq("a.xml"), createIndexes = true))
+    Seq(List("--restage", "staged", "a.xml"), List("a.xml", "--bogus")).foreach { args =>
+      val e = intercept[IllegalArgumentException](DiscogsLoad.parseArgs(args))
+      assert(e.getMessage == s"unknown flag ${args.find(_.startsWith("--")).get}", e.getMessage)
+    }
+  }
+
+  test("a missing path or a directory is refused by name and nothing lands") {
+    withTempDir("graft-load-paths") { dir =>
+      val out = new File(dir, "out").getPath
+      Seq(new File(dir, "nope.xml.gz").getPath, dir.getPath).foreach { p =>
+        val e = intercept[IllegalArgumentException](
+          DiscogsLoad.run(DiscogsLoad.Opts(files = fixtures :+ p, out = out), spark))
+        assert(e.getMessage.contains(p), e.getMessage)
+      }
+      assert(!new File(out).exists(), "a table landed")
     }
   }
 }

@@ -1,46 +1,12 @@
 package graft
 
-import graft.sources.DiscogsXml
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The discogs star's query surface: cross-dump first-wins on the
-  * fixture-loaded tables, and the dq roster entries over the grown
-  * star. */
-class DiscogsQueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** The discogs star's query surface: the dq roster entries over the
+  * grown star. */
+class DiscogsQueriesSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
-  private def res(name: String) = getClass.getResource(s"/$name").getPath
-
-  @volatile private var loaded = false
-  private lazy val t: Map[String, DataFrame] = {
-    val m = DiscogsXml.loadAll(spark, Seq(
-      res("releases.xml.gz"), res("artists.xml.gz"),
-      res("labels.xml.gz"), res("masters.xml.gz")))
-    loaded = true
-    m.map { case (k, v) => k -> v.cache() }
-  }
-
-  // the tables are cached in the shared test session: left there, any
-  // later suite's plan over the same fixture dumps reads these caches
-  // instead of its own scans
-  override def afterAll(): Unit =
-    try if (loaded) t.values.foreach(_.unpersist()) finally super.afterAll()
-
-  test("union of two dumps keeps the first dump's rows for shared ids") {
-    // a second dump of the same ids with changed titles: every id keeps
-    // the row of the dump given first, whichever that is
-    val first = t("release")
-    val second = first.withColumn("title", concat(col("title"), lit(" (reissue)")))
-    def idTitles(df: DataFrame) =
-      df.select(col("id"), col("title")).collect().map(r => r.getInt(0) -> r.getString(1)).toSet
-    val u = DiscogsXml.unionDumps(first, second)
-    assert(u.count() == first.count())
-    assert(idTitles(u) == idTitles(first))
-    assert(idTitles(DiscogsXml.unionDumps(second, first)) == idTitles(second))
-  }
 
   test("dq staging: grown star is FK-consistent, clone-exact, and " +
       "the dq entries return real rows") {

@@ -323,56 +323,6 @@ class DiscogsXmlSpec extends AnyFunSuite {
     }
   }
 
-  test("multi-file first-wins follows file order, not partition size") {
-    // same id in two files; b.xml is much larger, so Spark's
-    // size-descending bin-packing would schedule it first — the
-    // survivor must still come from a.xml (file paths ascending)
-    withTempDir("multifile") { dir =>
-      def release(id: Int, title: String) =
-        s"""  <release id="$id" status="Accepted"><title>$title</title></release>"""
-      Files.writeString(new File(dir, "a.xml").toPath,
-        s"""<releases>\n${release(1, "FromA")}\n</releases>\n""")
-      val padding = (100 to 160).map(i => release(i, s"Pad $i")).mkString("\n")
-      Files.writeString(new File(dir, "b.xml").toPath,
-        s"""<releases>\n${release(1, "FromB")}\n$padding\n</releases>\n""")
-      // the directory is one logical dump: first-wins across its files
-      val rel = DiscogsXml.readGroup(spark, "releases", Seq(dir.toString))
-        .tables.toMap.apply("release")
-      assert(rel.filter("id = 1").first().getString(2) == "FromA")
-      assert(rel.count() == 62) // 1 survivor + 61 padding
-    }
-  }
-
-  test("restage preserves rows, schema, and first-wins document order") {
-    // duplicate-id fixture: the survivor must still be the FIRST
-    // occurrence after the re-stage's repartition scrambles physical
-    // order (the reader's order key carries document order through)
-    val xml =
-      """<?xml version="1.0" encoding="UTF-8"?>
-        |<releases>
-        |  <release id="7" status="Accepted"><title>First</title></release>
-        |  <release id="8" status="Accepted"><title>Other</title></release>
-        |  <release id="7" status="Accepted"><title>Duplicate</title></release>
-        |</releases>
-        |""".stripMargin
-    def staged(entity: String, path: String) =
-      DiscogsXml.readStagedGroup(spark, entity, Seq(path)).tables.toMap
-    withXml("restage-releases.xml", xml) { f =>
-      withTempDir("restage-out") { out =>
-        val stagedPath = DiscogsXml.restage(spark, f, out.toString, partitions = 3)
-        val direct = load(f)("release")
-        val viaStage = staged("releases", stagedPath)("release")
-        assert(viaStage.schema == direct.schema)
-        assert(viaStage.collect().toSet == direct.collect().toSet)
-        assert(viaStage.filter("id = 7").first().getString(2) == "First")
-        // gz fixture round-trips through restage for the other entities too
-        val aStaged = DiscogsXml.restage(spark, res("artists.xml.gz"), out.toString)
-        assert(staged("artists", aStaged)("artist").collect().toSet ==
-          load(res("artists.xml.gz"))("artist").collect().toSet)
-      }
-    }
-  }
-
   test("loadAll dispatches all four entities") {
     val all = DiscogsXml.loadAll(spark, fixtures)
     assert(all.keySet == Set("release", "release_label", "release_video",

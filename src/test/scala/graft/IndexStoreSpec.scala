@@ -19,9 +19,14 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
     * ones serve or rebuild what it saved. */
   private lazy val specRoot = suiteTempDir("graft_index_spec")
 
+  /** Where the managed table `name` lives: under the session's
+    * warehouse. */
+  private def warehouseDir(name: String): java.io.File = new java.io.File(
+    new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath, name)
+
   private def dropTable(name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = new java.io.File(s"spark-warehouse/$name")
+    val loc = warehouseDir(name)
     if (loc.exists())
       org.apache.commons.io.FileUtils.deleteDirectory(loc)
   }
@@ -83,8 +88,7 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
     val g = spark.range(8).selectExpr("id AS src", "0L AS rk",
       "id + 1 AS dst", "1L AS d2")
     IndexStore.saveKnnGraph(g, "knn_guard_spec", buckets = 2)
-    val path =
-      new java.io.File("spark-warehouse/knn_guard_spec").getAbsolutePath
+    val path = warehouseDir("knn_guard_spec").getAbsolutePath
     // re-registering over the MANAGED table saveKnnGraph created would
     // DROP-delete the very files being registered — must refuse
     val ex = intercept[IllegalArgumentException] {
@@ -144,7 +148,7 @@ class IndexStoreSpec extends AnyFunSuite with SuiteTempDir {
     val saved = rowSet(spark.table("knn_idx_spec"))
     // a fresh session only has the files — re-attaching the bucket
     // spec must restore the exchange-free plan AND the same rows
-    val path = new java.io.File("spark-warehouse/knn_idx_spec").getAbsolutePath
+    val path = warehouseDir("knn_idx_spec").getAbsolutePath
     IndexStore.registerKnnGraph(spark, "knn_idx_reg", path, buckets = 4)
     val agg2 = spark.table("knn_idx_reg").groupBy(col("src"))
       .agg(count(lit(1)).as("deg"))

@@ -17,7 +17,7 @@ class JdbcSinkSpec extends AnyFunSuite {
 
   lazy val spark = TestSpark.spark
   private val cfg = Sinks.JdbcConfig(
-    "jdbc:derby:memory:graftsink;create=true", "", "", batchSize = 100)
+    TestSpark.derbyUrl("graftsink"), "", "", batchSize = 100)
 
   private def query[A](sql: String)(f: java.sql.ResultSet => A): Vector[A] = {
     val conn = DriverManager.getConnection(cfg.url)

@@ -149,7 +149,7 @@ class PgBinaryCopySpec extends AnyFunSuite {
     // connection answers false. What must hold everywhere: a
     // non-postgres connection never routes into COPY.
     val derby = java.sql.DriverManager
-      .getConnection("jdbc:derby:memory:pgcopyprobe;create=true")
+      .getConnection(TestSpark.derbyUrl("pgcopyprobe"))
     try assert(!PgBinaryCopy.isPostgres(derby)) finally derby.close()
     assert(PgBinaryCopy.isPostgres(FakePg.connection()))
   }

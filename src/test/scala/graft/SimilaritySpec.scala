@@ -1162,34 +1162,24 @@ class SimilaritySpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.embedding.dim")
   }
 
-  test("external query ids do not lose colliding corpus vectors") {
+  test("cell-probe search for a corpus vector excludes the query's own id") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
     val (cents, asg, entries, graph) =
       operators.Similarity.servingIndex(e, operators.Similarity.IvfNCells)
     val asgP = CacheScope.persisted(asg)
-    // an EXTERNAL query that clones corpus vector v, under an id that
-    // numerically collides with v itself (both namespaces are dense
-    // longs from 0, so collisions are the norm, not the exception):
-    // under the in-corpus contract v is 'self' and gets erased — the
-    // exact match vanishes from the top-K; the external contract must
-    // keep it at rank 1, d2 = 0
+    // a query that clones corpus vector v under v's own id: v is 'self'
+    // (it would win at d2 = 0) and must leave its top-K
     val v = asgP.orderBy(col("vec_id")).head()
     val vid = v.getLong(0)
     val vmv = v.getAs[scala.collection.Seq[Long]]("mv").toList
     val q = Seq((vid, vmv)).toDF("q_id", "q_mv")
-    val ext = operators.Similarity.cellProbeSearchFor(
-      q, cents, asgP, entries, graph, selfIsInCorpus = false)
-      .collect()
     val inc = operators.Similarity.cellProbeSearchFor(
-      q, cents, asgP, entries, graph, selfIsInCorpus = true)
-      .collect()
+      q, cents, asgP, entries, graph).collect()
     CacheScope.releaseAll()
-    assert(ext.exists(r => r.getLong(2) == vid && r.getLong(3) == 0L &&
-        r.getInt(1) == 1),
-      "external query lost its colliding exact-match corpus vector")
+    assert(inc.nonEmpty, "the query found no neighbour")
     assert(!inc.exists(_.getLong(2) == vid),
-      "in-corpus contract did not exclude the query's own id")
+      "the query's own id was not excluded")
   }
 }
