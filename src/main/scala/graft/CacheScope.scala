@@ -99,33 +99,4 @@ object CacheScope {
       f = tracked.poll()
     }
   }
-
-  /** Snapshot of the registrations existing at [[mark]] time. */
-  final class Mark private[CacheScope] (
-      private[CacheScope] val seen: java.util.IdentityHashMap[() => Unit, Unit])
-
-  /** Begin a release scope: pair with [[releaseSince]] to unpersist
-    * only the frames registered AFTER this call. For utilities that
-    * persist internally but may run inside a larger pipeline — a
-    * global [[releaseAll]] there would silently evict the caller's
-    * still-needed intermediates. */
-  def mark(): Mark = {
-    val m = new java.util.IdentityHashMap[() => Unit, Unit]()
-    tracked.forEach(f => m.put(f, ()))
-    new Mark(m)
-  }
-
-  /** Release every registration added after `m` was taken; earlier
-    * registrations stay cached and stay tracked. Idempotent; never
-    * throws. */
-  def releaseSince(m: Mark): Unit = {
-    val it = tracked.iterator()
-    while (it.hasNext) {
-      val f = it.next()
-      if (!m.seen.containsKey(f)) {
-        it.remove()
-        try f() catch { case _: Throwable => () }
-      }
-    }
-  }
 }

@@ -740,9 +740,7 @@ object Dedup {
       // clearCache() only evicts SQL InMemoryRelations, not these RDD
       // blocks, and waiting on ContextCleaner GC lets up to 25 rounds
       // of label tables pile up in a long session
-      labels.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-      }.foreach { r => r.unpersist(false); () }
+      graft.CacheScope.release(labels)
       labels = next.select(col("id"), col("cluster"))
       rounds += 1
     }

@@ -26,54 +26,8 @@ object Multimodal {
 
   type Q = (SparkSession, String) => DataFrame
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("media", BinaryType),
-    StructField("format", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_frames", IntegerType)))
-
-  /** The REAL media ingestion path: `binaryFile` datasource over a
-    * directory tree (what you point at an object-store prefix of
-    * images/audio). Emits the [[mediaSchema]] shape with metadata
-    * parsed from the file name (`<doc_id>_<width>x<height>x<frames>.
-    * <format>`; production metadata would come from a sidecar or
-    * header sniff in the codec). `pathGlobFilter` prunes non-media
-    * files at the LISTING, and plans that touch only metadata never
-    * read payload bytes — binaryFile exposes length/path as ordinary
-    * columns, so column pruning skips `content` exactly like a
-    * parquet binary column.
-    */
-  def readMediaDir(spark: SparkSession, dir: String): DataFrame = {
-    val name = regexp_extract(col("path"), "([^/]+)$", 1)
-    spark.read.format("binaryFile")
-      // globs are case-sensitive and can't express case folding —
-      // enumerate the realistic spellings (incl. .jpg) or real files
-      // silently vanish at LISTING time with no error to notice
-      .option("pathGlobFilter",
-        "*.{jpeg,jpg,png,webm,JPEG,JPG,PNG,WEBM,Jpeg,Jpg,Png,Webm}")
-      // object-store media lands under date/shard prefixes; without
-      // this, binaryFile only lists top-level files (plus key=value
-      // partition dirs) and nested media silently disappears
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-      .select(
-        regexp_extract(name, "^(\\d+)_", 1).cast(LongType).as("doc_id"),
-        col("content").as("media"),
-        // normalized: 'jpg'→'jpeg' alias, lowercased — downstream
-        // format dispatch keys on the canonical spelling
-        when(lower(regexp_extract(name, "\\.([A-Za-z0-9]+)$", 1)) === "jpg",
-          lit("jpeg"))
-          .otherwise(lower(regexp_extract(name, "\\.([A-Za-z0-9]+)$", 1)))
-          .as("format"),
-        regexp_extract(name, "_(\\d+)x", 1).cast(IntegerType).as("width"),
-        regexp_extract(name, "x(\\d+)x", 1).cast(IntegerType).as("height"),
-        regexp_extract(name, "x(\\d+)\\.", 1).cast(IntegerType).as("n_frames"))
-  }
-
   /** Deterministic fake media corpus derived from the documents table
-    * (stand-in for [[readMediaDir]] over an object store): bytes =
+    * (stand-in for media read from an object store): bytes =
     * repeated md5 of the text, dimensions from doc_id.
     */
   def synthesizeMedia(spark: SparkSession, dir: String): DataFrame = {

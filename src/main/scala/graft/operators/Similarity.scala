@@ -48,9 +48,15 @@ object Similarity {
     */
   def s01_ann_bruteforce: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-    val q = queriesOf(e)
+    cosineTopK(e.join(broadcast(queriesOf(e)), col("vec_id") =!= col("q_id")))
+  }
+
+  /** The cosine top-K tail of s01, s02 and s03: rank each query's
+    * (q_emb, embedding) candidates by cosine rounded to 4 places,
+    * ties to the smaller vec_id, and keep the best [[K]]. */
+  private def cosineTopK(cand: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    e.join(broadcast(q), col("vec_id") =!= col("q_id"))
+    cand
       .withColumn("cos", round(cosine_similarity(col("q_emb"), col("embedding")), 4))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= K)
@@ -248,120 +254,43 @@ object Similarity {
       .join(broadcast(probes), Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id")).distinct()
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    cand
+    cosineTopK(cand
       .join(e.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("cos", round(cosine_similarity(col("q_emb"), col("embedding")), 4))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("vec_id"), col("cos"), col("rk"))
-      .orderBy(col("q_id"), col("rk"), col("vec_id"))
+      .join(broadcast(q), Seq("q_id")))
   }
 
-  /** IVF-style ANN: partition the corpus into cells around k-means
-    * centroids, assign each vector to its nearest centroid map-side
-    * (centroids broadcast), and have each query probe only its
-    * `nprobe` nearest cells.
+  /** IVF-style ANN over [[s19_ivf_exact]]'s index: the corpus is
+    * partitioned into the cells of [[ivfCentroids]] (exact-integer
+    * k-means, the one trainer), each vector sits in its nearest cell
+    * and each query probes its [[IvfNProbe]] nearest cells — the same
+    * cells and probes s19 uses. Only the ranking differs: s03 ranks
+    * the probed candidates by true float cosine (the recall@K number
+    * [[s05_ann_recall]] gates), s19 by exact milli-L2.
     *
-    * The centroids are trained with [[IvfKmeansIters]] Lloyd
-    * iterations seeded from the 16 lowest-id vectors (deterministic).
-    * Per-dimension means accumulate in DECIMAL, so the centroids are
-    * partition-order-independent — the cell layout is reproducible
-    * bit-for-bit, which the s05 recall gate depends on. Each
-    * iteration's 16-row centroid table is eagerly checkpointed
-    * (CacheScope-tracked) so the final plan doesn't re-run the
-    * training lineage once per consumer.
+    * The embeddings must be at most [[S19BlockDim]] (64) wide, the
+    * one-block limit of [[ivfCentroids]]; a wider corpus fails loudly.
     *
-    * Scale shape: training touches the corpus `IvfKmeansIters` times
-    * map-only (broadcast centroids, tiny aggregate); the corpus is
-    * then written partitioned by cell so a query touches nprobe/
-    * ncells of the data — the standard billion-vector layout.
-    * No oracle (cell layout is engine-specific); rows-only check +
-    * recall floor in SimilaritySpec.
+    * Scale shape: s19's — training touches the corpus once per
+    * trainer round, assignment and probe ranking are map-only against
+    * the broadcast centroid row, and a query reads nprobe/ncells of
+    * the corpus. No oracle (the cosine ranking is float); rows-only
+    * check + recall floor in SimilaritySpec.
     */
   def s03_ann_ivf: Q = (s, d) =>
-    annIvf(Tables.embeddings(s, d), IvfNCells, IvfNProbe, IvfKmeansIters)
+    cosineTopK(ivfProbed(Tables.embeddings(s, d)))
 
-  private[graft] def annIvf(e: DataFrame, nCells: Int, nProbe: Int,
-      kmeansIters: Int): DataFrame = {
-    // the ≤nCells-row centroid table nested into ONE broadcastable row
-    // (cell-sorted (cell, c_emb) structs) — the float-path twin of
-    // [[centsNested]]: assignment and probe ranking become MAP-ONLY
-    // expressions over the corpus/query frames (guide §2.4) instead of
-    // a ×ncells broadcast fan collapsed by a per-row window exchange
-    // (the old shape paid that window once per Lloyd round, once for
-    // the final assignment and once for the probe ranking).
-    def nested(centroids: DataFrame): DataFrame =
-      centroids.groupBy().agg(
-        sort_array(collect_list(struct(col("cell"), col("c_emb")))).as("carr"))
-    // row-local ranking: ascending (−cos, cell) ≡ the old
-    // row_number().over(orderBy(cos desc, cell)) tie order exactly —
-    // cosine_similarity never yields NaN (0/0 guards to 0.0) and Spark
-    // orders −0.0 = 0.0, so negation is a faithful order reversal
-    def ranks(emb: Column): Column =
-      sort_array(transform(col("carr"), el =>
-        struct((-cosine_similarity(emb, el.getField("c_emb"))).as("negcos"),
-          el.getField("cell").as("cell"))))
-    // top-1 without the sort; NULL on an empty centroid array mirrors
-    // the old inner-fan's no-rows (callers filter it)
-    def best(emb: Column): Column =
-      array_min(transform(col("carr"), el =>
-        struct((-cosine_similarity(emb, el.getField("c_emb"))).as("negcos"),
-          el.getField("cell").as("cell")))).getField("cell")
-    var centroids = e.orderBy(col("vec_id")).limit(nCells)
-      .select(col("vec_id").as("cell"), col("embedding").as("c_emb"))
-    for (_ <- 1 to kmeansIters) {
-      val assigned = e.crossJoin(broadcast(nested(centroids)))
-        .select(col("embedding"), best(col("embedding")).as("cell"))
-        .filter(col("cell").isNotNull)
-      // elementwise mean per cell: posexplode → exact decimal sums →
-      // rebuild the array in dimension order (struct sort is
-      // field-lexicographic on (pos, m))
-      centroids = graft.CacheScope.checkpointed(
-        assigned
-          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "x")))
-          .groupBy(col("cell"), col("pos"))
-          .agg((sum(col("x").cast(DecimalType(28, 12))) / count(lit(1)))
-            .cast(DoubleType).as("m"))
-          .groupBy(col("cell"))
-          .agg(transform(sort_array(collect_list(struct(col("pos"), col("m")))),
-            el => el.getField("m")).as("c_emb")))
-    }
-    val corpus = e.crossJoin(broadcast(nested(centroids)))
-      .select(col("vec_id"), col("embedding"),
-        best(col("embedding")).as("cell"))
-      .filter(col("cell").isNotNull)
-    val q = queriesOf(e).crossJoin(broadcast(nested(centroids)))
-      .select(col("q_id"), col("q_emb"),
-        explode(slice(ranks(col("q_emb")), 1, nProbe)).as("pc"))
-      .select(col("q_id"), col("q_emb"),
-        col("pc").getField("cell").as("cell"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    corpus.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosine_similarity(col("q_emb"), col("embedding")), 4))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= K)
-      .select(col("q_id"), col("vec_id"), col("cos"), col("rk"))
-      .orderBy(col("q_id"), col("rk"), col("vec_id"))
-  }
-
-  /** [[s03_ann_ivf]] knobs, set by a grid sweep (round 7) over
-    * (ncells, nprobe, iters) ∈ {16,32}×{8,10,12}×{4,6}:
-    * recall@5 = 0.867 at sf0.001 / 0.905 at sf0.1 — the near-orthogonal
-    * synthetic geometry (top-1 cosine 0.13-0.48) is adversarial for
-    * coarse quantization, so hitting ≥0.8 costs probing nprobe/ncells
-    * = 5/8 of the cells; real clustered embeddings reach the same
-    * recall at 1/8-1/16. 32 cells needed probe 12 for 0.80 flat —
-    * probing a LARGER fraction of a finer index for less recall, so
-    * 16×10 wins. Lloyd iterations cost one map-only corpus pass each;
-    * production IVF trains on a sample, not the corpus. SimilaritySpec
-    * floors the measurement at 0.8 — the sweep values are
-    * deterministic (fixed seeds), so the gate is exact, not noisy. */
+  /** IVF knobs of [[s03_ann_ivf]] and [[s19_ivf_exact]], set by a
+    * grid sweep (round 7) over (ncells, nprobe) ∈ {16,32}×{8,10,12}:
+    * the near-orthogonal synthetic geometry (top-1 cosine 0.13-0.48)
+    * is adversarial for coarse quantization, so hitting ≥0.8 recall@5
+    * costs probing nprobe/ncells = 5/8 of the cells; real clustered
+    * embeddings reach the same recall at 1/8-1/16. 32 cells needed
+    * probe 12 for 0.80 flat — probing a LARGER fraction of a finer
+    * index for less recall, so 16×10 wins. SimilaritySpec floors the
+    * measured recall at 0.8 — the cells are deterministic, so the
+    * gate is exact, not noisy. */
   private[graft] val IvfNCells = 16
   private[graft] val IvfNProbe = 10
-  private[graft] val IvfKmeansIters = 4
 
   /** s19 — the EXACT-ARITHMETIC twin of [[s03_ann_ivf]], and the last
     * core that had no hash-checked variant (d16→d32, d17→d21, m05→m06
@@ -375,7 +304,7 @@ object Similarity {
     * Scoring is [[graft.functions.MilliL2]] — a codegen'd exact long
     * L2 over the milli vectors.
     *
-    * s03 keeps the float path (true cosine ranking, the recall@K
+    * s03 ranks the same probed cells by true cosine (the recall@K
     * number); s19 proves the pipeline's STRUCTURE against the oracle
     * at every SF, and a spec floors s19's own recall vs the milli
     * brute force.
@@ -453,12 +382,17 @@ object Similarity {
       .select(col("j"), col("c_mv"))
   }
 
-  private[graft] def ivfExact(e: DataFrame,
-      nCells: Int = IvfNCells, nProbe: Int = IvfNProbe): DataFrame = {
-    import graft.functions.VectorFunctions.milli_l2
+  /** The probed candidates of the IVF index shared by [[s03_ann_ivf]]
+    * and [[s19_ivf_exact]]: every (query, corpus vector) pair whose
+    * vector lies in one of the query's [[IvfNProbe]] nearest cells of
+    * [[ivfCentroids]], the query itself excluded. Each row carries the
+    * milli vectors (`q_mv`, `mv`) and the float ones (`q_emb`,
+    * `embedding`), so either ranking reads it; Catalyst prunes the
+    * pair the caller does not use. */
+  private def ivfProbed(e: DataFrame): DataFrame = {
     // trained centroids nested to ONE broadcast row (j-sorted array)
-    val cents = ivfCentroids(e, nCells)
-    val m = e.select(col("vec_id"),
+    val cents = ivfCentroids(e)
+    val m = e.select(col("vec_id"), col("embedding"),
       transform(col("embedding"),
         x => floor(x.cast(DoubleType) * 1000).cast(LongType)).as("mv"))
     // MAP-ONLY argmin / probe ranking against the broadcast centroid
@@ -470,18 +404,25 @@ object Similarity {
     val assigned = m.crossJoin(broadcast(centsNested(cents)))
     val corpus = assigned
       .select(col("vec_id"),
-        cellArgmin(col("mv")).getField("cell").as("cell"), col("mv"))
+        cellArgmin(col("mv")).getField("cell").as("cell"), col("mv"),
+        col("embedding"))
       .filter(col("cell").isNotNull)
     val probes = assigned
       .filter(col("vec_id") % 97 === 0 && col("vec_id") < QueryIdBound)
       .select(col("vec_id").as("q_id"), col("mv").as("q_mv"),
-        explode(slice(cellRanks(col("mv")), 1, nProbe)).as("pc"))
-      .select(col("q_id"), col("q_mv"),
+        col("embedding").as("q_emb"),
+        explode(slice(cellRanks(col("mv")), 1, IvfNProbe)).as("pc"))
+      .select(col("q_id"), col("q_mv"), col("q_emb"),
         col("pc").getField("cell").as("cell"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("dist"), col("vec_id"))
     corpus.join(broadcast(probes), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
+  }
+
+  private def ivfExact(e: DataFrame): DataFrame = {
+    import graft.functions.VectorFunctions.milli_l2
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("dist"), col("vec_id"))
+    ivfProbed(e)
       .withColumn("dist", milli_l2(col("q_mv"), col("mv")))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= K)
@@ -1909,8 +1850,7 @@ object Similarity {
 
   /** s09 — product-quantization codebook training (Jégou et al. 2011)
     * in EXACT integer arithmetic, so the k-means itself is
-    * oracle-bearing (the randomized-Lloyd caveat that keeps s03
-    * rows-only does not apply): vectors are quantized to milli-units,
+    * oracle-bearing: vectors are quantized to milli-units,
     * split into 4 sub-blocks of 16 dims, and each block learns k=4
     * centroids by 2 Lloyd rounds — distances are exact long
     * sums-of-squares, assignment ties break to the smaller code, and

@@ -107,8 +107,8 @@ object TextAnalysis {
     * OUTPUT IS CORPUS-SHAPED (one row per matching pair — a
     * duplicate-heavy 100 TB corpus emits billions), so this is NOT the
     * default query surface: [[t05_winnow_neardup]] serves the bounded
-    * per-doc summary; callers that need every pair write them straight
-    * to parquet via [[winnowPairsWriter]] instead of returning them.
+    * per-doc summary. Kept as the exact reference the anchored build
+    * ([[winnowPairsAnchored]]) is checked against.
     */
   def winnowPairs(s: SparkSession, d: String): DataFrame = {
     val postings = winnowPostings(s, d)
@@ -177,8 +177,8 @@ object TextAnalysis {
     * member is reported, its max_shared is exact, and its exemplars
     * are real partners. What the cap sacrifices is only the O(m²)
     * interior of an m-member family (partner LISTS saturate around
-    * the anchors), which is exactly the mass [[winnowPairsWriter]]
-    * exists to serve.
+    * the anchors), which only the full listing ([[winnowPairs]])
+    * carries.
     *
     * Scale: candidate rows per fingerprint drop from df² to C·df, so
     * the whole build is Σ C·df = C·|postings| — linear in the corpus
@@ -203,21 +203,6 @@ object TextAnalysis {
       .filter(col("shared_fps") >= 5)
   }
 
-  /** Opt-in full pair listing, written directly executor→parquet so
-    * the corpus-shaped result never flows back through the driver's
-    * consumer. Returns the output row count. Releases only the frames
-    * it persisted itself (scoped mark/releaseSince) — a global
-    * releaseAll here would evict a calling pipeline's own persisted
-    * intermediates mid-flight.
-    */
-  def winnowPairsWriter(s: SparkSession, d: String, out: String): Long = {
-    val m = graft.CacheScope.mark()
-    try {
-      winnowPairs(s, d).write.mode("overwrite").parquet(out)
-      s.read.parquet(out).count()
-    } finally graft.CacheScope.releaseSince(m)
-  }
-
   /** Rolling-hash near-duplicate detection (winnowing / MOSS), bounded
     * default surface: the anchored pair build ([[winnowPairsAnchored]]
     * — identical to [[winnowPairs]] at driver SFs, linear above them)
@@ -226,8 +211,8 @@ object TextAnalysis {
     * grows with the corpus's duplicate-family mass (measured 46,000×
     * at 25× data — the scaled corpus's families, not a plan defect),
     * so the default query bounds BOTH its output (O(docs) rows) and
-    * its compute (anchor-capped candidates); the complete listing is
-    * an explicit parquet sink ([[winnowPairsWriter]]).
+    * its compute (anchor-capped candidates); the complete listing
+    * stays off the query surface.
     *
     * Exemplars come from the bounded [[graft.functions.TopKPairsAgg]]
     * (O(k) buffer, map-side combinable) rather than a per-doc window —

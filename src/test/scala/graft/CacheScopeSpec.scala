@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The cache-hygiene contract: every persist/localCheckpoint a query
@@ -35,28 +34,6 @@ class CacheScopeSpec extends AnyFunSuite {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(after.subsetOf(before),
       s"leaked blocks survived releaseAll: ${after.diff(before)}")
-  }
-
-  test("releaseSince frees only frames persisted after the mark") {
-    import spark.implicits._
-    CacheScope.releaseAll()
-    val outer = CacheScope.persisted(
-      Seq(1, 2, 3).toDF("x").select(col("x") * 2 as "y"))
-    outer.count()
-    val m = CacheScope.mark()
-    val inner = CacheScope.persisted(
-      Seq(4, 5, 6).toDF("x").select(col("x") * 3 as "y"))
-    inner.count()
-    assert(inner.storageLevel.useMemory, "inner not cached before release")
-    CacheScope.releaseSince(m)
-    assert(!inner.storageLevel.useMemory,
-      "scoped release must free the post-mark frame")
-    assert(outer.storageLevel.useMemory,
-      "scoped release evicted the caller's pre-mark frame")
-    // the pre-mark frame is still tracked: a later global release
-    // frees it
-    CacheScope.releaseAll()
-    assert(!outer.storageLevel.useMemory)
   }
 
   test("q67 conf window never mutates the caller's session") {

@@ -281,20 +281,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("winnowPairsWriter round-trips the full listing through parquet") {
-    import spark.implicits._
-    withTempDir("graft-winnow") { tmp =>
-      val out = tmp.toString
-      val n = operators.TextAnalysis.winnowPairsWriter(spark, sfDir, out)
-      val back = spark.read.parquet(out)
-        .as[(Long, Long, Long)].collect().toSet
-      val want = operators.TextAnalysis.winnowPairs(spark, sfDir)
-        .as[(Long, Long, Long)].collect().toSet
-      CacheScope.releaseAll()
-      assert(n == want.size.toLong && back == want)
-    }
-  }
-
   test("d02 verified pairs are a subset of brute-force shingle-Jaccard truth") {
     import graft.functions.TextHashFunctions.{word_shingles, array_jaccard}
     import spark.implicits._

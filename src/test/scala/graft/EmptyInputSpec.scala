@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * empty (or degenerate-aggregate) result — never throw — when its
   * input tables have zero rows. This pins the edge paths: d05's
   * dim-scan fallback, d13's count-derived modulus, d10's cap count,
-  * s03's empty centroid set, q69's empty user universe.
+  * the IVF index's empty centroid set, q69's empty user universe.
   */
 // @Slow: excluded from the driver fast lane (`sbt test`; see
 // build.sbt) — all-queries empty-input sweep (~1 min); run with the full suite: `sbt "testOnly *"`

@@ -1,6 +1,5 @@
 package graft
 
-import graft.TestDirs.withTempDir
 import graft.operators.Multimodal
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -144,38 +143,6 @@ class MultimodalSpec extends AnyFunSuite {
     // group plumbing (real collisions are spec'd above)
     assert(rows.length == 500)
     assert(rows.forall(_.getAs[Long]("n_media") == 1L))
-  }
-
-  test("binaryFile media dir reads payloads + metadata, prunes non-media") {
-    withTempDir("graft-media") { tmp =>
-      val dir = tmp.toPath
-      def put(name: String, bytes: Array[Byte]): Unit =
-        java.nio.file.Files.write(dir.resolve(name), bytes)
-      put("7_64x48x4.jpeg", Array.tabulate(96)(_.toByte))
-      put("12_320x240x1.png", Array.tabulate(128)(i => (i * 3).toByte))
-      put("5_30x20x2.JPG", Array.tabulate(32)(_.toByte)) // real-world spelling
-      put("README.txt", "not media".getBytes("UTF-8")) // must be pruned
-      // nested under a date prefix, like an object store lays media out
-      java.nio.file.Files.createDirectories(dir.resolve("2024/01"))
-      java.nio.file.Files.write(dir.resolve("2024/01/9_100x80x8.webm"),
-        Array.tabulate(64)(i => (i ^ 7).toByte))
-      val m = Multimodal.readMediaDir(spark, dir.toString)
-      val rows = m.collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
-      assert(rows.keySet == Set(7L, 12L, 9L, 5L))
-      assert(rows(5L).getAs[String]("format") == "jpeg") // .JPG normalized
-      val r7 = rows(7L)
-      assert(r7.getAs[String]("format") == "jpeg")
-      assert(r7.getAs[Int]("width") == 64 && r7.getAs[Int]("height") == 48)
-      assert(r7.getAs[Int]("n_frames") == 4)
-      assert(r7.getAs[Array[Byte]]("media").toSeq ==
-        Array.tabulate(96)(_.toByte).toSeq)
-      // the schema matches the synthesized corpus, so the whole decode
-      // pipeline runs unchanged over real files
-      val feats = Multimodal.decodeFeatures(m).collect()
-      assert(feats.length == 4)
-      assert(feats.forall(
-        _.getAs[scala.collection.Seq[Float]]("features").length == 8))
-    }
   }
 
   test("m06 content-fp groups agree with d01's exact-text groups") {
